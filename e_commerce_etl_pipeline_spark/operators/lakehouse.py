@@ -97,9 +97,10 @@ def merge_matched_condition(
 ) -> str:
     """The WHEN MATCHED guard as a SQL boolean expression over the
     given target/source alias strings (already-rendered prefixes —
-    quoted table names for engines without UPDATE aliases). Mirrors
-    resolve_upsert's ``update_applies``: stale target, or same version
-    with a changed guard column."""
+    quoted table names for engines without UPDATE aliases): stale
+    target, or same version with a changed guard column. The one
+    definition of the guard — ``resolve_upsert`` renders its update rule
+    from it too."""
     oc = dialect.q(order_col)
     stale = f"{tgt}.{oc} IS NULL OR {tgt}.{oc} < {src}.{oc}"
     if not guard_cols:

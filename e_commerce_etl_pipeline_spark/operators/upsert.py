@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from . import fsops, index_store
 from .dedup import drop_null_keys, keep_newest
+from .lakehouse import SPARK_DIALECT, merge_matched_condition
 
 ETL_COLS = ("etl_batch_id", "etl_created_at", "etl_updated_at", "etl_source")
 
@@ -94,14 +95,6 @@ def write_table(
     index_store.invalidate(table_path, spark)
 
 
-def _any_guard_changed(guard_cols: Sequence[str]) -> Column:
-    """OR of null-safe inequality over guard columns (t.<=>s negated)."""
-    cond = F.lit(False)
-    for g in guard_cols:
-        cond = cond | ~F.col(f"t.{g}").eqNullSafe(F.col(f"s.{g}"))
-    return cond
-
-
 def resolve_upsert(
     target: DataFrame,
     source: DataFrame,
@@ -132,55 +125,103 @@ def resolve_upsert(
     Batches with a genuinely total (key, order) order don't need it;
     pytest's property suite (test_upsert_property.py) exercises the
     ambiguous case with it set.
+
+    The join condition and the per-column projection are SQL text, so
+    the driver hands Catalyst one plan in a handful of calls instead of
+    building one Column per sub-expression.
     """
     cols = target.columns
     source = keep_newest(source, keys, order_col, tiebreak)
     if drop_null_key_rows:
         source = drop_null_keys(source, keys)
 
-    t = target.alias("t")
-    s = source.alias("s")
-    on = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys]
-    cond = on[0]
-    for c in on[1:]:
-        cond = cond & c
+    q = SPARK_DIALECT.q
+    on = " AND ".join(f"t.{q(k)} <=> s.{q(k)}" for k in keys)
+    joined = target.alias("t").join(source.alias("s"), F.expr(on), "full_outer")
+    if "etl_updated_at" in cols:
+        # match the column's type (MISA/Shopee stamp +07 timestamp_ntz)
+        stamp = F.current_timestamp() if batch_time is None else batch_time
+        joined = joined.withColumn(
+            "__batch_time", stamp.cast(target.schema["etl_updated_at"].dataType)
+        )
 
-    joined = t.join(s, cond, "full_outer")
-
-    t_exists = F.col(f"t.{keys[0]}").isNotNull()
-    s_exists = F.col(f"s.{keys[0]}").isNotNull()
-    stale = F.col(f"t.{order_col}").isNull() | (
-        F.col(f"t.{order_col}") < F.col(f"s.{order_col}")
-    )
+    t_exists = f"t.{q(keys[0])} IS NOT NULL"
+    s_exists = f"s.{q(keys[0])} IS NOT NULL"
     # The reference's OR-guard ("update_time newer OR status/tracking
     # changed", tiktok_shop_staging_loader.py:382-404) constrained by the
     # replay invariant (FIXTURES.md §5.4: an older record never overwrites
     # a newer one): the changed-columns guard only fires when the source is
     # not older — i.e. equal order_col but different guard values.
-    same_version = F.col(f"t.{order_col}").eqNullSafe(F.col(f"s.{order_col}"))
-    update_applies = s_exists & t_exists & (
-        stale | (same_version & _any_guard_changed(guard_cols))
-    )
-    take_source = (~t_exists & s_exists) | update_applies
-
-    if batch_time is None:
-        batch_time = F.current_timestamp()
+    guard = merge_matched_condition(order_col, guard_cols, tgt="t", src="s")
+    update_applies = f"{s_exists} AND {t_exists} AND ({guard})"
+    take_source = f"(t.{q(keys[0])} IS NULL AND {s_exists}) OR ({update_applies})"
 
     out_cols = []
     for c in cols:
-        src = F.col(f"s.{c}")
-        tgt = F.col(f"t.{c}")
+        src, tgt = f"s.{q(c)}", f"t.{q(c)}"
         if c == "etl_created_at":
             # insert: source's; update: target's original creation time
-            expr = F.when(t_exists, tgt).otherwise(src)
+            expr = f"CASE WHEN {t_exists} THEN {tgt} ELSE {src} END"
         elif c == "etl_updated_at":
-            # match the column's type (MISA/Shopee stamp +07 timestamp_ntz)
-            bumped = batch_time.cast(target.schema[c].dataType)
-            expr = F.when(update_applies, bumped).when(take_source, src).otherwise(tgt)
+            expr = (f"CASE WHEN {update_applies} THEN __batch_time "
+                    f"WHEN {take_source} THEN {src} ELSE {tgt} END")
         else:
-            expr = F.when(take_source, src).otherwise(tgt)
-        out_cols.append(expr.alias(c))
-    return joined.select(*out_cols)
+            expr = f"CASE WHEN {take_source} THEN {src} ELSE {tgt} END"
+        out_cols.append(f"{expr} AS {q(c)}")
+    return joined.selectExpr(*out_cols)
+
+
+def _read_buckets(
+    spark: SparkSession, table_path: str, buckets: Sequence[int]
+) -> DataFrame | None:
+    """The table's rows in ``buckets``, listing only those directories.
+
+    ``spark.read.parquet(table_path)`` lists every bucket directory before
+    the bucket filter prunes anything, and past Spark's 32-path threshold
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) that
+    listing is a distributed job of one task per directory. Naming the
+    bucket directories that exist, with ``basePath`` for partition
+    discovery, lists only them — on the driver for up to 32. When none
+    of ``buckets`` exists yet, one other directory supplies the schema
+    and the filter reads nothing from it. None when the table has no
+    bucket directory at all (a full load of zero rows)."""
+    existing = {d for d in fsops.list_child_names(table_path, spark)
+                if d.startswith("__bucket=")}
+    if not existing:
+        return None
+    dirs = [d for d in (f"__bucket={b}" for b in buckets) if d in existing]
+    paths = [f"{table_path}/{d}" for d in dirs or [min(existing)]]
+    return (
+        spark.read.option("basePath", table_path).parquet(*paths)
+        .filter(F.col("__bucket").isin(list(buckets)))
+    )
+
+
+def _overwrite_buckets(spark: SparkSession, df: DataFrame, table_path: str) -> None:
+    """Replace the bucket partitions ``df`` has rows for, in one write job;
+    every other bucket keeps its files byte-identical.
+
+    ``df`` may read the very buckets it replaces. Dynamic partition
+    overwrite stages the job's output under
+    ``table_path/.spark-staging-<job id>`` and swaps partitions only at
+    job commit: after every task — and so every read of the old files —
+    has finished, it deletes each written bucket directory and renames
+    the staged one into place. A job that fails aborts before the swap,
+    discards the staging directory and leaves the table as it was; a
+    replay of the batch then converges (ST3)."""
+    with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+    try:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        df.write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_dyn)
+    # The rewrite replaced files under paths the session may hold cached
+    # listings for (FileStatusCache has no TTL by default) — invalidate,
+    # or the next read of an overwritten bucket hits FILE_NOT_EXIST.
+    spark.catalog.refreshByPath(table_path)
+    # Dynamic partition overwrite leaves sibling dirs (incl. _index)
+    # intact — stale derived artifacts must be dropped explicitly.
+    index_store.invalidate(table_path, spark)
 
 
 def upsert(
@@ -197,10 +238,11 @@ def upsert(
     """Apply a guarded keyed upsert batch to a parquet table at ``table_path``.
 
     The table is stored hash-bucketed on the key (``bucket=pmod(hash(keys),
-    num_buckets)`` as a partition column). Only buckets containing batch
-    keys are read + rewritten (partition pruning on the bucket filter), so
-    per-batch work scales with batch size, not table size. At 100 TB a
-    second partition level (e.g. etl_date) would bound file counts further.
+    num_buckets)`` as a partition column). Only the directories of buckets
+    containing batch keys are listed, read and rewritten, in one write
+    job, so per-batch work scales with batch size, not table size. At
+    100 TB a second partition level (e.g. etl_date) would bound file
+    counts further.
     """
     if not fsops.exists(table_path, spark):
         write_table(spark, source, table_path, keys, order_col, num_buckets,
@@ -212,36 +254,15 @@ def upsert(
     source_b = source.withColumn("__bucket", _bucket_expr(keys, num_buckets))
 
     touched = [r["__bucket"] for r in source_b.select("__bucket").distinct().collect()]
-    target = spark.read.parquet(table_path).filter(F.col("__bucket").isin(touched))
+    target = _read_buckets(spark, table_path, touched)
+    if target is None:
+        write_table(spark, source, table_path, keys, order_col, num_buckets,
+                    drop_null_key_rows, tiebreak)
+        return
     resolved = resolve_upsert(target, source_b, keys, order_col, guard_cols,
                               drop_null_key_rows=drop_null_key_rows,
                               tiebreak=tiebreak)
-
-    # Rewrite only the touched bucket partitions (dynamic partition overwrite).
-    # ``resolved`` reads from table_path, so it cannot overwrite table_path
-    # in-place within one job. Eager localCheckpoint materializes the
-    # resolved buckets to executor storage (memory, spilling to local disk)
-    # and truncates lineage, so the subsequent write no longer depends on
-    # the files it replaces — touched-bucket bytes hit the table exactly
-    # once, instead of the old stage-to-temp-parquet round-trip that wrote
-    # them twice (r4 finding #2). On a real cluster an executor loss during
-    # the write re-runs the whole upsert (checkpoint blocks are not
-    # replicated); the operation is idempotent by construction (ST3), so
-    # retry-at-the-orchestrator is the intended recovery path.
-    resolved = resolved.localCheckpoint(eager=True)
-    with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        resolved.write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_dyn)
-    # The rewrite replaced files under paths the session may hold cached
-    # listings for (FileStatusCache has no TTL by default) — invalidate,
-    # or the next read of an overwritten bucket hits FILE_NOT_EXIST.
-    spark.catalog.refreshByPath(table_path)
-    # Dynamic partition overwrite leaves sibling dirs (incl. _index)
-    # intact — stale derived artifacts must be dropped explicitly.
-    index_store.invalidate(table_path, spark)
+    _overwrite_buckets(spark, resolved, table_path)
 
 
 def read_upsert_table(spark: SparkSession, table_path: str) -> DataFrame:
@@ -280,29 +301,10 @@ def compact_buckets(
     if not bloated:
         return bloated
 
-    target = spark.read.parquet(table_path).filter(F.col("__bucket").isin(bloated))
-    # Same single-write pattern as upsert(): eager localCheckpoint breaks
-    # the read-from-table_path dependency so dynamic overwrite is safe
-    # without a second parquet write of the compacted buckets.
-    compacted = target.repartition("__bucket").localCheckpoint(eager=True)
-    with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            compacted.write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(table_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", with_dyn)
-    # The rewrite replaced files under paths the session may hold cached
-    # listings for (FileStatusCache has no TTL by default) — invalidate,
-    # or the next read of an overwritten bucket hits FILE_NOT_EXIST.
-    spark.catalog.refreshByPath(table_path)
-    # Compaction preserves rows but changes the file listing, so every
-    # fingerprint-keyed artifact would rebuild on next use anyway; drop
-    # the now-unreachable generations rather than leaving them on disk.
-    index_store.invalidate(table_path, spark)
+    # One job reads the bloated buckets and writes their replacements;
+    # _overwrite_buckets' commit-time swap makes that safe.
+    target = _read_buckets(spark, table_path, bloated)
+    _overwrite_buckets(spark, target.repartition("__bucket"), table_path)
     return bloated
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.local_rows import local_rows
 from ..operators.upsert import stamp_etl_metadata, upsert, write_table
 
 AUDIT_SCHEMA = T.StructType([
@@ -68,8 +69,8 @@ class RunAudit:
         if base["started_at"] is not None and base["finished_at"] is not None:
             base["duration_s"] = float(base["finished_at"] - base["started_at"])
             base["over_budget"] = base["duration_s"] > self.budget_s
-        df = self.spark.createDataFrame([tuple(base[f.name] for f in AUDIT_SCHEMA.fields)],
-                                        AUDIT_SCHEMA)
+        df = local_rows(self.spark, [tuple(base[f.name] for f in AUDIT_SCHEMA.fields)],
+                        AUDIT_SCHEMA)
         df.write.mode("append").parquet(self.path)
 
     def runs(self) -> DataFrame:

@@ -21,6 +21,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
+from ..operators.local_rows import local_rows
 from ..operators.upsert import read_upsert_table, upsert
 
 
@@ -99,7 +100,7 @@ class TokenStore:
                state.get("refresh_token"),
                state.get("expires_at"),
                state.get("refreshed_at", int(time.time())))
-        df = self.spark.createDataFrame([row], self.SCHEMA)
+        df = local_rows(self.spark, [row], self.SCHEMA)
         upsert(self.spark, df, self.path, keys=["platform"],
                order_col="refreshed_at", num_buckets=1)
 

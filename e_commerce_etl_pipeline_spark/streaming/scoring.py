@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.local_rows import local_rows
+
 # OOV token share past which a batch flags retrain_due. 0.5 = the
 # majority of incoming tokens score the uninformative prior — the
 # model's verdicts on such batches are closer to coin flips than to
@@ -110,7 +112,8 @@ def quality_score_stream(
             F.sum("n_words").alias("tokens"),
         ).collect()[0]
         oov_frac = stats["oov_tokens"] / stats["tokens"]
-        audit = spark.createDataFrame(
+        audit = local_rows(
+            spark,
             [(
                 stats["n_docs"],
                 stats["n_keep"] / stats["n_docs"],

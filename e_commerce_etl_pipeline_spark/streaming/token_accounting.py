@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.local_rows import local_rows
+
 # Unseen-word share past which a batch flags retrain_due: above this,
 # the tokenizer is char-splitting so much of the stream that its
 # compression (and any token-budget math downstream) no longer reflects
@@ -128,7 +130,8 @@ def bpe_token_stream(
         # one bad batch. Audit it as an explicit zero-token row instead.
         words = stats["words"] or 0
         unseen_frac = (stats["unseen"] or 0) / words if words else 0.0
-        audit = spark.createDataFrame(
+        audit = local_rows(
+            spark,
             [(
                 stats["n_docs"],
                 int(stats["tokens_bpe"] or 0),

@@ -6,8 +6,11 @@ operational budget/alert analog (config/production.py:24,38,40).
 from __future__ import annotations
 
 import pytest
+from pyspark.sql.types import StructType
 
+from e_commerce_etl_pipeline_spark.operators.upsert import read_upsert_table
 from e_commerce_etl_pipeline_spark.pipelines import RunAudit
+from e_commerce_etl_pipeline_spark.pipelines.etl import AUDIT_SCHEMA
 from e_commerce_etl_pipeline_spark.sources import TokenCache
 from e_commerce_etl_pipeline_spark.sources.auth import TokenStore
 
@@ -89,3 +92,50 @@ def test_token_store_quoted_platform_name(spark, tmp_path):
     store.persist("plain", {"access_token": "p1", "expires_at": 9, "refreshed_at": 1})
     assert store.load(weird)["access_token"] == "w1"
     assert store.load("plain")["access_token"] == "p1"
+
+
+def _spy_frames(monkeypatch, spark):
+    made = []
+    real = spark.createDataFrame
+
+    def spy(*a, **k):
+        df = real(*a, **k)
+        made.append(df)
+        return df
+
+    monkeypatch.setattr(spark, "createDataFrame", spy)
+    return made
+
+
+def _plan_node(df):
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def test_control_rows_are_local_relations(spark, tmp_path, monkeypatch):
+    """The audit row and the token row are planned as a LocalRelation —
+    no pickled Python RDD, so writing them starts no Python worker — with
+    the tables' schemas and values, NULL columns included, unchanged."""
+    made = _spy_frames(monkeypatch, spark)
+    audit = RunAudit(spark, str(tmp_path / "runs"), budget_s=10.0)
+    audit.record({"batch_id": "b1", "source_name": "tiktok", "status": "SUCCESS",
+                  "records_loaded": 5, "started_at": 1.0, "finished_at": 2.5})
+    assert [_plan_node(df) for df in made] == ["LocalRelation"]
+    assert made[0].schema == AUDIT_SCHEMA
+    assert audit.runs().schema == AUDIT_SCHEMA
+    assert [r.asDict() for r in audit.runs().collect()] == [{
+        "batch_id": "b1", "source_name": "tiktok", "status": "SUCCESS",
+        "records_extracted": None, "records_loaded": 5, "started_at": 1.0,
+        "finished_at": 2.5, "error": None, "duration_s": 1.5,
+        "over_budget": False, "fence_dropped_rows": None, "method": None,
+        "recall": None,
+    }]
+
+    made.clear()
+    store = TokenStore(spark, str(tmp_path / "tokens"))
+    store.persist("tiktok", {"access_token": "a1", "refreshed_at": 7})
+    assert [_plan_node(df) for df in made] == ["LocalRelation"]
+    assert made[0].schema == StructType.fromDDL(TokenStore.SCHEMA)
+    assert [r.asDict() for r in read_upsert_table(spark, store.path).collect()] == [{
+        "platform": "tiktok", "access_token": "a1", "refresh_token": None,
+        "expires_at": None, "refreshed_at": 7,
+    }]
