@@ -93,7 +93,6 @@ that discipline applied to the cluster index.
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -133,9 +132,8 @@ def _tabled_all(df: DataFrame, is_new: bool, bits: int) -> DataFrame:
 
 
 def _new_member_edges(
-    spark: SparkSession, sf_dir: str, batch_corpus: DataFrame, bits: int,
-    batch_keyed: DataFrame | None = None,
-    batch_id_set: set[int] | None = None,
+    spark: SparkSession, sf_dir: str, batch_corpus: DataFrame,
+    batch_keyed: DataFrame, batch_id_set: set[int],
 ) -> DataFrame:
     """Pass-1 increment: cosine-verified chain edges involving >=1
     batch vector, over ONLY the (table, bucket) pairs the batch
@@ -151,31 +149,23 @@ def _new_member_edges(
     untouched families, turning the stage-2 touched-family scope into
     nearly the whole corpus (measured 40-74 s/batch instead of
     seconds)."""
-    # ``batch_keyed``: the caller's already-materialized keyed batch
-    # frame (r13) — the synthesis subtree (limit scan + twin build +
-    # 4-table explode + signature when-chains) used to be re-derived
-    # here AND twice more in stage 2; one localCheckpoint upstream
-    # serves every consumer.
-    nt = batch_keyed if batch_keyed is not None else S.with_chain_keys(
-        _tabled_all(batch_corpus, True, bits)
-    ).drop("__new")
+    # ``batch_keyed``: the caller's materialized keyed batch frame
+    # (twin build + 4-table explode + signature when-chains), one
+    # localCheckpoint shared with stage 2's two consumers (r13).
     # affected buckets: a batch is small relative to the corpus, so the
     # base-side filter over the PERSISTED keyed corpus never re-scans
-    # wide data per batch. Caller contract: ``bits`` equals the cached
-    # frame's tier — the stream refuses on a tier change before calling.
-    # Micro-batch route (r13): the touched (t, bucket) list is bounded
-    # by N_TABLES·|batch corpus| and nt is already materialized, so one
-    # tiny collect turns the filter into per-table IN lists — the same
-    # ≤1024-value pushdown convention as the nd_store readers — instead
-    # of a distinct-aggregate + broadcast-exchange stage pair per
-    # invocation. Backfill batches keep the broadcast semi-join.
+    # wide data per batch. Caller contract: the keyed batch's tier equals
+    # the cached frame's tier — the stream refuses on a tier change
+    # before calling. Micro-batch route (r13): the touched (t, bucket)
+    # list is bounded by N_TABLES·|batch corpus| and batch_keyed is
+    # already materialized, so one tiny collect turns the filter into
+    # per-table IN lists — the same ≤1024-value pushdown convention as
+    # the nd_store readers — instead of a distinct-aggregate +
+    # broadcast-exchange stage pair per invocation. Backfill batches
+    # keep the broadcast semi-join.
     bt = None
-    if (
-        batch_keyed is not None  # nt materialized -> collect is trivial
-        and batch_id_set is not None
-        and len(batch_id_set) <= 512
-    ):
-        tb = nt.select("t", "bucket").collect()
+    if len(batch_id_set) <= 512:
+        tb = batch_keyed.select("t", "bucket").collect()
         by_t: dict[int, set] = {}
         for r in tb:
             by_t.setdefault(r[0], set()).add(r[1])
@@ -188,15 +178,15 @@ def _new_member_edges(
                 )
             bt = S.nd_keyed_corpus(spark, sf_dir).filter(cond)
     if bt is None:
-        touched = nt.select("t", "bucket").distinct()
+        touched = batch_keyed.select("t", "bucket").distinct()
         bt = S.nd_keyed_corpus(spark, sf_dir).join(
             F.broadcast(touched), ["t", "bucket"], "left_semi"
         )
-    members = bt.unionByName(nt)
+    members = bt.unionByName(batch_keyed)
     edges = S.chain_edges_arrow(
         members, ["t", "bucket"], S.NEAR_DUP_CHAIN_W, S.NEAR_DUP_COS
     )
-    if batch_id_set is not None and len(batch_id_set) <= 1024:
+    if len(batch_id_set) <= 1024:
         # the batch id set is already on the caller's driver (the same
         # bounded set _grow_assignment gets): an IN filter on the narrow
         # edge list replaces two broadcast-mark joins whose build sides
@@ -572,21 +562,12 @@ def incremental_near_dup_update(
     # corpus| rows serves all three (r13; distinct from the r12
     # negative result, which round-tripped the batch through
     # collect+createDataFrame — this stays distributed, one tiny job).
-    # SPARK_GRAFT_IC_LEGACY=1 restores the r12 shape for paired A/B.
-    _legacy = os.environ.get("SPARK_GRAFT_IC_LEGACY") == "1"
-    if _legacy:
-        batch_keyed = None
-        new_edges = _new_member_edges(
-            spark, sf_dir, batch_corpus, bits
-        ).localCheckpoint()
-    else:
-        batch_keyed = S.with_chain_keys(
-            _tabled_all(batch_corpus, True, bits)
-        ).drop("__new").localCheckpoint()
-        new_edges = _new_member_edges(
-            spark, sf_dir, batch_corpus, bits,
-            batch_keyed=batch_keyed, batch_id_set=batch_id_set,
-        ).localCheckpoint()
+    batch_keyed = S.with_chain_keys(
+        _tabled_all(batch_corpus, True, bits)
+    ).drop("__new").localCheckpoint()
+    new_edges = _new_member_edges(
+        spark, sf_dir, batch_corpus, batch_keyed, batch_id_set
+    ).localCheckpoint()
     LAST_TIMINGS["p1_edges"] = time.time() - _t
     _t = time.time()
     if prior_p1 is None:
@@ -654,10 +635,6 @@ def incremental_near_dup_update(
     else:
         touched_members = _touched_family_members(prior_p1, touched_old)
     keyed = S.nd_keyed_corpus(spark, sf_dir)
-    if batch_keyed is None:  # legacy A/B path: re-derive per consumer
-        batch_keyed = S.with_chain_keys(
-            _tabled_all(batch_corpus, True, bits)
-        ).drop("__new")
     affected = (
         keyed.join(F.broadcast(touched_members), "vec_id", "left_semi")
         .select("t", "bucket")
@@ -681,25 +658,18 @@ def incremental_near_dup_update(
     keyed_fam = aff_keyed.join(
         p1_grown.withColumnRenamed("canonical_id", "__fam"), "vec_id", "left"
     ).withColumn("__fam", F.coalesce(F.col("__fam"), F.col("vec_id")))
-    if _legacy:
-        p2_edges = S.chain_edges_arrow(
-            S.p2_boundary_rows(keyed_fam), ["t", "bucket"],
-            S.NEAR_DUP_P2_W, S.NEAR_DUP_COS,
-        )
-    else:
-        # ONE exchange for the whole boundary+kernel subtree (r13,
-        # guide §2.4): hash-partitioning on (t, bucket) satisfies the
-        # boundary windows' (t, bucket, __fam) clustering — a strict
-        # subset of the window keys — so repartitioning FIRST lets both
-        # windows and the chain kernel ride the same exchange; the
-        # kernel then only re-sorts within partitions
-        # (pre_partitioned=True) instead of shuffling the boundary rows
-        # a second time.
-        keyed_fam = keyed_fam.repartition(F.col("t"), F.col("bucket"))
-        p2_edges = S.chain_edges_arrow(
-            S.p2_boundary_rows(keyed_fam), ["t", "bucket"],
-            S.NEAR_DUP_P2_W, S.NEAR_DUP_COS, pre_partitioned=True,
-        )
+    # ONE exchange for the whole boundary+kernel subtree (r13, guide
+    # §2.4): hash-partitioning on (t, bucket) satisfies the boundary
+    # windows' (t, bucket, __fam) clustering — a strict subset of the
+    # window keys — so repartitioning FIRST lets both windows and the
+    # chain kernel ride the same exchange; the kernel then only re-sorts
+    # within partitions (pre_partitioned=True) instead of shuffling the
+    # boundary rows a second time.
+    keyed_fam = keyed_fam.repartition(F.col("t"), F.col("bucket"))
+    p2_edges = S.chain_edges_arrow(
+        S.p2_boundary_rows(keyed_fam), ["t", "bucket"],
+        S.NEAR_DUP_P2_W, S.NEAR_DUP_COS, pre_partitioned=True,
+    )
     # materialized HERE so the stage timings tell the truth: this is
     # where the boundary windows + wide kernel actually run
     all_edges = new_edges.unionByName(p2_edges).localCheckpoint()
@@ -782,97 +752,64 @@ def near_dup_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_bids = [i + max_id + 1 for i in seed_ids]
     bids = base_bids + [i + S.TWIN_OFFSET for i in base_bids]
     j = prior.join(updated, "vec_id", "left")
-    if os.environ.get("SPARK_GRAFT_IC_LEGACY") == "1":
-        batch_cov = updated.filter(F.col("vec_id").isin(*bids)).agg(
-            (F.lit(len(bids)).cast("long") - F.count("*")).alias("__bm")
-        )
-        upd_stats = updated.agg(
-            F.count("*").alias("n_assigned")
-        ).crossJoin(batch_cov)
-        prior_cov = j.agg(
-            F.count("*").alias("n_prior"),
-            F.coalesce(
-                F.sum(F.col("canonical_id").isNull().cast("long")), F.lit(0)
-            ).alias("__pm"),
-        )
-        splits = (
-            j.groupBy("prior_cid")
-            .agg(F.count_distinct("canonical_id").alias("n_new"))
-            .filter(F.col("n_new") > 1)
-        )
-        prior_stats = prior_cov.crossJoin(
-            splits.agg(F.count("*").alias("prior_splits"))
-        )
-        pairs = (
-            batch.select("vec_id", "__src_id")
-            .join(updated, "vec_id")
-            .join(
-                updated.select(
-                    F.col("vec_id").alias("__src_id"),
-                    F.col("canonical_id").alias("src_cid"),
-                ),
-                "__src_id",
+    # total count + batch coverage in ONE pass over the checkpointed
+    # assignment (r13): the former pair of aggregates scanned
+    # `updated` twice; an IN-indicator sum equals the filtered
+    # count(*) exactly
+    upd_stats = updated.agg(
+        F.count("*").alias("n_assigned"),
+        (
+            F.lit(len(bids)).cast("long")
+            - F.coalesce(
+                F.sum(F.col("vec_id").isin(*bids).cast("long")),
+                F.lit(0),
             )
+        ).alias("__bm"),
+    )
+    # coverage + merge-monotonicity in ONE pass over j (r13):
+    # Catalyst shares no diamond subplans, so the former plain agg
+    # (coverage) and groupBy agg (splits) each re-ran the
+    # prior ⋈ updated join. Per-prior_cid partials carry all three
+    # numbers: group row count (Σ = n_prior — updated is one row
+    # per vec_id, exactly as the former count(*) saw), NULL-match
+    # count (Σ = coverage misses), and the distinct grown-canonical
+    # count (count_distinct ignores the NULLs unmatched rows carry,
+    # so groups match the former inner-join groups exactly; >1 =
+    # a split cluster).
+    per_cid = j.groupBy("prior_cid").agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.sum(F.col("canonical_id").isNull().cast("long")).alias("__nn"),
+        F.count_distinct("canonical_id").alias("__ndist"),
+    )
+    prior_stats = per_cid.agg(
+        F.coalesce(F.sum("__n"), F.lit(0)).cast("long").alias("n_prior"),
+        F.coalesce(F.sum("__nn"), F.lit(0)).cast("long").alias("__pm"),
+        F.coalesce(
+            F.sum((F.col("__ndist") > 1).cast("long")), F.lit(0)
+        ).cast("long").alias("prior_splits"),
+    )
+    # each batch vector co-clusters with its scaled source: the
+    # batch→source id mapping is ARITHMETIC (bid = src + max_id + 1,
+    # both driver-held), so it is read off the checkpointed
+    # assignment directly instead of re-deriving the batch subtree
+    # and paying a third join (r13, guide §2.4). Inner-join
+    # semantics match: a batch id missing from `updated` was
+    # dropped by the former join too (and is already counted in
+    # __bm).
+    pairs = (
+        updated.filter(F.col("vec_id").isin(*base_bids))
+        .select(
+            "canonical_id",
+            (F.col("vec_id") - F.lit(max_id + 1)).alias("__src_id"),
         )
-    else:
-        # total count + batch coverage in ONE pass over the checkpointed
-        # assignment (r13): the former pair of aggregates scanned
-        # `updated` twice; an IN-indicator sum equals the filtered
-        # count(*) exactly
-        upd_stats = updated.agg(
-            F.count("*").alias("n_assigned"),
-            (
-                F.lit(len(bids)).cast("long")
-                - F.coalesce(
-                    F.sum(F.col("vec_id").isin(*bids).cast("long")),
-                    F.lit(0),
-                )
-            ).alias("__bm"),
+        .join(
+            updated.select(
+                F.col("vec_id").alias("__src_id"),
+                F.col("canonical_id").alias("src_cid"),
+            ),
+            "__src_id",
         )
-        # coverage + merge-monotonicity in ONE pass over j (r13):
-        # Catalyst shares no diamond subplans, so the former plain agg
-        # (coverage) and groupBy agg (splits) each re-ran the
-        # prior ⋈ updated join. Per-prior_cid partials carry all three
-        # numbers: group row count (Σ = n_prior — updated is one row
-        # per vec_id, exactly as the former count(*) saw), NULL-match
-        # count (Σ = coverage misses), and the distinct grown-canonical
-        # count (count_distinct ignores the NULLs unmatched rows carry,
-        # so groups match the former inner-join groups exactly; >1 =
-        # a split cluster).
-        per_cid = j.groupBy("prior_cid").agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(F.col("canonical_id").isNull().cast("long")).alias("__nn"),
-            F.count_distinct("canonical_id").alias("__ndist"),
-        )
-        prior_stats = per_cid.agg(
-            F.coalesce(F.sum("__n"), F.lit(0)).cast("long").alias("n_prior"),
-            F.coalesce(F.sum("__nn"), F.lit(0)).cast("long").alias("__pm"),
-            F.coalesce(
-                F.sum((F.col("__ndist") > 1).cast("long")), F.lit(0)
-            ).cast("long").alias("prior_splits"),
-        )
-        # each batch vector co-clusters with its scaled source: the
-        # batch→source id mapping is ARITHMETIC (bid = src + max_id + 1,
-        # both driver-held), so it is read off the checkpointed
-        # assignment directly instead of re-deriving the batch subtree
-        # and paying a third join (r13, guide §2.4). Inner-join
-        # semantics match: a batch id missing from `updated` was
-        # dropped by the former join too (and is already counted by
-        # batch_cov).
-        pairs = (
-            updated.filter(F.col("vec_id").isin(*base_bids))
-            .select(
-                "canonical_id",
-                (F.col("vec_id") - F.lit(max_id + 1)).alias("__src_id"),
-            )
-            .join(
-                updated.select(
-                    F.col("vec_id").alias("__src_id"),
-                    F.col("canonical_id").alias("src_cid"),
-                ),
-                "__src_id",
-            )
-        )
+    )
     return (
         upd_stats
         .crossJoin(prior_stats)

@@ -89,36 +89,39 @@ def extract_features(media: DataFrame, codec=_fake_decode) -> DataFrame:
 
     import numpy as np
 
-    def run_np(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pays = pdf["payload"]
-            arrs = [np.frombuffer(p, dtype=np.uint8) for p in pays]
-            k = len(arrs)
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].values,
-                "n_bytes": np.fromiter(
-                    (a.size for a in arrs), dtype=np.int64, count=k),
-                "sum_bytes": np.fromiter(
-                    (int(a.sum()) for a in arrs), dtype=np.int64, count=k),
-                "max_byte": np.fromiter(
-                    (int(a.max()) if a.size else 0 for a in arrs),
-                    dtype=np.int64, count=k),
-            })
+    def np_features(pays: pd.Series) -> dict:
+        arrs = [np.frombuffer(p, dtype=np.uint8) for p in pays]
+        k = len(arrs)
+        return {
+            "n_bytes": np.fromiter(
+                (a.size for a in arrs), dtype=np.int64, count=k),
+            "sum_bytes": np.fromiter(
+                (int(a.sum()) for a in arrs), dtype=np.int64, count=k),
+            "max_byte": np.fromiter(
+                (int(a.max()) if a.size else 0 for a in arrs),
+                dtype=np.int64, count=k),
+        }
+
+    def codec_features(pays: pd.Series) -> dict:
+        feats = [codec(p) for p in pays]
+        return {c: [f[c] for f in feats]
+                for c in ("n_bytes", "sum_bytes", "max_byte")}
+
+    features = np_features if codec is _fake_decode else codec_features
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            feats = [codec(p) for p in pdf["payload"]]
-            out = pd.DataFrame({
-                "doc_id": pdf["doc_id"].values,
-                "n_bytes": [f["n_bytes"] for f in feats],
-                "sum_bytes": [f["sum_bytes"] for f in feats],
-                "max_byte": [f["max_byte"] for f in feats],
-            })
+            # a NULL payload yields NULL features (the SQL form's answer
+            # for a NULL text) instead of failing the whole batch
+            pays = pdf["payload"].dropna()
+            out = pd.DataFrame(
+                features(pays), index=pays.index, dtype="Int64"
+            ).reindex(pdf.index)
+            out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
-    kernel = run_np if codec is _fake_decode else run
     return media.select("doc_id", "payload").mapInPandas(
-        kernel, FEATURE_SCHEMA)
+        run, FEATURE_SCHEMA)
 
 
 RESIZED_SCHEMA = T.StructType([

@@ -1,22 +1,22 @@
-"""Lakehouse MERGE binding: the guarded-upsert contract as an executable
-``MERGE INTO`` for Delta/Iceberg-capable sessions.
+"""The guarded-MERGE contract and its one renderer, plus the lakehouse
+binding that executes it as ``MERGE INTO`` on Delta/Iceberg-capable
+sessions.
 
 The reference's production sink is an actual SQL MERGE (SQL Server,
 misa_crm_loader.py:292-501, tiktok_shop_staging_loader.py:453-468). The
 in-lake replication here is ``operators/upsert.py`` (bucketed parquet +
-``resolve_upsert``); this module closes the remaining parity gap: when the
-session has a v2 catalog that understands row-level MERGE (Delta Lake,
-Iceberg, or Spark's own v2 sources), emit and execute the SAME contract as
-one ``MERGE INTO`` statement and let the table format do copy-on-write /
-merge-on-read — at 100 TB that is strictly better than rewriting touched
-buckets ourselves, because the format maintains file-level statistics and
+``resolve_upsert``); when the session has a v2 catalog that understands
+row-level MERGE (Delta Lake, Iceberg, or Spark's own v2 sources), this
+module emits and executes the SAME contract as one ``MERGE INTO``
+statement and lets the table format do copy-on-write / merge-on-read —
+at 100 TB that is strictly better than rewriting touched buckets
+ourselves, because the format maintains file-level statistics and
 deletion vectors we'd otherwise rebuild.
 
-Contract parity with ``resolve_upsert`` (the single source of truth for
-semantics — its pytest + oracle coverage is what this statement is tested
-against):
+The contract (``resolve_upsert`` is the semantic source of truth; its
+pytest + oracle coverage is what every rendering is tested against):
 
-- match on null-safe key equality (``<=>``), like the full-outer join;
+- match on null-safe key equality, like the full-outer join;
 - UPDATE iff target order_col is NULL, older than source, or ties while
   any guard column differs (null-safely);
 - ``etl_created_at`` keeps the target value on UPDATE (carve-out);
@@ -26,12 +26,18 @@ against):
 - the source is deduped keep-newest per key first (MERGE requires a
   unique source key; the reference dedups pre-MERGE the same way, D1).
 
-Sandbox note: neither delta-spark nor an Iceberg catalog ships in this
-container, so ``lakehouse_upsert`` falls back to the parquet-bucket
-writer when no MERGE-capable catalog is detected. The emitted statement
-is tested two ways without Delta: structurally, and semantically — the
-WHEN-MATCHED predicate is parsed and evaluated by Spark itself over a
-joined frame and must pick exactly the rows ``resolve_upsert`` updates.
+One renderer (``merge_matched_condition`` + ``_merge_parts``) builds
+every SQL form of it, in four dialects that differ only in identifier
+quoting and null-safe equality: Spark (``resolve_upsert``'s update rule
+and ``merge_into_statement``), DuckDB/Postgres and SQLite
+(``warehouse.upsert_statement``, INSERT .. ON CONFLICT) and T-SQL
+(``warehouse.tsql_merge_statement``).
+
+``lakehouse_upsert`` falls back to the parquet-bucket writer when no
+MERGE-capable catalog is detected. Without delta-spark the Spark
+statement is tested structurally and by Spark evaluating its
+WHEN-MATCHED predicate over a joined frame; the same guard executes on
+DuckDB through the warehouse egress.
 """
 
 from __future__ import annotations
@@ -50,18 +56,21 @@ ETL_UPDATED = "etl_updated_at"
 class _Dialect:
     """The two rendering choices that differ between engines executing
     the guarded-MERGE contract: identifier quoting and null-safe
-    equality. One condition builder serves both — the Spark ``MERGE
-    INTO`` emission and the duckdb-executable twin render the SAME
-    logical predicate, so the guard matrix cannot drift between them."""
+    equality. One condition builder serves every target — Spark ``MERGE
+    INTO``, the warehouse ``ON CONFLICT`` upsert and the T-SQL ``MERGE``
+    render the SAME logical predicate, so the guard matrix cannot drift
+    between them. ``nse`` must be two-valued (never UNKNOWN): the guard
+    negates it."""
 
-    def __init__(self, quote: str, nse: str):
-        self._quote = quote
+    def __init__(self, quote: str, nse: str, close: str | None = None):
+        self._open = quote
+        self._close = close or quote
         self._nse = nse  # null-safe-equals template with {a} {b}
 
     def q(self, name: str) -> str:
-        return self._quote + name.replace(
-            self._quote, self._quote * 2
-        ) + self._quote
+        return self._open + name.replace(
+            self._close, self._close * 2
+        ) + self._close
 
     def q_table(self, name: str) -> str:
         """Quote a possibly multi-part table name (catalog.schema.table):
@@ -73,19 +82,18 @@ class _Dialect:
 
 
 SPARK_DIALECT = _Dialect("`", "{a} <=> {b}")
+# DuckDB and Postgres
 DUCKDB_DIALECT = _Dialect('"', "{a} IS NOT DISTINCT FROM {b}")
-
-
-def _q(name: str) -> str:
-    """Backtick-quote one identifier (column, alias). Embedded backticks
-    double, per Spark's quoting rule — generated SQL must survive
-    reserved words, spaces, and hyphens, exactly like the parquet path
-    does (r4 finding #3)."""
-    return SPARK_DIALECT.q(name)
-
-
-def _q_table(name: str) -> str:
-    return SPARK_DIALECT.q_table(name)
+SQLITE_DIALECT = _Dialect('"', "{a} IS {b}")
+# SQL Server before 2022 has no IS [NOT] DISTINCT FROM, and a bare
+# ``a = b OR (a IS NULL AND b IS NULL)`` is UNKNOWN when one side is
+# NULL — its negation would then miss a NULL -> value guard change
+TSQL_DIALECT = _Dialect(
+    "[",
+    "(({a} = {b} AND {a} IS NOT NULL AND {b} IS NOT NULL)"
+    " OR ({a} IS NULL AND {b} IS NULL))",
+    close="]",
+)
 
 
 def merge_matched_condition(
@@ -96,11 +104,10 @@ def merge_matched_condition(
     src: str = "src",
 ) -> str:
     """The WHEN MATCHED guard as a SQL boolean expression over the
-    given target/source alias strings (already-rendered prefixes —
-    quoted table names for engines without UPDATE aliases): stale
-    target, or same version with a changed guard column. The one
-    definition of the guard — ``resolve_upsert`` renders its update rule
-    from it too."""
+    given target/source alias prefixes: stale target, or same version
+    with a changed guard column. The one definition of the guard —
+    ``resolve_upsert``'s update rule, ``MERGE INTO`` and the warehouse
+    statements all render it."""
     oc = dialect.q(order_col)
     stale = f"{tgt}.{oc} IS NULL OR {tgt}.{oc} < {src}.{oc}"
     if not guard_cols:
@@ -134,11 +141,12 @@ def merge_into_statement(
         cols, keys, order_col, guard_cols, batch_time_expr, SPARK_DIALECT
     )
     return (
-        f"MERGE INTO {_q_table(target_table)} AS tgt "
-        f"USING {_q_table(source_view)} AS src "
+        f"MERGE INTO {SPARK_DIALECT.q_table(target_table)} AS tgt "
+        f"USING {SPARK_DIALECT.q_table(source_view)} AS src "
         f"ON {on} "
-        f"WHEN MATCHED AND ({guard}) THEN UPDATE SET {', '.join(sets)} "
-        f"WHEN NOT MATCHED THEN INSERT ({col_list}) VALUES ({src_vals})"
+        f"WHEN MATCHED AND ({guard}) THEN UPDATE SET "
+        + ", ".join(f"tgt.{c} = {v}" for c, v in sets)
+        + f" WHEN NOT MATCHED THEN INSERT ({col_list}) VALUES ({src_vals})"
     )
 
 
@@ -149,28 +157,25 @@ def _merge_parts(
     guard_cols: Sequence[str],
     batch_time_expr: str,
     d: _Dialect,
-    tgt: str = "tgt",
     src: str = "src",
-) -> tuple[str, str, list[str], str, str]:
-    """``tgt``/``src`` are the rendered alias prefixes used verbatim in
-    every emitted qualified reference. Engines whose UPDATE statement
-    cannot alias the target (duckdb) pass the quoted table names here —
-    the emission is correct by construction for ANY column name,
-    including ones containing the literal text 'tgt.'/'src.' (ADVICE
-    r11 #1: the old post-hoc string replace corrupted those inside
-    their quoted identifiers)."""
+) -> tuple[str, str, list[tuple[str, str]], str, str]:
+    """The guarded-MERGE contract in dialect ``d``, with the target
+    aliased ``tgt`` and the source referenced through the ``src``
+    prefix (``excluded`` for ON CONFLICT): the null-safe key match, the
+    WHEN MATCHED guard, the UPDATE SET items as (quoted column, value)
+    pairs — keys and ``etl_created_at`` never updated,
+    ``etl_updated_at`` set to ``batch_time_expr`` — the quoted INSERT
+    column list and the source values it inserts."""
     on = " AND ".join(
-        d.nse(a=f"{tgt}.{d.q(k)}", b=f"{src}.{d.q(k)}") for k in keys
+        d.nse(a=f"tgt.{d.q(k)}", b=f"{src}.{d.q(k)}") for k in keys
     )
-    guard = merge_matched_condition(order_col, guard_cols, d, tgt=tgt, src=src)
+    guard = merge_matched_condition(order_col, guard_cols, d, src=src)
     sets = []
     for c in cols:
         if c in keys or c == ETL_CREATED:
             continue  # keys immutable under match; created_at carve-out
-        if c == ETL_UPDATED:
-            sets.append(f"{tgt}.{d.q(c)} = {batch_time_expr}")
-        else:
-            sets.append(f"{tgt}.{d.q(c)} = {src}.{d.q(c)}")
+        value = batch_time_expr if c == ETL_UPDATED else f"{src}.{d.q(c)}"
+        sets.append((d.q(c), value))
     if not sets:
         raise ValueError(
             "MERGE has no updatable columns (every column is a key or "
@@ -179,53 +184,6 @@ def _merge_parts(
     col_list = ", ".join(d.q(c) for c in cols)
     src_vals = ", ".join(f"{src}.{d.q(c)}" for c in cols)
     return on, guard, sets, col_list, src_vals
-
-
-def merge_as_duckdb_statements(
-    target_table: str,
-    source_table: str,
-    cols: Sequence[str],
-    keys: Sequence[str],
-    order_col: str,
-    guard_cols: Sequence[str] = (),
-    batch_time_expr: str = "now()",
-) -> list[str]:
-    """The SAME guarded-MERGE contract as two DuckDB-executable
-    statements — sandbox duckdb (1.0) has no ``MERGE INTO``, but an
-    ``UPDATE .. FROM`` carrying the identical WHEN-MATCHED guard plus
-    an anti-join ``INSERT`` compose to it exactly (updates never touch
-    key columns, so NOT-MATCHED evaluated after the update equals
-    NOT-MATCHED against the original target). Emitted from the same
-    condition builders as ``merge_into_statement`` (only quoting and
-    null-safe-equality rendering differ), so executing these IS
-    executing the lakehouse binding's guard matrix on a real engine —
-    the executed counterpart to the delta-spark exec test this
-    container must skip (VERDICT r10 #8). Caller contract (same as
-    MERGE): the source is already deduped to one row per key."""
-    d = DUCKDB_DIALECT
-    tgt = d.q_table(target_table)
-    src = d.q_table(source_table)
-    # duckdb UPDATE has no target alias — the table name itself is the
-    # alias; build the parts WITH the quoted table names as the alias
-    # prefixes, so hostile column names (including ones containing the
-    # literal text 'tgt.'/'src.') survive intact (ADVICE r11 #1)
-    on, guard, sets, col_list, src_vals = _merge_parts(
-        cols, keys, order_col, guard_cols, batch_time_expr, d, tgt=tgt, src=src
-    )
-    update = (
-        f"UPDATE {tgt} SET "
-        # SET's left-hand side must be the bare column: strip the exact
-        # rendered prefix (every item starts with f"{tgt}." by
-        # construction), not a substring replace
-        + ", ".join(s[len(tgt) + 1:] for s in sets)
-        + f" FROM {src} WHERE {on} AND ({guard})"
-    )
-    insert = (
-        f"INSERT INTO {tgt} ({col_list}) "
-        f"SELECT {src_vals} FROM {src} "
-        f"WHERE NOT EXISTS (SELECT 1 FROM {tgt} WHERE {on})"
-    )
-    return [update, insert]
 
 
 def merge_capable(spark: SparkSession) -> bool:
@@ -265,11 +223,10 @@ def lakehouse_upsert(
     survivor and replay idempotence (ST3) fails in the guard-tie case —
     on BOTH backends, since the MERGE path dedups the source the same way.
     """
-    batch = keep_newest(source, keys, order_col, tiebreak)
-    if drop_null_key_rows:
-        batch = drop_null_keys(batch, keys)
-
     if merge_capable(spark):
+        batch = keep_newest(source, keys, order_col, tiebreak)
+        if drop_null_key_rows:
+            batch = drop_null_keys(batch, keys)
         view = f"__merge_src_{uuid.uuid4().hex}"
         batch.createOrReplaceTempView(view)
         try:
@@ -288,7 +245,8 @@ def lakehouse_upsert(
         )
     from .upsert import upsert
 
-    upsert(spark, batch, fallback_path, keys, order_col, guard_cols,
+    # upsert dedups the batch itself (resolve_upsert / write_table)
+    upsert(spark, source, fallback_path, keys, order_col, guard_cols,
            num_buckets=num_buckets, drop_null_key_rows=drop_null_key_rows,
            tiebreak=tiebreak)
     return "parquet"

@@ -22,20 +22,18 @@ Shape (idiomatic Spark JDBC sink):
   Streaming incremental loads (ST1-ST3: replays are no-ops because the
   guard never lets an older row overwrite a newer one).
 
-Guard parity with ``resolve_upsert`` (operators/upsert.py):
-- insert when the key is absent;
-- update when target.order_col < source.order_col, or on order_col tie
-  when any guard column differs (the OR-of-changed-columns guard);
-- ``etl_created_at`` keeps the target's value on update (carve-out);
-  ``etl_updated_at`` takes the batch's stamp.
-
-Dialects: ``duckdb``/``postgres`` use IS DISTINCT FROM; ``sqlite`` uses
-its ``IS NOT`` spelling. SQL Server needs MERGE instead of ON CONFLICT —
-``tsql_merge_statement`` emits the reference-equivalent T-SQL for
-documentation/ops use. NULL natural keys don't participate in SQL unique
-conflicts (NULLs compare distinct), so rows with NULL keys are dropped
-before egress — the MISA loader does exactly this (D5,
-misa_crm_loader.py:161-171).
+Both statements are rendered by ``operators/lakehouse``'s guarded-MERGE
+builder — the same key match, guard, SET list and INSERT lists as the
+Spark ``MERGE INTO`` and ``resolve_upsert`` — so the warehouse inherits
+the contract instead of restating it. ``dialect`` picks the quoting and
+null-safe equality: ``duckdb``/``postgres`` (``"..."``, IS NOT DISTINCT
+FROM) or ``sqlite`` (``"..."``, IS). ``etl_updated_at`` takes the
+batch row's own stamp on update. SQL Server needs MERGE instead of ON
+CONFLICT — ``tsql_merge_statement`` emits the reference-equivalent
+T-SQL (``[...]`` quoting) for documentation/ops use. NULL natural keys
+don't participate in SQL unique conflicts (NULLs compare distinct), so
+rows with NULL keys are dropped before egress — the MISA loader does
+exactly this (D5, misa_crm_loader.py:161-171).
 """
 
 from __future__ import annotations
@@ -45,11 +43,18 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame
 
 from .dedup import drop_null_keys, keep_newest
+from .lakehouse import (
+    DUCKDB_DIALECT,
+    ETL_UPDATED,
+    SQLITE_DIALECT,
+    TSQL_DIALECT,
+    _merge_parts,
+)
 
-_DISTINCT_OP = {
-    "duckdb": "IS DISTINCT FROM",
-    "postgres": "IS DISTINCT FROM",
-    "sqlite": "IS NOT",
+_DIALECTS = {
+    "duckdb": DUCKDB_DIALECT,
+    "postgres": DUCKDB_DIALECT,
+    "sqlite": SQLITE_DIALECT,
 }
 
 
@@ -60,21 +65,19 @@ def upsert_statement(
     order_col: str,
     guard_cols: Sequence[str] = (),
     dialect: str = "duckdb",
-    created_col: str = "etl_created_at",
 ) -> str:
     """Parameterized guarded-upsert statement (one placeholder per col)."""
-    op = _DISTINCT_OP[dialect]
-    placeholders = ", ".join("?" for _ in cols)
-    set_cols = [c for c in cols if c not in keys and c != created_col]
-    sets = ", ".join(f"{c} = excluded.{c}" for c in set_cols)
-    guard = f"tgt.{order_col} IS NULL OR tgt.{order_col} < excluded.{order_col}"
-    if guard_cols:
-        diffs = " OR ".join(f"tgt.{g} {op} excluded.{g}" for g in guard_cols)
-        guard += f" OR (tgt.{order_col} = excluded.{order_col} AND ({diffs}))"
+    d = _DIALECTS[dialect]
+    _on, guard, sets, col_list, _src_vals = _merge_parts(
+        cols, keys, order_col, guard_cols,
+        f"excluded.{d.q(ETL_UPDATED)}", d, src="excluded",
+    )
     return (
-        f"INSERT INTO {table} AS tgt ({', '.join(cols)}) VALUES ({placeholders}) "
-        f"ON CONFLICT ({', '.join(keys)}) DO UPDATE SET {sets} "
-        f"WHERE {guard}"
+        f"INSERT INTO {d.q_table(table)} AS tgt ({col_list}) "
+        f"VALUES ({', '.join('?' for _ in cols)}) "
+        f"ON CONFLICT ({', '.join(d.q(k) for k in keys)}) DO UPDATE SET "
+        + ", ".join(f"{c} = {v}" for c, v in sets)
+        + f" WHERE {guard}"
     )
 
 
@@ -84,25 +87,22 @@ def tsql_merge_statement(
     keys: Sequence[str],
     order_col: str,
     guard_cols: Sequence[str] = (),
-    created_col: str = "etl_created_at",
 ) -> str:
     """The same contract as SQL Server T-SQL MERGE (reference parity:
     tiktok_shop_staging_loader.py:453-468). Emitted for deployments whose
-    warehouse lacks ON CONFLICT; not executed in this container."""
-    src_row = ", ".join("?" for _ in cols)
-    on = " AND ".join(f"tgt.{k} = src.{k}" for k in keys)
-    set_cols = [c for c in cols if c not in keys and c != created_col]
-    sets = ", ".join(f"tgt.{c} = src.{c}" for c in set_cols)
-    guard = f"tgt.{order_col} < src.{order_col}"
-    for g in guard_cols:
-        guard += (f" OR (tgt.{order_col} = src.{order_col}"
-                  f" AND ((tgt.{g} <> src.{g}) OR (tgt.{g} IS NULL) <> (src.{g} IS NULL)))")
+    warehouse lacks ON CONFLICT; the tests check its structure and
+    evaluate its guard on SQLite rather than execute it."""
+    d = TSQL_DIALECT
+    on, guard, sets, col_list, src_vals = _merge_parts(
+        cols, keys, order_col, guard_cols, f"src.{d.q(ETL_UPDATED)}", d
+    )
     return (
-        f"MERGE {table} AS tgt USING (VALUES ({src_row})) AS src ({', '.join(cols)}) "
+        f"MERGE {d.q_table(table)} AS tgt "
+        f"USING (VALUES ({', '.join('?' for _ in cols)})) AS src ({col_list}) "
         f"ON {on} "
-        f"WHEN MATCHED AND ({guard}) THEN UPDATE SET {sets} "
-        f"WHEN NOT MATCHED THEN INSERT ({', '.join(cols)}) "
-        f"VALUES ({', '.join('src.' + c for c in cols)});"
+        f"WHEN MATCHED AND ({guard}) THEN UPDATE SET "
+        + ", ".join(f"{c} = {v}" for c, v in sets)
+        + f" WHEN NOT MATCHED THEN INSERT ({col_list}) VALUES ({src_vals});"
     )
 
 

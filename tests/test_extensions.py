@@ -188,13 +188,14 @@ def test_multimodal_vectorized_matches_per_row_codec(spark):
     # r13: the default-codec path vectorizes with numpy inside the same
     # mapInPandas kernel; pin it row-for-row against the per-row codec
     # path (forced by passing _fake_decode under a different identity),
-    # including the empty-payload edge (sum 0, max 0).
+    # including the empty-payload edge (sum 0, max 0) and a NULL payload
+    # (NULL features, as the SQL form gives for a NULL text).
     from e_commerce_etl_pipeline_spark.extensions.multimodal import (
         _fake_decode, attach_binary, extract_features,
     )
 
     docs = spark.createDataFrame(
-        [(1, "hello world", 11), (2, "", 0), (3, "éé", 2)],
+        [(1, "hello world", 11), (2, "", 0), (3, "éé", 2), (4, None, 0)],
         "doc_id long, text string, n_chars long",
     )
     media = attach_binary(docs)
@@ -206,6 +207,8 @@ def test_multimodal_vectorized_matches_per_row_codec(spark):
     slow = {r.doc_id: r for r in extract_features(media, codec=per_row).collect()}
     assert fast == slow
     assert fast[2].n_bytes == 0 and fast[2].sum_bytes == 0 and fast[2].max_byte == 0
+    assert fast[4].n_bytes is None and fast[4].sum_bytes is None
+    assert fast[4].max_byte is None
 
 
 def test_sample_frames(spark, sf_dir):
