@@ -141,7 +141,7 @@ def main() -> None:
     # attribution rule as the JVM warm-up action above and the
     # artifact_prebuild map (cost visible, never hidden).
     t0 = time.time()
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     spark.range(0, cpus * 4, 1, cpus).mapInPandas(
         lambda it: it, "id long"
     ).count()

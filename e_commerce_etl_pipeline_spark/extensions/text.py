@@ -167,16 +167,17 @@ def lang_hits(words: Column) -> Column:
     ])
 
 
-def lang_from_hits(hits: Column) -> Column:
-    """Argmax over a *materialized* lang_hits column: the first code (in
-    sorted order) achieving the maximum, 'und' when nothing matched.
+def lang_from_hits(hits_col: str) -> Column:
+    """Argmax over the lang_hits column named ``hits_col``: the first code
+    (in sorted order) achieving the maximum, 'und' when nothing matched.
     Equivalent to lang_id_from_words' sequential form: its strict `>`
     take keeps the earliest code on ties and leaves 'und' iff the max
     hit count is not > 0 (NULL words give NULL hits under ANSI size();
-    both forms' comparisons then fail to 'und'). Same CSE caveat as
-    every HOF helper here: an
-    inline ``hits`` expression would re-run every filter pass per
-    reference — callers must select lang_hits into a column first."""
+    both forms' comparisons then fail to 'und'). It takes a column NAME
+    because the argmax references the hits once per language and HOF
+    consumers get no CSE: an inline lang_hits expression would re-run
+    every filter pass per reference, so callers select it first."""
+    hits = F.col(hits_col)
     codes = sorted(LANG_MARKERS)
     mx = F.array_max(hits)
     pick = F.lit("und")
@@ -192,7 +193,7 @@ def lang_id_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select("doc_id", words_col(F.col("text")).alias("__w"))
         .select("doc_id", lang_hits(F.col("__w")).alias("__h"))
-        .select("doc_id", lang_from_hits(F.col("__h")).alias("lang_pred"))
+        .select("doc_id", lang_from_hits("__h").alias("lang_pred"))
     )
 
 

@@ -44,6 +44,12 @@ Stale on-disk generations are garbage-collected on rebuild: writing
 ``fp=B`` removes sibling ``fp=A`` dirs, so exactly one generation per
 artifact survives — the storage-growth discipline the r4/r5 reviews
 asked for on the checkpoint side.
+
+The same fingerprint keys one piece of table metadata: the parquet
+schema Spark infers (``parquet_schema``). ``plans.queries.load_table``
+declares it on every read, so only the first read of a table snapshot
+runs Spark's schema-inference job; the schema lives in memory only and
+``invalidate`` drops it with the table's other generations.
 """
 
 from __future__ import annotations
@@ -54,6 +60,7 @@ from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from . import fsops
 
@@ -161,6 +168,38 @@ def cached_df(
     _MEM[key] = (fp, spark, df)
     BUILD_COUNTS[artifact] = BUILD_COUNTS.get(artifact, 0) + 1
     return df
+
+
+# Session settings that change the schema Spark infers for a parquet
+# table: a schema inferred under other values must not be served, so
+# their values are part of the schema memo key.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def parquet_schema(spark: SparkSession, table_path: str) -> StructType:
+    """The schema ``spark.read.parquet(table_path)`` infers, inferred once
+    per table snapshot and inference settings. Without a declared schema
+    every parquet read starts an inference job; a reader given this one
+    starts none. Freshness is the content fingerprint, as for every other
+    artifact, so a rewrite of the table re-infers. Metadata, not an index
+    artifact: nothing is written and ``BUILD_COUNTS`` is not touched. A
+    path Spark cannot infer (missing, empty, unreadable) raises Spark's
+    own error and is not memoized."""
+    fp = table_fingerprint(table_path, spark)
+    confs = tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS)
+    key = (table_path, f"_schema{confs}")
+    hit = _MEM.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[2]
+    schema = spark.read.parquet(table_path).schema
+    _MEM[key] = (fp, spark, schema)
+    return schema
 
 
 def _fallback_root(table_path: str) -> str:

@@ -171,6 +171,13 @@ def resolve_upsert(
     return joined.selectExpr(*out_cols)
 
 
+def bucket_dirs(spark: SparkSession, table_path: str) -> set[str]:
+    """Names of the table's ``__bucket=<n>`` directories — none after a
+    full load of zero rows, which writes no partition."""
+    return {d for d in fsops.list_child_names(table_path, spark)
+            if d.startswith("__bucket=")}
+
+
 def _read_buckets(
     spark: SparkSession, table_path: str, buckets: Sequence[int]
 ) -> DataFrame | None:
@@ -185,8 +192,7 @@ def _read_buckets(
     of ``buckets`` exists yet, one other directory supplies the schema
     and the filter reads nothing from it. None when the table has no
     bucket directory at all (a full load of zero rows)."""
-    existing = {d for d in fsops.list_child_names(table_path, spark)
-                if d.startswith("__bucket=")}
+    existing = bucket_dirs(spark, table_path)
     if not existing:
         return None
     dirs = [d for d in (f"__bucket={b}" for b in buckets) if d in existing]
@@ -290,9 +296,7 @@ def compact_buckets(
     Returns the bucket ids compacted. Run it opportunistically (e.g.
     after a burst of appends), exactly like lakehouse OPTIMIZE."""
     bloated: list[int] = []
-    for d in fsops.list_child_names(table_path, spark):
-        if not d.startswith("__bucket="):
-            continue
+    for d in sorted(bucket_dirs(spark, table_path)):
         n = fsops.count_files_with_suffix(
             f"{table_path}/{d}", ".parquet", spark
         )

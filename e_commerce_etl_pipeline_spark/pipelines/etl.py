@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.local_rows import local_rows
-from ..operators.upsert import stamp_etl_metadata, upsert, write_table
+from ..operators.upsert import bucket_dirs, stamp_etl_metadata, upsert, write_table
 
 AUDIT_SCHEMA = T.StructType([
     T.StructField("batch_id", T.StringType()),
@@ -135,12 +135,12 @@ def full_load_pipeline(
             order_col = pipeline.order_col if pipeline.order_col in out.columns else "etl_updated_at"
             write_table(spark, out, f"{staging_root}/{table}", keys, order_col,
                         drop_null_key_rows=pipeline.drop_null_key_rows)
-            try:
-                counts[table] = spark.read.parquet(f"{staging_root}/{table}").count()
-            except Exception:
-                # an all-empty table writes no parquet files (no partitions),
-                # so the read-back cannot infer a schema — that IS zero rows
-                counts[table] = 0
+            # an all-empty table writes no bucket partition, so there is
+            # nothing to read back — that IS zero rows; any other read
+            # error fails the load
+            path = f"{staging_root}/{table}"
+            counts[table] = (spark.read.parquet(path).count()
+                             if bucket_dirs(spark, path) else 0)
         if audit:
             audit.record({
                 "batch_id": batch_id, "source_name": pipeline.name,

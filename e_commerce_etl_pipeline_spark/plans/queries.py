@@ -31,6 +31,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import index_store
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
     "events", "documents", "embeddings",
@@ -38,11 +40,17 @@ TABLES = [
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A fresh relation over ``<sf_dir>/<name>.parquet``. The schema is
+    declared, not inferred: ``index_store.parquet_schema`` infers it on
+    the first read of a table snapshot and serves it from memory after
+    that, until the table's content fingerprint or a parquet inference
+    setting changes. Building the DataFrame then starts no Spark job."""
     if name == "events":
         # runtime-settable; needed even when the session wasn't built by
         # session.get_spark (e.g. the driver's own harness session)
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = index_store.table_dir(sf_dir, name)
+    df = spark.read.schema(index_store.parquet_schema(spark, path)).parquet(path)
     # Normalize `ts` across the physical encodings the testdata has shipped
     # with (ns-as-long, µs TIMESTAMP_NTZ, µs TIMESTAMP_LTZ) so every
     # downstream expression sees one dtype: session-TZ TIMESTAMP.

@@ -76,7 +76,7 @@ def test_lang_hits_argmax_matches_sequential_form(spark):
         .select("w", lang_hits(F.col("w")).alias("h"))
         .select(
             lang_id_from_words(F.col("w")).alias("seq"),
-            lang_from_hits(F.col("h")).alias("fast"),
+            lang_from_hits("h").alias("fast"),
         )
         .collect()
     )

@@ -216,6 +216,35 @@ def test_full_load_then_incremental(spark, tmp_path):
     assert len(runs) == 2 and all(r.status == "SUCCESS" for r in runs)
 
 
+def test_full_load_readback_error_fails_the_run(spark, tmp_path, monkeypatch):
+    """Only a table with no bucket partition (a load of zero rows) reads
+    back as 0 rows. Any other read-back error fails the load and is
+    audited as FAILED — not as a SUCCESS that loaded nothing."""
+    import glob
+
+    from e_commerce_etl_pipeline_spark.pipelines import etl
+
+    audit = RunAudit(spark, str(tmp_path / "audit"))
+    assert full_load_pipeline(spark, _mk_pipeline(_tiktok_fake_source([])),
+                              str(tmp_path / "empty"), audit) == {
+        "tiktok_shop_order_detail": 0}
+
+    write_table = etl.write_table
+
+    def write_then_corrupt(spark_, df, table_path, *args, **kwargs):
+        write_table(spark_, df, table_path, *args, **kwargs)
+        victim = sorted(glob.glob(f"{table_path}/__bucket=*/*.parquet"))[0]
+        with open(victim, "wb") as f:
+            f.write(b"not parquet")
+
+    monkeypatch.setattr(etl, "write_table", write_then_corrupt)
+    with pytest.raises(Exception):
+        full_load_pipeline(spark, _mk_pipeline(_tiktok_fake_source(ORDERS)),
+                           str(tmp_path / "staging"), audit)
+    assert sorted((r.status, r.records_loaded) for r in audit.runs().collect()) == [
+        ("FAILED", None), ("SUCCESS", 0)]
+
+
 def test_incremental_replay_noop(spark, tmp_path):
     staging = str(tmp_path / "staging")
     src = _tiktok_fake_source(ORDERS)
