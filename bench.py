@@ -1,10 +1,22 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"""Registry benchmark harness, and the one timing protocol every bench
+tool shares.
 
-Each query is materialized with a cheap count() (no driver-side collect of
-full results) after a warm-up of the session JVM via a trivial action.
+``python bench.py`` times the headline queries at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test corpus) on local[$SPARK_GRAFT_CPUS], then every
+other registry entry, and prints ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
+
+The protocol, defined here only and imported by the tools:
+
+- :func:`prepare` warms the JVM (:func:`jvm_warmup`), stamps the host
+  (:func:`calib_sec`, ``cpus``, ``nproc``), forks the Python worker pool
+  (:func:`python_worker_warmup`) and builds the once-per-snapshot
+  :data:`ARTIFACTS`, each timed, all before any timed entry;
+- :func:`time_entries` times each registry entry in isolation: a cold
+  run, then the min of $SPARK_GRAFT_BENCH_WARM_RUNS (default 3) warm
+  runs, with a ``count()`` or a ``noop``-sink action;
+- :func:`count_pruned` tells, from the plan, whether ``count()`` would
+  skip the entry's computed columns.
 """
 
 from __future__ import annotations
@@ -13,11 +25,183 @@ import json
 import os
 import sys
 import time
+from dataclasses import dataclass, field
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from e_commerce_etl_pipeline_spark.extensions import (  # noqa: E402
+    components,
+    contamination,
+    dedup_fuzzy,
+    quality_model,
+    semantic_dedup,
+    similarity,
+    tfidf,
+)
+from e_commerce_etl_pipeline_spark.plans import queries as plan_queries  # noqa: E402
 from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
+
+# Once-per-snapshot index artifacts that several entries share. Each is
+# built and timed in `artifact_prebuild` before the timed region, so its
+# one-off build never lands in whichever entry touches the store first
+# (r9: semantic_dedup_cells cold 0.28 -> 3.94 s was all artifact build).
+ARTIFACTS = {
+    "near_dup_p1": similarity.near_dup_p1_clusters,
+    "near_dup_clusters": similarity.near_dup_clusters,
+    "ivf_centroids": similarity.trained_centroids,
+    "ivf_assignment": similarity.ivf_assignment,
+    "dedup_clusters": components.dedup_clusters,
+    "semantic_dedup_cells": semantic_dedup.semantic_dedup_cells,
+    "real_shingles": dedup_fuzzy.real_shingles,
+    "mutated_shingles": dedup_fuzzy.mutated_shingles,
+    "term_frequencies": tfidf.term_frequencies,
+    "contamination_grams": contamination.contamination_grams,
+    "quality_weights": quality_model.quality_classifier_weights,
+    "basket_items": plan_queries._basket_items,
+}
+
+# Drained-stream end states run a full Structured Streaming lifecycle
+# (or a store seed/delete/compact) into a fresh work dir per call: they
+# measure trigger and sink machinery at the same 5-27 s on every warm
+# repeat, not a query plan. Untimed; the oracle gates still cover them.
+STREAM_DRAINS = {
+    "stream_span_dedup_state", "stream_quality_state",
+    "stream_token_state", "stream_upsert_state",
+    "near_dup_tombstone_state",
+}
+
+
+def jvm_warmup(spark) -> None:
+    """Pay JVM start-up and first codegen on a small unrelated action."""
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+
+
+def calib_sec(spark) -> float:
+    """Machine-speed stamp: min of 3 runs of a fixed CPU-bound job.
+
+    The work never changes across rounds, so ratios of calib_sec
+    normalize host drift (r8 measured ~40% on the same commit 4 h
+    apart) before anything is read as a regression.
+    """
+    def once() -> float:
+        t0 = time.time()
+        spark.range(2_000_000_000).selectExpr(
+            "sum(id * 2654435761 % 1000000007)"
+        ).collect()
+        return time.time() - t0
+
+    return round(min(once() for _ in range(3)), 3)
+
+
+def python_worker_warmup(spark) -> float:
+    """Fork the Python worker pool (one per core) with a trivial
+    mapInPandas, so no timed entry absorbs the fork; returns seconds."""
+    t0 = time.time()
+    cpus = spark.sparkContext.defaultParallelism
+    spark.range(0, cpus * 4, 1, cpus).mapInPandas(
+        lambda it: it, "id long"
+    ).count()
+    return round(time.time() - t0, 3)
+
+
+def prepare(spark, sf_dir: str) -> dict:
+    """Everything that runs before the timed region, as artifact stamps."""
+    jvm_warmup(spark)
+    stamps = {
+        "calib_sec": calib_sec(spark),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "nproc": len(os.sched_getaffinity(0)),
+        "python_worker_warmup": python_worker_warmup(spark),
+    }
+    prebuild: dict[str, float | str] = {}
+    for name, fn in ARTIFACTS.items():
+        t0 = time.time()
+        try:
+            fn(spark, sf_dir).count()
+            prebuild[name] = round(time.time() - t0, 3)
+        except Exception as exc:  # noqa: BLE001 — missing table etc.
+            prebuild[name] = f"ERROR {type(exc).__name__}"[:80]
+    stamps["artifact_prebuild"] = prebuild
+    return stamps
+
+
+def count_pruned(df) -> bool:
+    """True iff ``df.count()`` reads no column: the plan of
+    ``df.groupBy().count()`` has at least one FileScan and every FileScan
+    reads ``struct<>``. Catalyst then prunes every computed column of a
+    map-only entry, so count() times a row-count scan, not the entry."""
+    counted = df.groupBy().count()
+    plan = counted.sparkSession._jvm.PythonSQLUtils.explainString(
+        counted._jdf.queryExecution(), "simple")
+    scans = [ln for ln in plan.splitlines() if "FileScan " in ln]
+    return bool(scans) and all("ReadSchema: struct<>" in ln for ln in scans)
+
+
+def warm_runs() -> int:
+    return max(1, int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "3")))
+
+
+@dataclass
+class Timings:
+    cold: dict[str, float] = field(default_factory=dict)
+    warm: dict[str, float] = field(default_factory=dict)
+    # per-entry warm spread (max - min) / min: the in-session noise floor
+    noise: dict[str, float] = field(default_factory=dict)
+    errors: dict[str, str] = field(default_factory=dict)
+    pruned: list[str] = field(default_factory=list)  # count_pruned entries
+
+
+def time_entries(spark, queries, sf_dir: str, names, action: str = "count",
+                 runs: int | None = None) -> Timings:
+    """Time each entry: a cold run, then the min of ``runs`` (default
+    :func:`warm_runs`) warm runs. A single warm sample can land on a GC
+    pause and read 10-30x slow. ``action`` is "count", "noop" or "auto"
+    (noop iff the entry is :func:`count_pruned`). The probe runs on the
+    frame the cold run built, outside the timed region. One failing entry
+    is recorded in ``errors`` and never stops the others."""
+    out = Timings()
+    for name in names:
+        try:
+            spark.sparkContext.setJobDescription(f"bench: {name}")
+            fn = queries[name]
+            t0 = time.time()
+            df = fn(spark, sf_dir)
+            built = time.time() - t0
+            pruned = count_pruned(df)
+            if pruned:
+                out.pruned.append(name)
+            noop = action == "noop" or (action == "auto" and pruned)
+
+            def run(frame):
+                if noop:
+                    frame.write.format("noop").mode("overwrite").save()
+                    return None
+                return frame.count()
+
+            t0 = time.time()
+            rows = run(df)
+            out.cold[name] = round(built + time.time() - t0, 3)
+            samples = []
+            for _ in range(runs or warm_runs()):
+                t0 = time.time()
+                run(fn(spark, sf_dir))
+                samples.append(time.time() - t0)
+            out.warm[name] = round(min(samples), 3)
+            if len(samples) > 1:
+                out.noise[name] = round(
+                    (max(samples) - min(samples)) / max(min(samples), 1e-9), 3
+                )
+            shown = "noop" if noop else f"{rows} rows"
+            print(f"# {name}: cold {out.cold[name]:.3f}s / warm "
+                  f"{out.warm[name]:.3f}s ({shown})", file=sys.stderr)
+        except Exception as exc:  # noqa: BLE001 — isolation is the point
+            out.errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+            print(f"# {name}: ERROR {out.errors[name]}", file=sys.stderr)
+        finally:
+            spark.sparkContext.setJobDescription(None)
+    return out
+
 
 HEADLINE = [
     # scan/agg/join analytics
@@ -64,267 +248,66 @@ HEADLINE = [
 ]
 
 
-def _bench_set(spark, queries, sf_dir, names, timings, warm, errors,
-               noise) -> None:
-    # SPARK_GRAFT_BENCH_WARM_RUNS = N takes the MIN of N warm repeats —
-    # one warm sample can land on a GC pause / ContextCleaner burst and
-    # read 10-30x slow (observed at sf1). Default is 3 since r6: min-of-3
-    # is the steady-state estimate, and the repeat SPREAD per query is
-    # the in-session noise floor the round-over-round comparison needs
-    # (VERDICT r5 "what's wrong" #3 — an 18% headline drift was
-    # unadjudicable without it). The artifact records warm_runs so series
-    # with different settings are never silently compared.
-    warm_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "3")))
-    # Per-query fault isolation: one broken query must never zero the whole
-    # artifact — record its error, keep timing the rest, and always emit
-    # the JSON line (exit code stays 0 so the driver records partial data).
-    for name in names:
-        try:
-            fn = queries[name]
-            t0 = time.time()
-            n = fn(spark, sf_dir).count()
-            timings[name] = round(time.time() - t0, 3)
-            # warm runs: plan + codegen cached -> steady-state execution
-            # cost (cold time is dominated by one-time Catalyst/codegen
-            # compile, which amortizes to zero at scale)
-            samples = []
-            for _ in range(warm_runs):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                samples.append(time.time() - t0)
-            warm[name] = round(min(samples), 3)
-            if len(samples) > 1:
-                noise[name] = round(
-                    (max(samples) - min(samples)) / max(min(samples), 1e-9), 3
-                )
-            print(f"# {name}: cold {timings[name]:.3f}s / warm {warm[name]:.3f}s ({n} rows)",
-                  file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001 — isolation is the point
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("bench")
     queries = entrymod.queries()
+    stamps = prepare(spark, sf_dir)
 
-    # JVM/codegen warm-up on a small unrelated action
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    # Machine-speed calibration: a fixed CPU-bound job whose work never
-    # changes across rounds, so every artifact carries its own
-    # throughput normalizer. Round 8 measured ~40% ambient drift on the
-    # SAME commit 4h apart (docs/SCALE.md "Bench drift control");
-    # cross-round comparisons should divide by calib_sec ratios before
-    # reading anything as a regression. min-of-3 like the query timings.
-    def _calib_once() -> float:
-        t0 = time.time()
-        spark.range(2_000_000_000).selectExpr(
-            "sum(id * 2654435761 % 1000000007)"
-        ).collect()
-        return time.time() - t0
-
-    calib_sec = round(min(_calib_once() for _ in range(3)), 3)
-
-    # Python-worker-pool warm-up (r13, guide §1: time the computation,
-    # not infrastructure startup): Arrow kernels fork one Python worker
-    # per core on first use, and WHICH timed entry absorbed that fork
-    # cost depended on how much Arrow work the prebuilds below happened
-    # to do — a populated on-disk index store serves them as parquet
-    # reads and leaves the pool cold (duplicate_chunk_spans cold
-    # measured 2.7-2.9 s with a warm store vs 1.1 s after
-    # rebuild-heavy prebuilds, same commit). One trivial mapInPandas
-    # over cpus partitions pays the fork HERE, timed and reported, so
-    # the timed colds measure query work deterministically — the same
-    # attribution rule as the JVM warm-up action above and the
-    # artifact_prebuild map (cost visible, never hidden).
-    t0 = time.time()
-    cpus = spark.sparkContext.defaultParallelism
-    spark.range(0, cpus * 4, 1, cpus).mapInPandas(
-        lambda it: it, "id long"
-    ).count()
-    python_worker_warmup = round(time.time() - t0, 3)
-
-    # Pre-materialize the write-through index artifacts (VERDICT r9 #7):
-    # a store version bump used to land its one-off cold rebuild inside
-    # whichever registry entry touched the store first (r9 close bench:
-    # semantic_dedup_cells 0.28->3.94 s, cluster_size_histogram
-    # 0.45->3.95 s — all artifact build, not query work). Building them
-    # HERE, each timed into artifact_prebuild, keeps the registry's
-    # cold timings attributable to query work only; the artifact cost
-    # stays visible in the output instead of polluting a query's number.
-    artifact_prebuild: dict[str, float] = {}
-
-    def _prebuild(name, fn):
-        t0 = time.time()
-        try:
-            fn(spark, sf_dir).count()
-            artifact_prebuild[name] = round(time.time() - t0, 3)
-        except Exception as exc:  # noqa: BLE001 — missing table etc.
-            artifact_prebuild[name] = f"ERROR {type(exc).__name__}"[:80]
-
-    from e_commerce_etl_pipeline_spark.extensions import (
-        components as _cmp,
-        contamination as _cont,
-        dedup_fuzzy as _dfz,
-        quality_model as _qm,
-        semantic_dedup as _sem,
-        similarity as _sim,
-        tfidf as _tfidf,
-    )
-    from e_commerce_etl_pipeline_spark.plans import queries as _pq
-
-    _prebuild("near_dup_p1", _sim.near_dup_p1_clusters)
-    _prebuild("near_dup_clusters", _sim.near_dup_clusters)
-    _prebuild("ivf_centroids", _sim.trained_centroids)
-    _prebuild("ivf_assignment", _sim.ivf_assignment)
-    _prebuild("dedup_clusters", _cmp.dedup_clusters)
-    _prebuild("semantic_dedup_cells", _sem.semantic_dedup_cells)
-    # r13 (VERDICT r12 #2): the remaining once-per-snapshot artifact
-    # builds used to land inside whichever timed entry touched the store
-    # first (r12 driver run: benchmark_contamination cold 5.31 s vs warm
-    # 0.29 s, minhash_lsh_pairs 3.04/0.75, cross_source_overlap
-    # 2.80/0.66, copurchase_pairs 2.85/0.61 — mostly shingle/gram/tfidf/
-    # basket/model construction, not query work). Build them here, each
-    # timed into artifact_prebuild, same as the near-dup/IVF artifacts
-    # since r9: the cost stays visible in the output instead of
-    # polluting a query's cold number.
-    _prebuild("real_shingles", _dfz.real_shingles)
-    _prebuild("mutated_shingles", _dfz.mutated_shingles)
-    _prebuild("term_frequencies", _tfidf.term_frequencies)
-    _prebuild("contamination_grams", _cont.contamination_grams)
-    _prebuild("quality_weights", _qm.quality_classifier_weights)
-    _prebuild("basket_items", _pq._basket_items)
-
-    timings: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    noise: dict[str, float] = {}
-    _bench_set(spark, queries, sf_dir, HEADLINE, timings, warm, errors, noise)
-
-    # Long tail: every registry entry outside the headline set, so per-round
-    # regression tracking covers the full surface (VERDICT r4 item 7). Tail
-    # failures are recorded separately and do NOT invalidate the headline
-    # metric — the headline series must stay comparable across rounds.
-    # The drained-stream end-state entries run a full Structured
-    # Streaming lifecycle per invocation (file source + checkpoint +
-    # availableNow drain into a fresh temp work dir) — they measure
-    # trigger/sink machinery, not a query plan, and they cost the same
-    # 5-27 s on every "warm" repeat. Excluding them keeps the timed
-    # registry at the SAME 120 entries as the r9 series (comparable
-    # totals); their correctness is still graded by the driver's
-    # oracle gate and the full sweep like every other entry.
-    stream_drains = {
-        "stream_span_dedup_state", "stream_quality_state",
-        "stream_token_state", "stream_upsert_state",
-        # r12: the tombstone lifecycle entry is the same category — a
-        # full store seed/delete/compact per invocation into a fresh
-        # temp work dir; its cost is the maintenance benches' subject
-        # (BENCH_incremental_*), not a query plan
-        "near_dup_tombstone_state",
-    }
-    tail_names = [
-        n for n in queries
-        if n not in set(HEADLINE) and n not in stream_drains
-    ]
-    tail_timings: dict[str, float] = {}
-    tail_warm: dict[str, float] = {}
-    tail_errors: dict[str, str] = {}
-    tail_noise: dict[str, float] = {}
+    head = time_entries(spark, queries, sf_dir, HEADLINE)
+    # Long tail: every other registry entry, so regression tracking covers
+    # the whole surface. Tail failures do NOT invalidate the headline.
+    tail = Timings()
     if os.environ.get("SPARK_GRAFT_BENCH_TAIL", "1") != "0":
-        _bench_set(spark, queries, sf_dir, tail_names, tail_timings,
-                   tail_warm, tail_errors, tail_noise)
+        tail = time_entries(spark, queries, sf_dir, [
+            n for n in queries if n not in set(HEADLINE) | STREAM_DRAINS
+        ])
 
     # A partial headline run must not be comparable to a complete one: a
-    # failed (especially heavy) query would otherwise LOWER the reported
-    # total and grade as a speedup (ADVICE r4). valid=false + null totals.
-    valid = not errors
-    total = round(sum(timings.values()), 3) if valid else None
-    total_warm = round(sum(warm.values()), 3) if valid else None
+    # failed query would otherwise LOWER the total and grade as a speedup.
+    valid = not head.errors
+    total = round(sum(head.cold.values()), 3) if valid else None
+    total_warm = round(sum(head.warm.values()), 3) if valid else None
 
-    # Suite noise floor: median over queries of per-query warm spread
-    # (max-min)/min. Interpreting round-over-round drift: a headline
-    # ratio within ~noise_pct of 1.0 is ambient variance, not a
-    # regression (VERDICT r5 #3).
-    all_noise = {**noise, **tail_noise}
-    noise_pct = None
-    if all_noise:
-        vals = sorted(all_noise.values())
-        noise_pct = round(100 * vals[len(vals) // 2], 1)
+    # Suite noise floor: median over entries of the per-entry warm spread;
+    # a headline ratio within ~noise_pct of 1.0 is ambient variance.
+    all_noise = sorted({**head.noise, **tail.noise}.values())
+    noise_pct = (round(100 * all_noise[len(all_noise) // 2], 1)
+                 if all_noise else None)
 
-    # Silent-cap visibility: rows the basket fence truncated this run
-    # (None when lineitem never exceeded MAX_BASKET_ITEMS per order —
-    # the expected case on sane data).
+    # Silent-cap visibility: rows the basket fence and vectors the LSH
+    # bucket fence dropped on this corpus (None = reporting failed).
     try:
-        from e_commerce_etl_pipeline_spark.plans.queries import (
-            basket_fence_dropped_rows,
-        )
-        basket_dropped = basket_fence_dropped_rows(sf_dir)
+        basket_dropped = plan_queries.basket_fence_dropped_rows(sf_dir)
     except Exception:  # noqa: BLE001 — reporting must not fail the bench
         basket_dropped = None
-    # Same rule for the near-dup LSH bucket fence (similarity.py): the
-    # number of vectors the per-bucket candidate cap excluded this corpus.
     try:
-        from e_commerce_etl_pipeline_spark.extensions.similarity import (
-            lsh_fence_dropped,
-        )
-        lsh_dropped = lsh_fence_dropped(spark, sf_dir)
+        lsh_dropped = similarity.lsh_fence_dropped(spark, sf_dir)
     except Exception:  # noqa: BLE001 — reporting must not fail the bench
         lsh_dropped = None
-    # Recall next to the drop counts (r7): what the fence's drops COST
-    # in recovered near-dup pairs, and what the chain-link cluster
-    # hybrid recovers — the number a user needs before trusting either
-    # path on a clone-heavy corpus.
-    # Map-only supplement (r12, guide §1.4): for queries whose plan is a
-    # pure cardinality-preserving projection over one scan, the timed
-    # count() action PRUNES the computed columns entirely (the scan reads
-    # zero columns — verified: simhash_docs counts in 0.26 s but computes
-    # in 2.9 s under the noop sink). The count-based `queries`/`value`
-    # series stays EXACTLY as in r2-r11 (same action, same comparability);
-    # this block records the honest compute cost of those entries
-    # separately via a noop write, as `map_only_noop_warm` (min of 2 warm
-    # repeats). List derived by scanning every registry plan for
-    # all-empty ReadSchema under count() at r12; regenerate the same way
-    # if entries change shape.
-    MAP_ONLY_PRUNED = [
-        "text_stats", "lang_id_docs", "simhash_docs", "redact_pii_docs",
-        "coercion_kernel_events", "load_statistics", "row_count_report",
-        "schema_aligned_events", "asof_last_purchase",
-        "user_running_totals", "training_shards", "funnel_conversion",
-        "gopher_quality_flags", "repetition_flags", "unicode_clean_docs",
-    ]
+
+    # The count() series stays comparable across rounds, but for a
+    # count_pruned entry it times a zero-column scan (simhash_docs counts
+    # in 0.26 s and computes in 2.9 s). map_only_noop_warm records what
+    # those entries cost with the noop sink, min of 2 warm runs.
     map_only_noop_warm: dict[str, float] = {}
     if os.environ.get("SPARK_GRAFT_BENCH_NOOP", "1") != "0":
-        for name in MAP_ONLY_PRUNED:
-            fn = queries.get(name)
-            if fn is None:
-                continue
-            try:
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite").save()
-                samples = []
-                for _ in range(2):
-                    t0 = time.time()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite").save()
-                    samples.append(time.time() - t0)
-                map_only_noop_warm[name] = round(min(samples), 3)
-            except Exception:  # noqa: BLE001 — supplement must not fail bench
-                pass
+        map_only_noop_warm = time_entries(
+            spark, queries, sf_dir, head.pruned + tail.pruned,
+            action="noop", runs=2,
+        ).warm
 
+    # What the fence's drops cost in recovered near-dup pairs, next to
+    # what the chain-link cluster path recovers.
     near_dup_recall = None
     try:
-        from e_commerce_etl_pipeline_spark.extensions.similarity import (
-            near_dup_recall_eval,
-        )
         near_dup_recall = {
             r["method"]: {
                 "n_exact": r["n_exact"], "n_recovered": r["n_recovered"],
                 "recall": r["recall"],
             }
-            for r in near_dup_recall_eval(spark, sf_dir).collect()
+            for r in similarity.near_dup_recall_eval(spark, sf_dir).collect()
         }
     except Exception:  # noqa: BLE001 — reporting must not fail the bench
         pass
@@ -334,37 +317,34 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "valid": valid,
-        "warm_runs": max(1, int(os.environ.get("SPARK_GRAFT_BENCH_WARM_RUNS", "3"))),
+        "warm_runs": warm_runs(),
         "noise_pct": noise_pct,
-        "queries": timings,
-        "queries_warm": warm,
-        "queries_noise": noise,
+        "queries": head.cold,
+        "queries_warm": head.warm,
+        "queries_noise": head.noise,
         "total_warm": total_warm,
-        "registry_tail": tail_timings,
-        "registry_tail_warm": tail_warm,
-        "registry_tail_noise": tail_noise,
+        "registry_tail": tail.cold,
+        "registry_tail_warm": tail.warm,
+        "registry_tail_noise": tail.noise,
         "registry_total_warm": (
-            round(sum(warm.values()) + sum(tail_warm.values()), 3)
-            if valid and not tail_errors else None
+            round(sum(head.warm.values()) + sum(tail.warm.values()), 3)
+            if valid and not tail.errors else None
         ),
         "map_only_noop_warm": map_only_noop_warm,
         "basket_fence_dropped_rows": basket_dropped,
         "lsh_fence_dropped_vecs": lsh_dropped,
         "near_dup_recall": near_dup_recall,
-        "calib_sec": calib_sec,
-        "python_worker_warmup": python_worker_warmup,
-        "artifact_prebuild": artifact_prebuild,
-        "untimed_stream_drains": sorted(stream_drains),
+        **stamps,
+        "untimed_stream_drains": sorted(STREAM_DRAINS),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    if errors:
-        out["errors"] = errors
-    if tail_errors:
-        out["tail_errors"] = tail_errors
+    if head.errors:
+        out["errors"] = head.errors
+    if tail.errors:
+        out["tail_errors"] = tail.errors
     line = json.dumps(out)
-    # The driver's artifact keeps only a 2000-char stdout tail (ADVICE
-    # r5 #1), which truncates the 102-query JSON mid-object — persist the
-    # complete artifact to a file the repo commits alongside each round.
+    # A caller that keeps only a 2000-char stdout tail cuts the JSON
+    # mid-object, so the complete line also goes to a file.
     out_file = os.environ.get("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     if out_file:
         try:

@@ -31,7 +31,7 @@ def get_spark(app_name: str = "e_commerce_etl_pipeline_spark",
         # overhead on tiny stages). At sf100 it is catastrophically
         # wrong: a ~billion-row shuffle at 32 partitions ground >45 min
         # where 256 partitions took 327 s (duplicate_chunk_spans probe).
-        # The big-corpus tools (gen_scale, probe_worst_alpha,
+        # The big-corpus tools (gen_scale, bench_core_scaling,
         # bench_near_dup) therefore default SPARK_GRAFT_AQE_INIT_PARTS
         # to 256; any deployment can set it explicitly.
         .config("spark.default.parallelism", str(cpus))

@@ -37,6 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import calib_sec, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions import tokenizer  # noqa: E402
 from e_commerce_etl_pipeline_spark.operators import index_store  # noqa: E402
 from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
@@ -45,14 +46,7 @@ from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("bench-bpe")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def calib_once() -> float:
-        t0 = time.time()
-        spark.range(2_000_000_000).selectExpr(
-            "sum(id * 2654435761 % 1000000007)"
-        ).collect()
-        return time.time() - t0
+    jvm_warmup(spark)
 
     docs_path = index_store.table_dir(sf_dir, "documents")
     out: dict = {
@@ -60,7 +54,7 @@ def main() -> None:
         "unit": "sec",
         "sf_dir": sf_dir,
         "n_merges": tokenizer.N_MERGES,
-        "calib_sec": round(min(calib_once() for _ in range(3)), 3),
+        "calib_sec": calib_sec(spark),
         "n_docs": spark.read.parquet(docs_path).count(),
     }
 

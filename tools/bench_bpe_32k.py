@@ -34,6 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.text import words_col  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.tokenizer import (  # noqa: E402
     _train_driver,
@@ -91,7 +92,7 @@ def main() -> None:
     out_file = sys.argv[1] if len(sys.argv) > 1 else None
     n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 32_768
     spark = get_spark("bench-bpe-32k")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    jvm_warmup(spark)
 
     syl = F.array(*[F.lit(s) for s in SYLLABLES])
     pos = F.explode(F.sequence(F.lit(0), F.lit(WORDS_PER_DOC - 1)))

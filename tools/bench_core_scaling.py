@@ -1,21 +1,25 @@
-"""Core-scaling probe (VERDICT r12 #4): time a subset of registry
-entries at $SPARK_GRAFT_CPUS and write one JSON artifact, so two runs
-(e.g. 8 vs 32 cores) at a REAL scale factor (sf10 — sf0.1 is
-overhead-bound: the r12 driver measured the whole headline set
-identical at 8 and 32 cores) give per-query core-scaling ratios.
+"""Core-scaling probe: time a subset of registry entries at
+$SPARK_GRAFT_CPUS and write one JSON artifact, so two runs (e.g. 8 vs 32
+cores) at a real scale factor (sf10; sf0.1 is overhead-bound) give
+per-query core-scaling ratios.
 
-Method matches bench.py: count() action, min-of-3 warm repeats after a
-cold run, calibration job for ambient normalization, artifacts prebuilt
-OUTSIDE the timed region (same attribution rule as bench.py's
-artifact_prebuild). Entries whose count() plan prunes to a zero-column
-scan are timed with the noop sink instead (flagged in the artifact) —
-a core-scaling ratio of a row-count scan would measure nothing.
+The protocol is bench.py's (``prepare`` + ``time_entries``): calibration
+stamp, Python worker fork and artifact prebuilds outside the timed
+region, then a cold run and the min of $SPARK_GRAFT_BENCH_WARM_RUNS
+(default 3) warm runs per entry. Entries whose count() plan reads no
+column (``bench.count_pruned``) are timed with the noop sink instead and
+listed in ``noop_timed``: a core-scaling ratio of a row-count scan would
+measure nothing.
 
 Usage:
   SPARK_GRAFT_CPUS=32 python tools/bench_core_scaling.py SF_DIR OUT.json [query ...]
   SPARK_GRAFT_CPUS=8  python tools/bench_core_scaling.py SF_DIR OUT2.json [query ...]
-  python tools/scaling_report.py is the sf-vs-sf twin; compare these two
-  artifacts with tools/core_scaling_report.py.
+  compare the two artifacts with tools/core_scaling_report.py
+  (tools/scaling_report.py is the sf-vs-sf twin).
+
+A cold-plus-one-warm probe of a few entries (the sf100 worst-alpha probe):
+  SPARK_GRAFT_BENCH_WARM_RUNS=1 python tools/bench_core_scaling.py SF_DIR OUT.json \\
+      duplicate_chunk_spans copurchase_pairs basket_lift
 """
 
 from __future__ import annotations
@@ -23,15 +27,19 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 # spill-proof shuffle sizing for big-corpus runs unless the caller chose
 os.environ.setdefault("SPARK_GRAFT_AQE_INIT_PARTS", "256")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import __spark_entry__ as entrymod  # noqa: E402
+from bench import prepare, time_entries, warm_runs  # noqa: E402
+from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
+from tools.provenance import sf_provenance  # noqa: E402
+
 # Default probe set: the heaviest warm registry entries at sf0.1 (r13
-# baseline) that do real data-parallel work, plus the heavy map-only
+# baseline) that do real data-parallel work, plus four heavy map-only
 # entries (noop-timed). Deliberately excludes the untimed stream drains.
 DEFAULT_QUERIES = [
     "near_dup_incremental_update", "user_value_median_pandas",
@@ -41,111 +49,26 @@ DEFAULT_QUERIES = [
     "tfidf_top_terms", "copurchase_pairs", "customer_spend_deciles",
     "q1_pricing_summary", "q3_top_unshipped", "lm_rarity_docs",
     "brute_force_topk", "cross_source_overlap",
-    # count-pruned -> timed with the noop sink (honest compute cost)
     "repetition_flags", "simhash_docs", "lang_id_docs", "text_stats",
 ]
 
-NOOP_TIMED = {
-    "repetition_flags", "simhash_docs", "lang_id_docs", "text_stats",
-}
-
 
 def main() -> None:
-    sf_dir = sys.argv[1]
-    out_path = sys.argv[2]
-    names = sys.argv[3:] or DEFAULT_QUERIES
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-    from e_commerce_etl_pipeline_spark.session import get_spark
-    import __spark_entry__ as entrymod
-
+    sf_dir, out_path = sys.argv[1], sys.argv[2]
     spark = get_spark("core-scaling")
-    queries = entrymod.queries()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def _calib_once() -> float:
-        t0 = time.time()
-        spark.range(2_000_000_000).selectExpr(
-            "sum(id * 2654435761 % 1000000007)"
-        ).collect()
-        return time.time() - t0
-
-    calib_sec = round(min(_calib_once() for _ in range(3)), 3)
-
-    # prebuild shared artifacts so per-query numbers measure query work
-    prebuild: dict[str, float] = {}
-    from e_commerce_etl_pipeline_spark.extensions import (
-        components as _cmp, contamination as _cont, dedup_fuzzy as _dfz,
-        quality_model as _qm, semantic_dedup as _sem, similarity as _sim,
-        tfidf as _tfidf,
-    )
-    from e_commerce_etl_pipeline_spark.plans import queries as _pq
-
-    for pname, fn in [
-        ("near_dup_p1", _sim.near_dup_p1_clusters),
-        ("near_dup_clusters", _sim.near_dup_clusters),
-        ("ivf_centroids", _sim.trained_centroids),
-        ("ivf_assignment", _sim.ivf_assignment),
-        ("dedup_clusters", _cmp.dedup_clusters),
-        ("semantic_dedup_cells", _sem.semantic_dedup_cells),
-        ("real_shingles", _dfz.real_shingles),
-        ("mutated_shingles", _dfz.mutated_shingles),
-        ("term_frequencies", _tfidf.term_frequencies),
-        ("contamination_grams", _cont.contamination_grams),
-        ("quality_weights", _qm.quality_classifier_weights),
-        ("basket_items", _pq._basket_items),
-    ]:
-        t0 = time.time()
-        try:
-            fn(spark, sf_dir).count()
-            prebuild[pname] = round(time.time() - t0, 3)
-        except Exception as exc:  # noqa: BLE001
-            prebuild[pname] = f"ERROR {type(exc).__name__}"[:80]
-
-    cold: dict[str, float] = {}
-    warm: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in names:
-        fn = queries.get(name)
-        if fn is None:
-            errors[name] = "unknown query"
-            continue
-
-        def act():
-            if name in NOOP_TIMED:
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite").save()
-            else:
-                fn(spark, sf_dir).count()
-
-        try:
-            spark.sparkContext.setJobDescription(f"core-scaling: {name}")
-            t0 = time.time()
-            act()
-            cold[name] = round(time.time() - t0, 3)
-            samples = []
-            for _ in range(3):
-                t0 = time.time()
-                act()
-                samples.append(time.time() - t0)
-            warm[name] = round(min(samples), 3)
-            print(f"# {name}: cold {cold[name]:.3f} warm {warm[name]:.3f}",
-                  file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001 — isolation per query
-            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-        finally:
-            spark.sparkContext.setJobDescription(None)
-
+    stamps = prepare(spark, sf_dir)
+    t = time_entries(spark, entrymod.queries(), sf_dir,
+                     sys.argv[3:] or DEFAULT_QUERIES, action="auto")
     out = {
         "metric": "core_scaling_probe",
-        "cpus": cpus,
         "sf_dir": sf_dir,
-        "calib_sec": calib_sec,
-        "queries_cold": cold,
-        "queries_warm": warm,
-        "noop_timed": sorted(NOOP_TIMED & set(names)),
-        "artifact_prebuild": prebuild,
-        "errors": errors or None,
+        **stamps,
+        "warm_runs": warm_runs(),
+        "queries_cold": t.cold,
+        "queries_warm": t.warm,
+        "noop_timed": sorted(t.pruned),
+        "errors": t.errors or None,
+        "provenance": sf_provenance(sf_dir),
     }
     with open(out_path, "w") as f:
         f.write(json.dumps(out) + "\n")

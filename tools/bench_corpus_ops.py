@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import calib_sec, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.chunking import (  # noqa: E402
     chunk_documents,
     segment_dedup_docs,
@@ -48,20 +49,13 @@ from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("bench-corpus-ops")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def calib_once() -> float:
-        t0 = time.time()
-        spark.range(2_000_000_000).selectExpr(
-            "sum(id * 2654435761 % 1000000007)"
-        ).collect()
-        return time.time() - t0
+    jvm_warmup(spark)
 
     out: dict = {
         "metric": "corpus_ops_scale",
         "unit": "sec",
         "sf_dir": sf_dir,
-        "calib_sec": round(min(calib_once() for _ in range(3)), 3),
+        "calib_sec": calib_sec(spark),
         "n_docs": spark.read.parquet(
             index_store.table_dir(sf_dir, "documents")
         ).count(),

@@ -38,6 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import calib_sec, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.chunking import (  # noqa: E402
     segment_dedup_docs,
 )
@@ -59,14 +60,7 @@ from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("bench-curation-e2e")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def calib_once() -> float:
-        t0 = time.time()
-        spark.range(2_000_000_000).selectExpr(
-            "sum(id * 2654435761 % 1000000007)"
-        ).collect()
-        return time.time() - t0
+    jvm_warmup(spark)
 
     root = tempfile.mkdtemp(prefix="curation_e2e_")
     stages: dict = {}
@@ -142,7 +136,7 @@ def main() -> None:
             "metric": "curation_e2e",
             "unit": "sec",
             "sf_dir": sf_dir,
-            "calib_sec": round(min(calib_once() for _ in range(3)), 3),
+            "calib_sec": calib_sec(spark),
             "total_sec": round(sum(s["sec"] for s in stages.values()), 3),
             "stages": stages,
         }

@@ -33,6 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import calib_sec, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 from e_commerce_etl_pipeline_spark.streaming.span_dedup import (  # noqa: E402
     read_deduped_docs,
@@ -46,14 +47,7 @@ BATCH_DOCS = 5_000
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     spark = get_spark("bench-span-stream")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def calib_once() -> float:
-        t0 = time.time()
-        spark.range(2_000_000_000).selectExpr(
-            "sum(id * 2654435761 % 1000000007)"
-        ).collect()
-        return time.time() - t0
+    jvm_warmup(spark)
 
     root = tempfile.mkdtemp(prefix="span_stream_bench_")
     try:
@@ -85,7 +79,7 @@ def main() -> None:
             "metric": "span_dedup_stream_scale",
             "unit": "sec",
             "sf_dir": sf_dir,
-            "calib_sec": round(min(calib_once() for _ in range(3)), 3),
+            "calib_sec": calib_sec(spark),
             "corpus_docs": n_docs,
         }
 

@@ -19,7 +19,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 from e_commerce_etl_pipeline_spark.schemas import TIKTOK_ORDER_SCHEMA  # noqa: E402

@@ -8,10 +8,11 @@ bench HEADLINE set at /root/testdata/sf0.1, writes docs/PLANS.md)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 KEEP_DETAIL = ("PushedFilters", "ReadSchema")
 
