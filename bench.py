@@ -94,6 +94,17 @@ def calib_sec(spark) -> float:
     return round(min(once() for _ in range(3)), 3)
 
 
+def host_stamps(spark) -> dict:
+    """The machine stamps an artifact carries: ``calib_sec``, the
+    session's cores (``cpus``) and the CPUs the process may use
+    (``nproc``)."""
+    return {
+        "calib_sec": calib_sec(spark),
+        "cpus": spark.sparkContext.defaultParallelism,
+        "nproc": len(os.sched_getaffinity(0)),
+    }
+
+
 def python_worker_warmup(spark) -> float:
     """Fork the Python worker pool (one per core) with a trivial
     mapInPandas, so no timed entry absorbs the fork; returns seconds."""
@@ -109,9 +120,7 @@ def prepare(spark, sf_dir: str) -> dict:
     """Everything that runs before the timed region, as artifact stamps."""
     jvm_warmup(spark)
     stamps = {
-        "calib_sec": calib_sec(spark),
-        "cpus": spark.sparkContext.defaultParallelism,
-        "nproc": len(os.sched_getaffinity(0)),
+        **host_stamps(spark),
         "python_worker_warmup": python_worker_warmup(spark),
     }
     prebuild: dict[str, float | str] = {}

@@ -170,7 +170,8 @@ def foreach_batch_writer(
     batch_size: int = 500,
     num_writers: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """Structured-Streaming adapter: ``writeStream.foreachBatch(this)``.
+    """Structured-Streaming adapter: the batch function to hand to
+    ``streaming.runner.start_batches``.
     Replay-safe by construction — re-delivered micro-batches hit the
     order/guard WHERE clause and no-op (ST3/ST6)."""
 

@@ -9,7 +9,9 @@
   keyed upsert (incremental_etl_dag.py's 15-minute path, ST1-ST3).
   The bridge/backfill DAG (ST4) is the same call with a wider window.
 - ``RunAudit``: etl_control.batch_runs parity (ST5) — one row per run,
-  appended to a small parquet audit table.
+  appended to a small parquet audit table. Every pipeline function runs
+  inside ``_audited_run``, the one place that writes the SUCCESS / FAILED
+  row.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from __future__ import annotations
 import time
 import uuid
 from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,6 +115,49 @@ def _tables_of(transformed) -> dict[str, DataFrame]:
     return transformed if isinstance(transformed, dict) else {"": transformed}
 
 
+@contextmanager
+def _audited_run(audit: RunAudit | None, source_name: str, **fixed):
+    """One batch_runs row per pipeline call (ST5). The body gets the run's
+    batch id and a dict to fill with its SUCCESS fields; an exception
+    writes a FAILED row instead and re-raises. ``fixed`` fields (e.g.
+    ``method``) go on either row."""
+    row = {"batch_id": str(uuid.uuid4()), "source_name": source_name,
+           "started_at": time.time(), **fixed}
+    fields: dict = {}
+    try:
+        yield row["batch_id"], fields
+    except Exception as e:
+        if audit:
+            audit.record({**row, "status": "FAILED", "finished_at": time.time(),
+                          "error": str(e)[:500]})
+        raise
+    if audit:
+        audit.record({**row, **fields, "status": "SUCCESS",
+                      "finished_at": time.time()})
+
+
+def _load_tables(pipeline: SourcePipeline, raw: DataFrame, batch_id: str,
+                 staging_root: str, load: Callable[..., int]) -> dict[str, int]:
+    """Transform ``raw`` and hand each stamped table to
+    ``load(path, df, keys, order_col, guard_cols)``, which returns its
+    row count."""
+    counts: dict[str, int] = {}
+    for suffix, df in _tables_of(pipeline.transform(raw)).items():
+        table = suffix or pipeline.name
+        out = stamp_etl_metadata(df, pipeline.name, batch_id,
+                                 pipeline.vn_naive_stamp)
+        # child tables without the change-order column fall back to the
+        # batch stamp (reference: only parent tables carry a guard,
+        # shopee_orders_loader.py:672-695 — children replace-on-match)
+        order_col = pipeline.order_col if pipeline.order_col in out.columns else "etl_updated_at"
+        counts[table] = load(
+            f"{staging_root}/{table}", out,
+            [k for k in pipeline.keys if k in df.columns], order_col,
+            [g for g in pipeline.guard_cols if g in df.columns],
+        )
+    return counts
+
+
 def full_load_pipeline(
     spark: SparkSession,
     pipeline: SourcePipeline,
@@ -119,43 +165,20 @@ def full_load_pipeline(
     audit: RunAudit | None = None,
 ) -> dict[str, int]:
     """Truncate+insert semantics (K2): overwrite each staging table."""
-    batch_id = str(uuid.uuid4())
-    t0 = time.time()
-    counts: dict[str, int] = {}
-    try:
-        raw = pipeline.extract(spark)
-        for suffix, df in _tables_of(pipeline.transform(raw)).items():
-            table = suffix or pipeline.name
-            keys = [k for k in pipeline.keys if k in df.columns]
-            out = stamp_etl_metadata(df, pipeline.name, batch_id,
-                                     pipeline.vn_naive_stamp)
-            # child tables without the change-order column fall back to the
-            # batch stamp (reference: only parent tables carry a guard,
-            # shopee_orders_loader.py:672-695 — children replace-on-match)
-            order_col = pipeline.order_col if pipeline.order_col in out.columns else "etl_updated_at"
-            write_table(spark, out, f"{staging_root}/{table}", keys, order_col,
-                        drop_null_key_rows=pipeline.drop_null_key_rows)
-            # an all-empty table writes no bucket partition, so there is
-            # nothing to read back — that IS zero rows; any other read
-            # error fails the load
-            path = f"{staging_root}/{table}"
-            counts[table] = (spark.read.parquet(path).count()
-                             if bucket_dirs(spark, path) else 0)
-        if audit:
-            audit.record({
-                "batch_id": batch_id, "source_name": pipeline.name,
-                "status": "SUCCESS", "records_loaded": sum(counts.values()),
-                "started_at": t0, "finished_at": time.time(),
-            })
-        return counts
-    except Exception as e:
-        if audit:
-            audit.record({
-                "batch_id": batch_id, "source_name": pipeline.name,
-                "status": "FAILED", "started_at": t0,
-                "finished_at": time.time(), "error": str(e)[:500],
-            })
-        raise
+
+    def overwrite(path, out, keys, order_col, guard_cols) -> int:
+        write_table(spark, out, path, keys, order_col,
+                    drop_null_key_rows=pipeline.drop_null_key_rows)
+        # an all-empty table writes no bucket partition, so there is
+        # nothing to read back — that IS zero rows; any other read
+        # error fails the load
+        return spark.read.parquet(path).count() if bucket_dirs(spark, path) else 0
+
+    with _audited_run(audit, pipeline.name) as (batch_id, fields):
+        counts = _load_tables(pipeline, pipeline.extract(spark), batch_id,
+                              staging_root, overwrite)
+        fields["records_loaded"] = sum(counts.values())
+    return counts
 
 
 def near_dup_pipeline(
@@ -197,10 +220,7 @@ def near_dup_pipeline(
 
     if method not in ("clusters", "fenced_pairs"):
         raise ValueError(f"unknown near-dup method {method!r}")
-    batch_id = str(uuid.uuid4())
-    t0 = time.time()
-    source = f"near_dup_{method}"
-    try:
+    with _audited_run(audit, f"near_dup_{method}", method=method) as (_, fields):
         if method == "clusters":
             near_dup_clusters(spark, sf_dir).write.mode("overwrite").parquet(
                 out_path
@@ -222,25 +242,10 @@ def near_dup_pipeline(
                 spark, sf_dir, methods=gate_methods
             ).collect()
             recall = float(gate[0]["recall"]) if gate[0]["recall"] is not None else None
-        if audit:
-            audit.record({
-                "batch_id": batch_id, "source_name": source,
-                "status": "SUCCESS", "records_loaded": n,
-                "started_at": t0, "finished_at": time.time(),
-                "fence_dropped_rows": dropped,
-                "method": method, "recall": recall,
-            })
-        return {"rows": n, "fence_dropped_rows": dropped,
-                "method": method, "recall": recall}
-    except Exception as e:
-        if audit:
-            audit.record({
-                "batch_id": batch_id, "source_name": source,
-                "status": "FAILED", "started_at": t0,
-                "finished_at": time.time(), "error": str(e)[:500],
-                "method": method,
-            })
-        raise
+        fields.update(records_loaded=n, fence_dropped_rows=dropped,
+                      recall=recall)
+    return {"rows": n, "fence_dropped_rows": dropped,
+            "method": method, "recall": recall}
 
 
 def incremental_pipeline(
@@ -252,43 +257,23 @@ def incremental_pipeline(
 ) -> dict[str, int]:
     """The 15-minute path: windowed change scan -> transform -> guarded
     upsert per table. Replays/overlapping windows are no-ops (ST3)."""
-    batch_id = str(uuid.uuid4())
-    t0 = time.time()
-    counts: dict[str, int] = {}
-    try:
-        raw = pipeline.extract(spark, window=window)
-        for suffix, df in _tables_of(pipeline.transform(raw)).items():
-            table = suffix or pipeline.name
-            keys = [k for k in pipeline.keys if k in df.columns]
-            out = stamp_etl_metadata(df, pipeline.name, batch_id,
-                                     pipeline.vn_naive_stamp)
-            order_col = pipeline.order_col if pipeline.order_col in out.columns else "etl_updated_at"
-            # One materialization per table: the count action populates the
-            # cache and the upsert's source side reads it back, instead of
-            # re-running the extract->transform lineage a second time.
-            out = out.persist()
-            try:
-                n = out.count()
-                if n:
-                    upsert(spark, out, f"{staging_root}/{table}", keys, order_col,
-                           [g for g in pipeline.guard_cols if g in df.columns],
-                           drop_null_key_rows=pipeline.drop_null_key_rows)
-            finally:
-                out.unpersist()
-            counts[table] = n
-        if audit:
-            audit.record({
-                "batch_id": batch_id, "source_name": pipeline.name,
-                "status": "SUCCESS", "records_extracted": sum(counts.values()),
-                "records_loaded": sum(counts.values()),
-                "started_at": t0, "finished_at": time.time(),
-            })
-        return counts
-    except Exception as e:
-        if audit:
-            audit.record({
-                "batch_id": batch_id, "source_name": pipeline.name,
-                "status": "FAILED", "started_at": t0,
-                "finished_at": time.time(), "error": str(e)[:500],
-            })
-        raise
+
+    def merge(path, out, keys, order_col, guard_cols) -> int:
+        # One materialization per table: the count action populates the
+        # cache and the upsert's source side reads it back, instead of
+        # re-running the extract->transform lineage a second time.
+        out = out.persist()
+        try:
+            n = out.count()
+            if n:
+                upsert(spark, out, path, keys, order_col, guard_cols,
+                       drop_null_key_rows=pipeline.drop_null_key_rows)
+            return n
+        finally:
+            out.unpersist()
+
+    with _audited_run(audit, pipeline.name) as (batch_id, fields):
+        counts = _load_tables(pipeline, pipeline.extract(spark, window=window),
+                              batch_id, staging_root, merge)
+        fields["records_extracted"] = fields["records_loaded"] = sum(counts.values())
+    return counts

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.upsert import upsert
+from .runner import start_batches
 
 
 def run_incremental_batch(
@@ -64,26 +65,17 @@ def incremental_upsert_stream(
     order_col: str,
     guard_cols: Sequence[str] = (),
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Structured Streaming driver: readStream source -> foreachBatch
-    keyed upsert. ``Trigger.AvailableNow`` drains what's there and stops —
-    the cron-equivalent; a processingTime trigger gives the continuous
-    15-minute cadence."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert(spark, batch_df, table_path, keys, order_col, guard_cols)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 minutes")
-    return writer.start()
+    keyed upsert. The availableNow trigger drains what is there and
+    stops; the 15-minute cadence is the scheduler re-running the drain,
+    as the reference's cron does."""
+    return start_batches(
+        stream,
+        lambda batch_df, _: upsert(spark, batch_df, table_path, keys,
+                                   order_col, guard_cols),
+        checkpoint_dir,
+    )
 
 
 def time_partitioned_append_stream(
@@ -92,7 +84,6 @@ def time_partitioned_append_stream(
     table_path: str,
     ts_col: str = "ts",
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Append-stream sink into the date-partitioned retention layout
     (operators/retention.py) — the event-firehose complement to the
@@ -107,23 +98,12 @@ def time_partitioned_append_stream(
     partition column is the standard remedy when the source replays."""
     from ..operators.retention import write_dated
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        write_dated(batch_df, table_path, ts_col, mode="append")
-
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 minutes")
-    return writer.start()
-
-
-
-
+    return start_batches(
+        stream,
+        lambda batch_df, _: write_dated(batch_df, table_path, ts_col,
+                                        mode="append"),
+        checkpoint_dir,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -184,7 +164,6 @@ def near_dup_index_stream(
     stream: DataFrame,
     work_dir: str,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
     compact_every: int = DEFAULT_COMPACT_EVERY,
 ):
     """Streaming maintenance of the near-dup cluster index: each
@@ -246,8 +225,6 @@ def near_dup_index_stream(
     store.warm()
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # No-silent-caps: the tier was pinned at stream start; growing a
         # corpus past its lsh_bits step with stale bits silently degrades
         # bucket occupancy forever. Detect and refuse instead (the count
@@ -308,11 +285,4 @@ def near_dup_index_stream(
         if store.latest_seq() - store.upto_seq >= compact_every:
             store.compact()
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 minutes")
-    return writer.start()
+    return start_batches(stream, apply_batch, checkpoint_dir)

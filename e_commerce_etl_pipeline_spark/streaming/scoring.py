@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.local_rows import local_rows
+from .runner import read_batches, start_batches, write_batch
 
 # OOV token share past which a batch flags retrain_due. 0.5 = the
 # majority of incoming tokens score the uninformative prior — the
@@ -49,28 +50,18 @@ from ..operators.local_rows import local_rows
 # the trained posterior.
 DEFAULT_OOV_ALARM = 0.5
 
-
-def _scores_root(work_dir: str) -> str:
-    return f"{work_dir.rstrip('/')}/quality_scores.parquet"
-
-
-def _audit_root(work_dir: str) -> str:
-    return f"{work_dir.rstrip('/')}/quality_stream_audit.parquet"
+SCORES, AUDIT = "quality_scores", "quality_stream_audit"
 
 
 def read_stream_scores(spark: SparkSession, work_dir: str) -> DataFrame:
     """All scored rows written so far, with their batch ids."""
-    return spark.read.option("basePath", _scores_root(work_dir)).parquet(
-        f"{_scores_root(work_dir)}/batch=*"
-    )
+    return read_batches(spark, work_dir, SCORES)
 
 
 def read_stream_audit(spark: SparkSession, work_dir: str) -> DataFrame:
     """One row per applied batch: n_docs, keep_frac, oov_frac,
     retrain_due."""
-    return spark.read.option("basePath", _audit_root(work_dir)).parquet(
-        f"{_audit_root(work_dir)}/batch=*"
-    )
+    return read_batches(spark, work_dir, AUDIT)
 
 
 def quality_score_stream(
@@ -80,7 +71,6 @@ def quality_score_stream(
     work_dir: str,
     checkpoint_dir: str | None = None,
     oov_alarm: float = DEFAULT_OOV_ALARM,
-    trigger_available_now: bool = True,
 ):
     """Score a document stream (doc_id, text, lang) with the classifier
     trained on ``corpus_dir``'s documents table; write per-batch scores
@@ -97,41 +87,33 @@ def quality_score_stream(
     weights.count()  # force the training job at stream start
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         scored = score_tf(
             batch_term_frequencies(batch_df), weights, batch_df
         ).localCheckpoint()  # one compute; scores + audit read the result
-        scored.write.mode("overwrite").parquet(
-            f"{_scores_root(work_dir)}/batch={batch_id}"
-        )
+        write_batch(scored, work_dir, SCORES, batch_id)
         stats = scored.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.col("predicted_keep").cast("long")).alias("n_keep"),
             F.sum("n_oov").alias("oov_tokens"),
             F.sum("n_words").alias("tokens"),
         ).collect()[0]
-        oov_frac = stats["oov_tokens"] / stats["tokens"]
+        # A non-empty batch can still yield ZERO tokens (whitespace-only or
+        # null texts): score_tf drops token-less docs, so every sum comes
+        # back NULL. Audit it as an explicit zero row, as bpe_token_stream
+        # does, instead of dividing by NULL and killing the stream.
+        n_docs, tokens = stats["n_docs"], stats["tokens"] or 0
+        oov_frac = stats["oov_tokens"] / tokens if tokens else 0.0
         audit = local_rows(
             spark,
             [(
-                stats["n_docs"],
-                stats["n_keep"] / stats["n_docs"],
+                n_docs,
+                stats["n_keep"] / n_docs if n_docs else 0.0,
                 oov_frac,
-                oov_frac > oov_alarm,
+                bool(tokens) and oov_frac > oov_alarm,
             )],
             "n_docs long, keep_frac double, oov_frac double, "
             "retrain_due boolean",
         )
-        audit.coalesce(1).write.mode("overwrite").parquet(
-            f"{_audit_root(work_dir)}/batch={batch_id}"
-        )
+        write_batch(audit.coalesce(1), work_dir, AUDIT, batch_id)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 minutes")
-    return writer.start()
+    return start_batches(stream, apply_batch, checkpoint_dir)

@@ -45,27 +45,25 @@ import sys
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .runner import (
+    batch_dir,
+    batch_root,
+    read_batches,
+    start_batches,
+    write_batch,
+)
 
-def _store_root(work_dir: str) -> str:
-    return f"{work_dir.rstrip('/')}/segment_store.parquet"
-
-
-def _docs_root(work_dir: str) -> str:
-    return f"{work_dir.rstrip('/')}/deduped_docs.parquet"
+STORE, DOCS = "segment_store", "deduped_docs"
 
 
 def read_deduped_docs(spark: SparkSession, work_dir: str) -> DataFrame:
     """All landed (rewritten) documents so far, with their batch ids."""
-    return spark.read.option("basePath", _docs_root(work_dir)).parquet(
-        f"{_docs_root(work_dir)}/batch=*"
-    )
+    return read_batches(spark, work_dir, DOCS)
 
 
 def read_segment_store(spark: SparkSession, work_dir: str) -> DataFrame:
     """Every segment hash the stream has ever landed (seg_h, batch)."""
-    return spark.read.option("basePath", _store_root(work_dir)).parquet(
-        f"{_store_root(work_dir)}/batch=*"
-    )
+    return read_batches(spark, work_dir, STORE)
 
 
 def span_dedup_stream(
@@ -73,7 +71,6 @@ def span_dedup_stream(
     stream: DataFrame,
     work_dir: str,
     checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
 ):
     """Land a document stream (doc_id, text, ...) with cross-batch
     exact-span dedup (module docstring)."""
@@ -85,15 +82,12 @@ def span_dedup_stream(
     )
     from ..operators import fsops
 
-    def _complete(path: str) -> bool:
-        return fsops.exists(f"{path}/_SUCCESS", spark)
+    def _complete(name: str, batch_id: int) -> bool:
+        return fsops.exists(f"{batch_dir(work_dir, name, batch_id)}/_SUCCESS",
+                            spark)
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        docs_dir = f"{_docs_root(work_dir)}/batch={batch_id}"
-        store_dir = f"{_store_root(work_dir)}/batch={batch_id}"
-        if _complete(docs_dir) and _complete(store_dir):
+        if _complete(DOCS, batch_id) and _complete(STORE, batch_id):
             print(
                 f"span_dedup_stream: batch {batch_id} already applied "
                 f"(both directories complete) — skipped",
@@ -105,23 +99,17 @@ def span_dedup_stream(
         # dedup a batch against its own half-written previous attempt)
         kept = keep_first_segments(segment_rows(tokenized_docs(batch_df)))
         kept = kept.withColumn("seg_h", F.md5(F.col("seg_text")))
-        if fsops.exists(_store_root(work_dir), spark):
+        if fsops.exists(batch_root(work_dir, STORE), spark):
             store = read_segment_store(spark, work_dir).filter(
                 F.col("batch") != batch_id
             )
             kept = kept.join(store, kept["seg_h"] == store["seg_h"],
                              "left_anti")
         kept = kept.localCheckpoint()  # one compute feeds both writes
-        reassemble_docs(
-            kept.select("doc_id", "seg_idx", "seg_text", "n_seg")
-        ).write.mode("overwrite").parquet(docs_dir)
-        kept.select("seg_h").write.mode("overwrite").parquet(store_dir)
+        write_batch(
+            reassemble_docs(kept.select("doc_id", "seg_idx", "seg_text", "n_seg")),
+            work_dir, DOCS, batch_id,
+        )
+        write_batch(kept.select("seg_h"), work_dir, STORE, batch_id)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 minutes")
-    return writer.start()
+    return start_batches(stream, apply_batch, checkpoint_dir)

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.local_rows import local_rows
+from .runner import read_batches, start_batches, write_batch
 
 # Unseen-word share past which a batch flags retrain_due: above this,
 # the tokenizer is char-splitting so much of the stream that its
@@ -45,28 +46,18 @@ from ..operators.local_rows import local_rows
 # the trained vocabulary.
 DEFAULT_FALLBACK_ALARM = 0.5
 
-
-def _counts_root(work_dir: str) -> str:
-    return f"{work_dir.rstrip('/')}/token_counts.parquet"
-
-
-def _audit_root(work_dir: str) -> str:
-    return f"{work_dir.rstrip('/')}/token_stream_audit.parquet"
+COUNTS, AUDIT = "token_counts", "token_stream_audit"
 
 
 def read_stream_token_counts(spark: SparkSession, work_dir: str) -> DataFrame:
     """All per-doc encoding stats written so far, with batch ids."""
-    return spark.read.option("basePath", _counts_root(work_dir)).parquet(
-        f"{_counts_root(work_dir)}/batch=*"
-    )
+    return read_batches(spark, work_dir, COUNTS)
 
 
 def read_token_stream_audit(spark: SparkSession, work_dir: str) -> DataFrame:
     """One row per applied batch: n_docs, tokens_bpe, tokens_char,
     unseen_word_frac, retrain_due."""
-    return spark.read.option("basePath", _audit_root(work_dir)).parquet(
-        f"{_audit_root(work_dir)}/batch=*"
-    )
+    return read_batches(spark, work_dir, AUDIT)
 
 
 def _encode_batch(batch_df: DataFrame, vocab: DataFrame) -> DataFrame:
@@ -98,7 +89,6 @@ def bpe_token_stream(
     work_dir: str,
     checkpoint_dir: str | None = None,
     fallback_alarm: float = DEFAULT_FALLBACK_ALARM,
-    trigger_available_now: bool = True,
 ):
     """Encode a document stream (doc_id, text, ...) with the BPE state
     trained on ``corpus_dir``'s documents table; write per-batch token
@@ -111,12 +101,8 @@ def bpe_token_stream(
     vocab.count()  # force the training job at stream start
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         counts = _encode_batch(batch_df, vocab).localCheckpoint()
-        counts.write.mode("overwrite").parquet(
-            f"{_counts_root(work_dir)}/batch={batch_id}"
-        )
+        write_batch(counts, work_dir, COUNTS, batch_id)
         stats = counts.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens_bpe").alias("tokens_bpe"),
@@ -125,9 +111,9 @@ def bpe_token_stream(
             F.sum("n_words").alias("words"),
         ).collect()[0]
         # A non-empty batch can still yield ZERO words (whitespace-only or
-        # null texts pass isEmpty() but explode to no rows) — the sums come
-        # back NULL and the divide / int() below would kill the stream on
-        # one bad batch. Audit it as an explicit zero-token row instead.
+        # null texts explode to no rows) — the sums come back NULL and the
+        # divide / int() below would kill the stream on one bad batch.
+        # Audit it as an explicit zero-token row instead.
         words = stats["words"] or 0
         unseen_frac = (stats["unseen"] or 0) / words if words else 0.0
         audit = local_rows(
@@ -142,15 +128,6 @@ def bpe_token_stream(
             "n_docs long, tokens_bpe long, tokens_char long, "
             "unseen_word_frac double, retrain_due boolean",
         )
-        audit.coalesce(1).write.mode("overwrite").parquet(
-            f"{_audit_root(work_dir)}/batch={batch_id}"
-        )
+        write_batch(audit.coalesce(1), work_dir, AUDIT, batch_id)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="15 minutes")
-    return writer.start()
+    return start_batches(stream, apply_batch, checkpoint_dir)

@@ -245,6 +245,39 @@ def test_full_load_readback_error_fails_the_run(spark, tmp_path, monkeypatch):
         ("FAILED", None), ("SUCCESS", 0)]
 
 
+def _unreachable(*_args, **_kwargs):
+    raise RuntimeError("source unreachable")
+
+
+@pytest.mark.parametrize("pipeline", ["incremental", "near_dup"])
+def test_failed_run_is_audited_and_reraised(spark, tmp_path, monkeypatch, pipeline):
+    """A pipeline run that fails re-raises, and the audit holds exactly one
+    FAILED row with the error text and both stamps."""
+    from e_commerce_etl_pipeline_spark.extensions import similarity
+    from e_commerce_etl_pipeline_spark.pipelines.etl import near_dup_pipeline
+
+    audit = RunAudit(spark, str(tmp_path / "audit"))
+    if pipeline == "incremental":
+        pipe = SourcePipeline(name="down_src", extract=_unreachable,
+                              transform=lambda df: df, keys=["order_id"],
+                              order_col="update_time")
+        source, method = "down_src", None
+        with pytest.raises(RuntimeError, match="source unreachable"):
+            incremental_pipeline(spark, pipe, str(tmp_path / "staging"),
+                                 window=(0, 10), audit=audit)
+    else:
+        monkeypatch.setattr(similarity, "near_dup_clusters", _unreachable)
+        source, method = "near_dup_clusters", "clusters"
+        with pytest.raises(RuntimeError, match="source unreachable"):
+            near_dup_pipeline(spark, str(tmp_path / "sf"),
+                              str(tmp_path / "out"), audit=audit)
+    [run] = audit.runs().collect()
+    assert (run.status, run.source_name, run.method) == ("FAILED", source, method)
+    assert run.error == "source unreachable"
+    assert run.records_loaded is None and run.records_extracted is None
+    assert run.started_at is not None and run.finished_at >= run.started_at
+
+
 def test_incremental_replay_noop(spark, tmp_path):
     staging = str(tmp_path / "staging")
     src = _tiktok_fake_source(ORDERS)

@@ -118,3 +118,24 @@ def test_structured_streaming_foreachbatch_upsert(spark, tmp_path):
     time.sleep(0.5)
     out2 = {r.order_id: r.status for r in read_upsert_table(spark, table).collect()}
     assert out2 == {"o1": "shipped", "o2": "created"}  # no regression on o2
+
+
+def test_empty_micro_batch_is_skipped(spark, tmp_path):
+    """The stream runner never hands a zero-row micro-batch to the
+    driver: a zero-row file drained through incremental_upsert_stream
+    runs a batch but creates no table."""
+    src_dir = tmp_path / "incoming"
+    spark.createDataFrame([], SCHEMA).coalesce(1).write.parquet(str(src_dir / "b0"))
+    table = tmp_path / "tbl"
+
+    stream = spark.readStream.schema(SCHEMA).option(
+        "recursiveFileLookup", "true"
+    ).parquet(str(src_dir))
+    q = incremental_upsert_stream(
+        spark, stream, str(table), ["order_id"], "update_time",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [0]
+    assert q.recentProgress[0]["numInputRows"] == 0
+    assert not table.exists()

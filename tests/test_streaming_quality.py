@@ -87,6 +87,30 @@ def test_stream_scores_match_batch_kernel_and_drift_flags(spark, tmp_path):
     assert audit[1]["oov_frac"] == 1.0 and audit[1]["retrain_due"]
 
 
+def test_zero_token_batch_audited_not_fatal(spark, tmp_path):
+    """A non-empty batch whose documents have ZERO tokens (whitespace-only
+    / null texts) must write an explicit zero audit row instead of
+    killing the stream on NULL sums — and the stream must keep
+    processing later batches."""
+    corpus_dir = _write_corpus(spark, tmp_path)
+    (v1,) = _ids("val", 1)
+    source_dir = _stage_batches(spark, tmp_path, [
+        [(300, "   ", "en"), (301, None, "en")],   # zero tokens
+        [(v1, "the the the", "en")],               # normal batch after it
+    ])
+    work_dir = str(tmp_path / "work")
+    _run(spark, source_dir, corpus_dir, work_dir, str(tmp_path / "ckpt"))
+
+    audit = {r["batch"]: r for r in read_stream_audit(spark, work_dir).collect()}
+    assert sorted(audit) == [0, 1], "stream died on the zero-token batch"
+    z = audit[0]
+    assert (z["n_docs"], z["keep_frac"], z["oov_frac"]) == (0, 0.0, 0.0)
+    assert not z["retrain_due"]
+    assert audit[1]["n_docs"] == 1 and audit[1]["keep_frac"] == 1.0
+    assert not audit[1]["retrain_due"]
+    assert [r["doc_id"] for r in read_stream_scores(spark, work_dir).collect()] == [v1]
+
+
 def test_stream_replay_converges(spark, tmp_path):
     """Restarting the stream on the same checkpoint must process
     nothing new (exactly-once effect) — and a wiped checkpoint replays

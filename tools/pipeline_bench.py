@@ -3,7 +3,8 @@
 
 Generates N deterministic nested TikTok-shaped orders (seed fixed),
 lands them as JSONL, runs the full transform + bucketed staging write,
-and reports orders/sec + rows/sec. For context: the reference transforms
+and reports orders/sec + rows/sec, stamped with bench.py's
+``calib_sec``, ``cpus`` and ``nproc``. For context: the reference transforms
 in 50-order pandas chunks and MERGEs 20-row batches over ODBC
 (SURVEY.md §6) — its full-load path is bounded by those chunk loops.
 
@@ -21,6 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import host_stamps  # noqa: E402
 from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 from e_commerce_etl_pipeline_spark.schemas import TIKTOK_ORDER_SCHEMA  # noqa: E402
 from e_commerce_etl_pipeline_spark.transforms import transform_tiktok_orders  # noqa: E402
@@ -95,6 +97,8 @@ def main() -> None:
         "orders_per_sec": round(n / etl_s),
         "rows_per_sec": round(rows / etl_s),
         "reconciliation_ok": bool(v["orders_match"] and v["items_match"]),
+        # measured after the timed ETL, so it stays a cold-start timing
+        **host_stamps(spark),
     }))
 
 

@@ -24,7 +24,8 @@ Workload: the sf events table plays the landed source.
                 not the source parquet).
 
 Prints ONE JSON line with per-stage seconds, rows, rows/sec, and
-over_budget flags; optional argv[2] writes it to a file. The audit table
+over_budget flags, stamped with bench.py's ``calib_sec``, ``cpus`` and
+``nproc``; optional argv[2] writes it to a file. The audit table
 is included so the run itself demonstrates ST5 bookkeeping.
 
 Usage: python tools/pipeline_e2e_bench.py [SF_DIR] [OUT_JSON]
@@ -43,6 +44,8 @@ from datetime import timedelta
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from bench import host_stamps  # noqa: E402
 
 from e_commerce_etl_pipeline_spark.pipelines.etl import (  # noqa: E402
     RunAudit,
@@ -184,6 +187,8 @@ def main() -> None:
         "metric": "pipeline_e2e",
         "sf_dir": sf_dir,
         "budget_s": BUDGET_S,
+        # measured after the timed stages, so they stay cold-start timings
+        **host_stamps(spark),
         "stages": stages,
         "total_seconds": round(sum(s["seconds"] for s in stages.values()), 3),
         "any_over_budget": any(s["over_budget"] for s in stages.values()),
