@@ -10,6 +10,12 @@ per-group memory, partition-parallel across groups, no driver
 involvement. Reach for it only when a built-in aggregate genuinely can't
 express the semantics; for exact median Spark's ``median`` exists and is
 ~10× faster, which is why the headline bench runs the native form.
+
+This is one of two modules that still import pandas, on purpose: every
+other Python kernel runs through ``arrow_kernel.arrow_map``, but
+``user_value_median_pandas`` exists to keep the grouped-pandas plumbing
+oracle-checked, and perfbench's ``queries`` workload runs it under that
+registry name.
 """
 
 from __future__ import annotations

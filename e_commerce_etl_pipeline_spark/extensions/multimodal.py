@@ -1,26 +1,25 @@
 """Multimodal columns: opaque binary payloads + typed metadata, with
-decode / feature-extract / frame-sample as Arrow-batched Pandas
-transforms over mapInPandas.
+decode and resize as Arrow kernels (``arrow_kernel.arrow_map``) and frame
+sampling as pure column ops.
 
 Real here: the schema (binary + metadata struct), partitioning-safe
-mapInPandas plumbing, Arrow batch shapes, and deterministic byte-level
-features. STUBBED (clearly): actual image/audio codecs — the container
-has no PIL/ffmpeg, so ``decode_image``/``decode_audio`` raise
-NotImplementedError unless given the deterministic fake codec, which
-tests and the query use. On a real cluster you'd swap ``_fake_decode``
-for PIL/torchvision inside the same mapInPandas shape.
+Arrow kernel plumbing, Arrow batch shapes, the NULL-payload policy and
+deterministic byte-level features. STUBBED (clearly): actual
+image/audio codecs — the container has no PIL/ffmpeg, so
+``decode_image``/``decode_audio`` raise NotImplementedError unless given
+the deterministic fake codec, which tests and the query use. On a real
+cluster you'd swap ``_fake_decode`` for PIL/torchvision inside the same
+Arrow kernel shape.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.queries import load_table
+from .arrow_kernel import arrow_map
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType()),
@@ -79,49 +78,42 @@ FEATURE_SCHEMA = T.StructType([
 
 
 def extract_features(media: DataFrame, codec=_fake_decode) -> DataFrame:
-    """Arrow-batched feature extraction. mapInPandas keeps the operator
-    partition-parallel: each task decodes its own batch iterator, nothing
-    collects to the driver. The default fake codec runs a vectorized
-    numpy path (r13, guide §4.3: the per-byte Python ``sum(payload)``
-    loop was the kernel's cost — same exact integers, byte values sum in
-    int64 with no overflow); a caller-supplied codec keeps the per-row
-    shape, since a real decoder owns its own batching."""
+    """Arrow-batched feature extraction. The Arrow kernel keeps the
+    operator partition-parallel: each task decodes its own batch
+    iterator, nothing collects to the driver. The default fake codec
+    runs a vectorized numpy path (r13, guide §4.3: the per-byte Python
+    ``sum(payload)`` loop was the kernel's cost — same exact integers,
+    byte values sum in int64 with no overflow); a caller-supplied codec
+    keeps the per-row shape, since a real decoder owns its own batching.
+    A NULL payload yields NULL features (the SQL form's answer for a
+    NULL text) instead of failing the whole batch."""
 
     import numpy as np
 
-    def np_features(pays: pd.Series) -> dict:
+    def np_features(pays: list[bytes]) -> dict:
         arrs = [np.frombuffer(p, dtype=np.uint8) for p in pays]
-        k = len(arrs)
         return {
-            "n_bytes": np.fromiter(
-                (a.size for a in arrs), dtype=np.int64, count=k),
-            "sum_bytes": np.fromiter(
-                (int(a.sum()) for a in arrs), dtype=np.int64, count=k),
-            "max_byte": np.fromiter(
-                (int(a.max()) if a.size else 0 for a in arrs),
-                dtype=np.int64, count=k),
+            "n_bytes": [a.size for a in arrs],
+            "sum_bytes": [int(a.sum()) for a in arrs],
+            "max_byte": [int(a.max()) if a.size else 0 for a in arrs],
         }
 
-    def codec_features(pays: pd.Series) -> dict:
+    def codec_features(pays: list[bytes]) -> dict:
         feats = [codec(p) for p in pays]
         return {c: [f[c] for f in feats]
                 for c in ("n_bytes", "sum_bytes", "max_byte")}
 
     features = np_features if codec is _fake_decode else codec_features
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # a NULL payload yields NULL features (the SQL form's answer
-            # for a NULL text) instead of failing the whole batch
-            pays = pdf["payload"].dropna()
-            out = pd.DataFrame(
-                features(pays), index=pays.index, dtype="Int64"
-            ).reindex(pdf.index)
-            out.insert(0, "doc_id", pdf["doc_id"].values)
-            yield out
+    def run(batches):
+        for b in batches:
+            yield {"doc_id": b.column("doc_id"),
+                   **features(b.column("payload").to_pylist())}
 
-    return media.select("doc_id", "payload").mapInPandas(
-        run, FEATURE_SCHEMA)
+    return arrow_map(
+        media, ("doc_id", "payload"), run, FEATURE_SCHEMA,
+        null_rows={"n_bytes": None, "sum_bytes": None, "max_byte": None},
+    )
 
 
 RESIZED_SCHEMA = T.StructType([
@@ -150,25 +142,30 @@ def _fake_resize(payload: bytes, width: int, height: int) -> bytes:
 
 def resize_images(media: DataFrame, width: int = 32, height: int = 32,
                   resizer=_fake_resize) -> DataFrame:
-    """Arrow-batched resize: one mapInPandas pass re-emits (payload, meta)
-    with the target dimensions — the exact plumbing (schema, batch shape,
-    partition-parallelism) a real thumbnailing stage uses; only the
-    ``resizer`` kernel is a stand-in."""
+    """Arrow-batched resize: one Arrow kernel pass re-emits (payload,
+    meta) with the target dimensions — the exact plumbing (schema, batch
+    shape, partition-parallelism) a real thumbnailing stage uses; only
+    the ``resizer`` kernel is a stand-in. A NULL payload stays NULL, with
+    NULL meta."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [resizer(p, width, height) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "doc_id": pdf["doc_id"].values,
+    def run(batches):
+        for b in batches:
+            resized = [resizer(p, width, height)
+                       for p in b.column("payload").to_pylist()]
+            yield {
+                "doc_id": b.column("doc_id"),
                 "payload": resized,
                 "meta": [
                     {"n_bytes": len(p), "width": width, "height": height,
                      "codec": "fake-v1-resized"}
                     for p in resized
                 ],
-            })
+            }
 
-    return media.select("doc_id", "payload").mapInPandas(run, RESIZED_SCHEMA)
+    return arrow_map(
+        media, ("doc_id", "payload"), run, RESIZED_SCHEMA,
+        null_rows={"payload": None, "meta": None},
+    )
 
 
 def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
@@ -191,7 +188,7 @@ def sample_frames(media: DataFrame, n_frames: int = 4) -> DataFrame:
 
 
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end: documents -> binary media -> mapInPandas features.
+    """End-to-end: documents -> binary media -> Arrow kernel features.
     Oracle: byte sums are reproducible in SQL because the fake payload is
     the utf-8 text (ascii in testdata)."""
     docs = load_table(spark, sf_dir, "documents")

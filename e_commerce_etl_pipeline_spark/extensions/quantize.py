@@ -82,27 +82,19 @@ def quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from ..operators import index_store
-    from .similarity import _emb_table, _topk_scored_arrow
+    from .arrow_kernel import vectors
+    from .similarity import _collect_queries, _emb_table, _topk_scored_arrow
 
     qv = _quantized(spark, sf_dir)
 
     # bounded (≤ N_QUERIES) query set, memoized per table fingerprint
     # like similarity._query_vectors (r13): repeat invocations re-ran
     # the identical quantize+collect job otherwise
-    def _collect_q():
-        rows = qv.filter(F.col("vec_id") < N_QUERIES).select(
-            "vec_id", "q", "qn"
-        ).collect()
-        if not rows:
-            return None
-        return (
-            np.array([r[0] for r in rows], dtype=np.int64),
-            np.array([list(r[1]) for r in rows], dtype=np.int64),
-            np.array([r[2] for r in rows], dtype=np.int64),
-        )
-
     q = index_store.cached_value(
-        spark, _emb_table(sf_dir), "quantized_query_vectors", _collect_q
+        spark, _emb_table(sf_dir), "quantized_query_vectors",
+        lambda: _collect_queries(
+            qv.filter(F.col("vec_id") < N_QUERIES), ("vec_id", "q", "qn")
+        ),
     )
     if q is None:
         return spark.createDataFrame(
@@ -110,17 +102,16 @@ def quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     qids, qmat, qqn = q
 
-    def score_batch(pdf):
-        vmat = np.stack(pdf["q"].to_numpy()).astype(np.int64)
-        qn = pdf["qn"].to_numpy(dtype=np.int64)
+    def score_batch(batch):
+        vmat = vectors(batch.column("q")).astype(np.int64)
+        qn = batch.column("qn").to_numpy()
         dots = qmat @ vmat.T  # exact int64
         return dots.astype(np.float64) / np.sqrt(
             (qqn[:, None] * qn[None, :]).astype(np.float64)
         )
 
     scored = _topk_scored_arrow(
-        qv.select("vec_id", "q", "qn"), qids, score_batch, TOP_K,
-        score_col="qcos",
+        qv, ("vec_id", "q", "qn"), qids, score_batch, TOP_K, score_col="qcos",
     )
     w = Window.partitionBy("qid").orderBy(F.col("qcos").desc(), F.col("neighbor_id"))
     return (

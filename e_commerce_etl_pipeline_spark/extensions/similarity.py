@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..operators import index_store
 from ..plans.queries import load_table
+from .arrow_kernel import arrow_map, frame, vectors
 
 DIM = 64
 N_QUERIES = 50  # vec_id < 50 are the query vectors
@@ -148,20 +149,17 @@ def corpus_count(spark: SparkSession, sf_dir: str) -> int:
     )
 
 
-def _collect_queries(df: DataFrame, id_col: str = "vec_id"):
-    """Collect a BOUNDED query/sample vector set to the driver as numpy
-    arrays (ids, matrix, norms) — the same bounded-metadata class as the
-    1,024-row centroid collect. Caller guarantees the row bound (≤
-    N_QUERIES / N_ND_SAMPLE)."""
-    import numpy as np
-
-    rows = df.select(id_col, "v", "norm").collect()
-    if not rows:
+def _collect_queries(df: DataFrame, cols=("vec_id", "v", "norm")):
+    """Collect a BOUNDED query/sample vector set — the (id, vector,
+    norm) ``cols`` of ``df`` — to the driver as numpy arrays (ids,
+    matrix, norms), through Arrow and :func:`vectors`. The same
+    bounded-metadata class as the 1,024-row centroid collect. Caller
+    guarantees the row bound (≤ N_QUERIES / N_ND_SAMPLE)."""
+    t = df.select(*cols).toArrow().combine_chunks()
+    if not t.num_rows:
         return None
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    norms = np.array([r[2] for r in rows], dtype=np.float64)
-    return ids, mat, norms
+    ids, mat, norms = (c.chunk(0) for c in t.columns)
+    return ids.to_numpy(), vectors(mat), norms.to_numpy()
 
 
 def _query_vectors(spark: SparkSession, sf_dir: str):
@@ -180,7 +178,7 @@ def _query_vectors(spark: SparkSession, sf_dir: str):
     )
 
 
-def _query_scores(qmat, qnorms, pdf):
+def _query_scores(qmat, qnorms, batch):
     """(n_queries × batch) cosine matrix, bit-identical to the JVM fold:
     the dim loop accumulates ``acc += q_i · v_i`` strictly left to right
     (numpy multiply-then-add per element, no reassociation/FMA — the
@@ -190,20 +188,21 @@ def _query_scores(qmat, qnorms, pdf):
     from with_norm — never recomputed here, so their bits match too."""
     import numpy as np
 
-    vmat = np.stack(pdf["v"].to_numpy())
-    norms = pdf["norm"].to_numpy(dtype=np.float64)
-    acc = np.zeros((qmat.shape[0], len(pdf)))
+    vmat = vectors(batch.column("v"))
+    norms = batch.column("norm").to_numpy()
+    acc = np.zeros((qmat.shape[0], batch.num_rows))
     for i in range(qmat.shape[1]):
         acc += qmat[:, i, None] * vmat[None, :, i]
     return acc / (qnorms[:, None] * norms[None, :])
 
 
 def _topk_scored_arrow(
-    part: DataFrame, qids, score_batch, k, score_col: str = "cos"
+    corpus: DataFrame, cols, qids, score_batch, k, score_col: str = "cos"
 ) -> DataFrame:
     """(qid, neighbor_id, <score_col>) candidates for the global
-    per-query top-k: ONE Arrow pass scores every query×row pair
-    vectorized (guide §4.2 — ``score_batch(pdf)`` returns the
+    per-query top-k: ONE Arrow pass over ``corpus``'s ``cols`` (a
+    ``vec_id`` plus what ``score_batch`` reads) scores every query×row
+    pair vectorized (guide §4.2 — ``score_batch(batch)`` returns the
     n_queries × batch score matrix) and keeps a running top-k per query
     PER TASK, so only ≤ n_queries·k rows leave each task — the former
     BroadcastNestedLoopJoin shipped every scored pair (n_queries ×
@@ -211,20 +210,18 @@ def _topk_scored_arrow(
     aggregate before you shuffle). Partition top-k is exact: the global
     top-k is a subset of the union of per-task top-ks under the
     identical (score desc, neighbor_id asc) order the final window
-    uses. Executor state is n_queries·(k + batch) doubles — bounded."""
+    uses. Executor state is n_queries·(k + batch) doubles — bounded.
+    A row with a NULL input is never a candidate."""
     import numpy as np
-    import pandas as pd
 
     nq = len(qids)
 
     def gen(batches):
         cur_cos = [None] * nq
         cur_nid = [None] * nq
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cos = score_batch(pdf)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        for b in batches:
+            cos = score_batch(b)
+            ids = b.column("vec_id").to_numpy()
             for qi in range(nq):
                 valid = ids != qids[qi]  # self-pair exclusion
                 c, n = cos[qi][valid], ids[valid]
@@ -237,21 +234,16 @@ def _topk_scored_arrow(
                     sel = np.lexsort((n, -c))[:k]
                     c, n = c[sel], n[sel]
                 cur_cos[qi], cur_nid[qi] = c, n
-        out = [
-            (np.full(len(cur_nid[qi]), qids[qi], dtype=np.int64),
-             cur_nid[qi], cur_cos[qi])
-            for qi in range(nq)
-            if cur_nid[qi] is not None and len(cur_nid[qi])
-        ]
-        if out:
-            yield pd.DataFrame({
-                "qid": np.concatenate([o[0] for o in out]),
-                "neighbor_id": np.concatenate([o[1] for o in out]),
-                score_col: np.concatenate([o[2] for o in out]),
-            })
+        done = [qi for qi in range(nq) if cur_nid[qi] is not None]
+        if done:
+            yield {
+                "qid": np.repeat(qids[done], [len(cur_nid[qi]) for qi in done]),
+                "neighbor_id": np.concatenate([cur_nid[qi] for qi in done]),
+                score_col: np.concatenate([cur_cos[qi] for qi in done]),
+            }
 
-    return part.mapInPandas(
-        gen, f"qid long, neighbor_id long, {score_col} double"
+    return arrow_map(
+        corpus, cols, gen, f"qid long, neighbor_id long, {score_col} double"
     )
 
 
@@ -265,24 +257,20 @@ def _threshold_pairs_arrow(
     the interpreted JVM fold. Bit-identical doubles (see _query_scores)
     against the same threshold → identical pair set."""
     import numpy as np
-    import pandas as pd
 
     def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            cos = _query_scores(smat, snorms, pdf)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+        for b in batches:
+            cos = _query_scores(smat, snorms, b)
+            ids = b.column("vec_id").to_numpy()
             sel = (cos >= threshold) & (ids[None, :] != sids[:, None])
             qi, j = np.nonzero(sel)
-            if len(qi):
-                yield pd.DataFrame({
-                    "vec_a": np.minimum(sids[qi], ids[j]),
-                    "vec_b": np.maximum(sids[qi], ids[j]),
-                })
+            yield {
+                "vec_a": np.minimum(sids[qi], ids[j]),
+                "vec_b": np.maximum(sids[qi], ids[j]),
+            }
 
-    return corpus.select("vec_id", "v", "norm").mapInPandas(
-        gen, "vec_a long, vec_b long"
+    return arrow_map(
+        corpus, ("vec_id", "v", "norm"), gen, "vec_a long, vec_b long"
     )
 
 
@@ -295,8 +283,8 @@ def brute_force_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     qids, qmat, qnorms = q
     scored = _topk_scored_arrow(
-        emb.select("vec_id", "v", "norm"), qids,
-        lambda pdf: _query_scores(qmat, qnorms, pdf), TOP_K,
+        emb, ("vec_id", "v", "norm"), qids,
+        lambda b: _query_scores(qmat, qnorms, b), TOP_K,
     )
     # final exact ranking over ≤ n_queries·k·n_tasks candidate rows —
     # the only exchange left in the plan (r12: was a full-width window
@@ -757,22 +745,19 @@ def _bucket_pairs_arrow(corpus: DataFrame, threshold: float) -> DataFrame:
     oracle — see _query_scores). Memory is bounded per batch: the only
     rows carried across Arrow batches are the current (last) bucket
     run, ≤ the caller's fence cap; per-dim gathers avoid materializing
-    pair-sized vector copies."""
+    pair-sized vector copies. A row with a NULL input pairs with none."""
     import numpy as np
-    import pandas as pd
 
+    cols = ("bucket", "vec_id", "v", "norm")
     part = corpus.repartition(F.col("bucket")).sortWithinPartitions(
         "bucket", "vec_id"
     )
 
-    def _emit(pdf):
-        m = len(pdf)
+    def _emit(f):
+        buckets, ids, vmat, norms = (f[c] for c in cols)
+        m = len(ids)
         if m < 2:
-            return None
-        buckets = pdf["bucket"].to_numpy()
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        vmat = np.stack(pdf["v"].to_numpy())
-        norms = pdf["norm"].to_numpy(dtype=np.float64)
+            return
         chg = np.ones(m, dtype=bool)
         chg[1:] = buckets[1:] != buckets[:-1]
         starts = np.flatnonzero(chg)
@@ -786,7 +771,7 @@ def _bucket_pairs_arrow(corpus: DataFrame, threshold: float) -> DataFrame:
             ii_all.append(ii + s)
             jj_all.append(jj + s)
         if not ii_all:
-            return None
+            return
         ii = np.concatenate(ii_all)
         jj = np.concatenate(jj_all)
         acc = np.zeros(len(ii))
@@ -794,37 +779,26 @@ def _bucket_pairs_arrow(corpus: DataFrame, threshold: float) -> DataFrame:
             acc += vmat[ii, i] * vmat[jj, i]
         cos = acc / (norms[ii] * norms[jj])
         sel = cos >= threshold
-        if not sel.any():
-            return None
-        return pd.DataFrame({
-            "vec_a": ids[ii[sel]], "vec_b": ids[jj[sel]],
-        })
+        yield {"vec_a": ids[ii[sel]], "vec_b": ids[jj[sel]]}
 
     def gen(batches):
         carry = None
-        for new in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, new], ignore_index=True)
-            else:
-                pdf = new
-            m = len(pdf)
-            if not m:
-                continue
-            buckets = pdf["bucket"].to_numpy()
+        for b in batches:
+            f = frame(b, cols)
+            if carry is not None:
+                f = {c: np.concatenate([carry[c], f[c]]) for c in cols}
+            buckets = f["bucket"]
+            m = len(buckets)
             neq = np.flatnonzero(buckets != buckets[m - 1])
             last_start = int(neq[-1]) + 1 if len(neq) else 0
-            # .copy(): an iloc slice is a VIEW pinning the whole frame
-            carry = pdf.iloc[last_start:].copy()
+            # .copy(): a slice is a VIEW pinning the whole frame
+            carry = {c: f[c][last_start:].copy() for c in cols}
             if last_start:
-                out = _emit(pdf.iloc[:last_start])
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _emit(carry)
-            if out is not None:
-                yield out
+                yield from _emit({c: f[c][:last_start] for c in cols})
+        if carry is not None:
+            yield from _emit(carry)
 
-    return part.mapInPandas(gen, "vec_a long, vec_b long")
+    return arrow_map(part, cols, gen, "vec_a long, vec_b long")
 
 
 def embedding_near_dup_pairs(
@@ -947,36 +921,35 @@ def chain_edges_arrow(
     rode for free — guide §2.4) — skip this function's own repartition
     and only sort within partitions; the kernel's correctness needs
     exactly group-locality + the sort, nothing about which partition a
-    group landed in."""
+    group landed in. A row with a NULL input is dropped before the
+    chain order, so it takes no chain slot."""
     import numpy as np
-    import pandas as pd
 
-    part = keyed.select("vec_id", "v", "norm", *key_cols, "__sig", "__proj")
+    cols = ("vec_id", "v", "norm", *key_cols, "__sig", "__proj")
+    part = keyed.select(*cols)
     if not pre_partitioned:
         part = part.repartition(*[F.col(c) for c in key_cols])
     part = part.sortWithinPartitions(*key_cols, "__sig", "__proj", "vec_id")
+    used = ("vec_id", "v", "norm", *key_cols)
 
     def gen(batches):
         carry = None  # previous combined frame's last ≤W rows
         peak = 0
-        for new in batches:
-            if carry is not None and len(carry):
-                p = len(carry)
-                pdf = pd.concat([carry, new], ignore_index=True)
-            else:
-                p = 0
-                pdf = new
-            m = len(pdf)
+        for b in batches:
+            f = frame(b, used)
+            p = 0
+            if carry is not None:
+                p = len(carry["vec_id"])
+                f = {c: np.concatenate([carry[c], f[c]]) for c in used}
+            m = len(f["vec_id"])
             peak = max(peak, m)
-            # .copy(): an iloc tail is a VIEW holding the whole combined
+            # .copy(): a tail slice is a VIEW holding the whole combined
             # frame alive — copying is what makes the bound real
-            carry = pdf.iloc[max(0, m - w):].copy()
+            carry = {c: f[c][max(0, m - w):].copy() for c in used}
             if m < 2:
                 continue
-            v_mat = np.stack(pdf["v"].to_numpy())
-            norms = pdf["norm"].to_numpy(dtype=np.float64)
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            keys = [pdf[c].to_numpy() for c in key_cols]
+            v_mat, norms, ids = f["v"], f["norm"], f["vec_id"]
+            keys = [f[c] for c in key_cols]
             # occupancy cap: no pair can span a key-group boundary, so
             # widths beyond the largest group in THIS frame do nothing —
             # skip them (what makes a wide pass-2 width free on corpora
@@ -1012,10 +985,10 @@ def chain_edges_arrow(
                     src_all.append(ids[:-k][sel])
                     dst_all.append(ids[k:][sel])
             if src_all:
-                yield pd.DataFrame({
+                yield {
                     "src": np.concatenate(src_all),
                     "dst": np.concatenate(dst_all),
-                })
+                }
         if frame_probe is not None and peak:
             import os
             import uuid
@@ -1025,7 +998,7 @@ def chain_edges_arrow(
             ) as fh:
                 fh.write(str(peak))
 
-    return part.mapInPandas(gen, "src long, dst long")
+    return arrow_map(part, cols, gen, "src long, dst long")
 
 
 def nd_keyed_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1677,7 +1650,7 @@ def _assign_nearest(emb: DataFrame, cents: DataFrame) -> DataFrame:
     because per-pair higher-order-function evaluation is interpreted
     and the expanded chain's per-element array reads don't pipeline.
     The n×K similarity matrix is the one kernel in this engine that is
-    pure dense arithmetic, so it runs in mapInPandas over numpy
+    pure dense arithmetic, so it runs as an Arrow kernel over numpy
     (the brief's sanctioned escape hatch): ~2 s for the same pass.
 
     Exactness is preserved by construction, not hoped for: the dot is
@@ -1696,9 +1669,9 @@ def _assign_nearest(emb: DataFrame, cents: DataFrame) -> DataFrame:
     MAX_CELLS (≤1024 rows), an index-build-sized collect, and shipped
     to executors inside the UDF closure. Scale shape: one Arrow pass
     over the corpus, no joined intermediate, no shuffle at all until
-    the caller aggregates. Returns (vec_id, v, norm, cell)."""
+    the caller aggregates. Returns (vec_id, v, norm, cell); a row with
+    a NULL input has no nearest cell and is dropped."""
     import numpy as np
-    import pandas as pd
 
     rows = cents.select("cell", "cv", "cnorm").collect()
     order = sorted(range(len(rows)), key=lambda i: rows[i]["cell"])
@@ -1706,27 +1679,23 @@ def _assign_nearest(emb: DataFrame, cents: DataFrame) -> DataFrame:
     c_mat = np.array([rows[i]["cv"] for i in order], dtype=np.float64)
     cn_np = np.array([rows[i]["cnorm"] for i in order], dtype=np.float64)
 
+    cols = ("vec_id", "v", "norm")
+
     def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v_mat = np.stack(pdf["v"].to_numpy())          # b × DIM
-            norms = pdf["norm"].to_numpy(dtype=np.float64)  # b
-            acc = np.zeros((len(pdf), c_mat.shape[0]))      # b × K
+        for b in batches:
+            v_mat = vectors(b.column("v"))                  # b × DIM
+            norms = b.column("norm").to_numpy()             # b
+            acc = np.zeros((b.num_rows, c_mat.shape[0]))    # b × K
             for i in range(c_mat.shape[1]):                 # left-assoc dim loop
                 acc += v_mat[:, i:i + 1] * c_mat[None, :, i]
             csim = acc / (norms[:, None] * cn_np[None, :])
             # first max along cell-ascending axis == (csim DESC, cell ASC)
             best = np.argmax(csim, axis=1)
-            yield pd.DataFrame({
-                "vec_id": pdf["vec_id"],
-                "v": pdf["v"],
-                "norm": pdf["norm"],
-                "cell": cells_np[best],
-            })
+            yield {**{c: b.column(c) for c in cols}, "cell": cells_np[best]}
 
-    return emb.select("vec_id", "v", "norm").mapInPandas(
-        assign, "vec_id long, v array<double>, norm double, cell long"
+    return arrow_map(
+        emb, cols, assign,
+        "vec_id long, v array<double>, norm double, cell long",
     )
 
 

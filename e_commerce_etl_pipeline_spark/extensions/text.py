@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.queries import load_table
+from .arrow_kernel import arrow_map
 
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
 
@@ -429,29 +430,23 @@ def cdc_boundaries_arrow(df: DataFrame) -> DataFrame:
     Arrow-batched. Since r13 the kernel no longer echoes ``text`` back
     across the Arrow boundary (guide §4.2 — its one remaining consumer,
     rolling_fingerprint_docs, needs only the positions; the text column
-    used to be serialized JVM→Python→JVM and then dropped)."""
-    import numpy as np
-    import pandas as pd
-
+    used to be serialized JVM→Python→JVM and then dropped). NULL text
+    carries zero boundaries (an empty ``pos``), as the HOF expression
+    form this kernel replaced did."""
     v = _roll_weights()
     mask = BOUNDARY_MASK + 1
 
     def inner(batches):
-        for pdf in batches:
-            out = []
-            for t in pdf["text"]:
-                # NULL text carries zero boundaries (matches the HOF
-                # expression form this kernel replaced, which returned an
-                # empty array for NULL input) — without this guard a single
-                # null doc crashes the whole Arrow batch.
-                if t is None or (isinstance(t, float) and pd.isna(t)):
-                    out.append(np.empty(0, dtype=np.int32))
-                    continue
-                out.append(_cdc_positions(t, v, mask).astype(np.int32))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "pos": out})
+        for b in batches:
+            yield {
+                "doc_id": b.column("doc_id"),
+                "pos": [_cdc_positions(t, v, mask)
+                        for t in b.column("text").to_pylist()],
+            }
 
-    return df.select("doc_id", "text").mapInPandas(
-        inner, schema="doc_id long, pos array<int>"
+    return arrow_map(
+        df, ("doc_id", "text"), inner, "doc_id long, pos array<int>",
+        null_rows={"pos": []},
     )
 
 
@@ -482,17 +477,15 @@ def cdc_chunk_hashes_arrow(df: DataFrame, min_chunk: int) -> DataFrame:
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     v = _roll_weights()
     mask = BOUNDARY_MASK + 1
 
     def inner(batches):
-        for pdf in batches:
+        for batch in batches:
             ids, hashes, lens = [], [], []
-            for doc_id, t in zip(pdf["doc_id"], pdf["text"]):
-                if t is None or (isinstance(t, float) and pd.isna(t)):
-                    continue
+            for doc_id, t in zip(batch.column("doc_id").to_pylist(),
+                                 batch.column("text").to_pylist()):
                 pos = _cdc_positions(t, v, mask)
                 b = np.concatenate((
                     np.zeros(1, dtype=np.int64), pos,
@@ -505,14 +498,11 @@ def cdc_chunk_hashes_arrow(df: DataFrame, min_chunk: int) -> DataFrame:
                             hashlib.md5(t[s:e].encode("utf-8")).hexdigest()
                         )
                         lens.append(e - s)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "chunk_hash": pd.Series(hashes, dtype="object"),
-                "chunk_len": pd.Series(lens, dtype="int64"),
-            })
+            yield {"doc_id": ids, "chunk_hash": hashes, "chunk_len": lens}
 
-    return df.select("doc_id", "text").mapInPandas(
-        inner, schema="doc_id long, chunk_hash string, chunk_len long"
+    return arrow_map(
+        df, ("doc_id", "text"), inner,
+        "doc_id long, chunk_hash string, chunk_len long",
     )
 
 

@@ -3,7 +3,7 @@ transforms (SURVEY.md §2.3 T1/T6/T8)."""
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,13 +38,3 @@ def explode_outer_prefixed(
     item_cols = [F.col(f"__item.{f}").alias(f"{item_prefix}{f}") for f in item_fields]
     keep = [c for c in base.columns if c != "__item"]
     return base.select(*keep, *item_cols)
-
-
-def project_struct(
-    df_or_prefix: str, struct_col: str, mapping: Mapping[str, str]
-) -> list[Column]:
-    """Column list projecting struct fields to flat renamed columns:
-    ``{"currency": "payment_currency"}`` -> payment.currency AS payment_currency."""
-    return [
-        F.col(f"{struct_col}.{src}").alias(dst) for src, dst in mapping.items()
-    ]

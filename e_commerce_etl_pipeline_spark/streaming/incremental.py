@@ -150,15 +150,6 @@ def near_dup_delete(spark: SparkSession, work_dir: str, vec_ids) -> dict:
     return store.apply_tombstones(vec_ids)
 
 
-def read_p1_assignment(spark: SparkSession, work_dir: str) -> DataFrame:
-    """The maintained PASS-1 assignment (the two-pass build's first
-    stage), folded the same way."""
-    store = _store_for(spark, work_dir)
-    if not store.is_seeded():
-        raise store.not_seeded_error()
-    return store.p1_fold()
-
-
 def near_dup_index_stream(
     spark: SparkSession,
     stream: DataFrame,

@@ -131,7 +131,10 @@ def join_streams_interval(
 
 def running_dedup_stream(stream: DataFrame, key_col: str) -> DataFrame:
     """Custom stateful operator: emit each key once across the stream's
-    lifetime (applyInPandasWithState; update mode)."""
+    lifetime (applyInPandasWithState; update mode). It stays on pandas
+    while the other Python kernels run through
+    ``extensions.arrow_kernel``: the installed PySpark has no Arrow-batch
+    form of a stateful grouped operator (no ``applyInArrowWithState``)."""
     keyed = stream.select(
         F.col(key_col).cast("string").alias("key"),
         F.lit(0.0).alias("batch_ts"),

@@ -106,7 +106,7 @@ def test_keep_newest_is_pure_hash_aggregate(spark, sf_dir):
 
 def test_ivf_assignment_is_arrow_kernel_not_window(spark, sf_dir):
     """IVF coarse assignment must be the Arrow-batched matrix kernel
-    (one mapInPandas pass over the corpus — measured ~2 s where every
+    (one mapInArrow pass over the corpus — measured ~2 s where every
     JVM per-pair join shape cost ~600 s at sf10), never an n×K joined
     intermediate: no ranking window, no nested-loop join, no sort in
     the BUILD plan. Since r6 the assignment is an index artifact: the
@@ -118,7 +118,7 @@ def test_ivf_assignment_is_arrow_kernel_not_window(spark, sf_dir):
         similarity._emb(spark, sf_dir),
         similarity.trained_centroids(spark, sf_dir),
     )._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in build_plan
+    assert "MapInArrow" in build_plan
     assert "Window [" not in build_plan, "corpus-side window in IVF build"
     assert "NestedLoop" not in build_plan, "n×K joined intermediate"
     assert "Sort [" not in build_plan

@@ -37,7 +37,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import calib_sec, jvm_warmup  # noqa: E402
+from bench import host_stamps, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions import tokenizer  # noqa: E402
 from e_commerce_etl_pipeline_spark.operators import index_store  # noqa: E402
 from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
@@ -54,7 +54,7 @@ def main() -> None:
         "unit": "sec",
         "sf_dir": sf_dir,
         "n_merges": tokenizer.N_MERGES,
-        "calib_sec": calib_sec(spark),
+        **host_stamps(spark),
         "n_docs": spark.read.parquet(docs_path).count(),
     }
 

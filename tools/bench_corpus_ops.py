@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import calib_sec, jvm_warmup  # noqa: E402
+from bench import host_stamps, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.chunking import (  # noqa: E402
     chunk_documents,
     segment_dedup_docs,
@@ -55,7 +55,7 @@ def main() -> None:
         "metric": "corpus_ops_scale",
         "unit": "sec",
         "sf_dir": sf_dir,
-        "calib_sec": calib_sec(spark),
+        **host_stamps(spark),
         "n_docs": spark.read.parquet(
             index_store.table_dir(sf_dir, "documents")
         ).count(),

@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import calib_sec, jvm_warmup  # noqa: E402
+from bench import host_stamps, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.chunking import (  # noqa: E402
     segment_dedup_docs,
 )
@@ -136,7 +136,7 @@ def main() -> None:
             "metric": "curation_e2e",
             "unit": "sec",
             "sf_dir": sf_dir,
-            "calib_sec": calib_sec(spark),
+            **host_stamps(spark),
             "total_sec": round(sum(s["sec"] for s in stages.values()), 3),
             "stages": stages,
         }

@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import calib_sec, jvm_warmup  # noqa: E402
+from bench import host_stamps, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.session import get_spark  # noqa: E402
 from e_commerce_etl_pipeline_spark.streaming.span_dedup import (  # noqa: E402
     read_deduped_docs,
@@ -79,7 +79,7 @@ def main() -> None:
             "metric": "span_dedup_stream_scale",
             "unit": "sec",
             "sf_dir": sf_dir,
-            "calib_sec": calib_sec(spark),
+            **host_stamps(spark),
             "corpus_docs": n_docs,
         }
 

@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import calib_sec, jvm_warmup  # noqa: E402
+from bench import host_stamps, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.curation import (  # noqa: E402
     leakage_safe_splits,
     training_shards,
@@ -42,7 +42,7 @@ def main() -> None:
         "metric": "splits_scale",
         "unit": "sec",
         "sf_dir": sf_dir,
-        "calib_sec": calib_sec(spark),
+        **host_stamps(spark),
     }
 
     # leakage-safe splits: force the full assignment (count per split so
