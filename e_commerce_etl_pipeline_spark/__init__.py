@@ -5,7 +5,7 @@ pipeline (paginated REST extract -> nested-JSON flatten -> guarded keyed
 upsert into a staging warehouse), re-expressed Spark-first:
 
 - ``schemas``    declared StructTypes for raw payloads + staging tables
-- ``functions``  null-safe coercion kernel (column-expression builders)
+- ``functions``  null-safe coercion kernel (one SQL-text definition per coercion)
 - ``operators``  dedup modes, guarded keyed upsert writer, flatten helpers
 - ``sources``    parquet/json readers + paginated API source adapters
 - ``transforms`` per-source nested->relational transforms

@@ -1,6 +1,6 @@
-"""Null-safe coercion kernel (column-expression builders, zero Python UDFs).
+"""Null-safe coercion kernel (SQL-text builders, zero Python UDFs).
 
-Re-expresses the reference's private scalar helpers as native Spark column
+Re-expresses the reference's private scalar helpers as native Spark
 expressions so every coercion stays inside whole-stage codegen. Parity map
 (reference file:line -> builder here):
 
@@ -18,10 +18,19 @@ expressions so every coercion stays inside whole-stage codegen. Parity map
 - '%'/',' strip         misa_crm_loader.py:920-925              -> clean_numeric_string
 - json.dumps columns    tiktok_shop_transformer.py:152-156      -> json_stringify
 
-All builders accept a column name or Column and return a Column.
+Each coercion has one definition: a SQL template over its input, a
+column name or SQL expression string (``"payment.sub_total"``,
+``"a + b"``). Calling a builder returns ``F.expr(<text>)``, a Column;
+``builder.sql(...)`` returns the text itself, for ``selectExpr`` lists
+built without a round trip to the JVM. DataFrame calls and SQL text
+build the same Catalyst plan, so both forms optimize identically.
 """
 
 from __future__ import annotations
+
+import functools
+import inspect
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -41,119 +50,147 @@ _TRUE_LITERALS = ("true", "1", "yes", "on")
 _FALSE_LITERALS = ("false", "0", "no", "off")
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def _in_list(values: tuple[str, ...]) -> str:
+    return ", ".join(f"'{v}'" for v in values)
 
 
-def safe_string(c: Column | str, max_len: int | None = None) -> Column:
+def _double(v: float) -> str:
+    """A DOUBLE literal: a bare ``1000.0`` in SQL is a DECIMAL."""
+    return f"{float(v)!r}D"
+
+
+def _sql_builder(template: Callable[..., str]) -> Callable[..., Column]:
+    """The Column builder over ``template``, the coercion's one definition;
+    ``builder.sql`` is the template itself."""
+
+    @functools.wraps(template)
+    def builder(c: str, *args, **kwargs) -> Column:
+        return F.expr(template(c, *args, **kwargs))
+
+    builder.__signature__ = inspect.signature(template).replace(return_annotation=Column)
+    builder.sql = template
+    return builder
+
+
+@_sql_builder
+def safe_string(c: str, max_len: int | None = None) -> str:
     """str(v) with optional truncation to ``max_len``; NULL stays NULL."""
-    out = _col(c).cast("string")
-    if max_len is not None:
-        out = F.substring(out, 1, max_len)
-    return out
+    out = f"CAST(({c}) AS STRING)"
+    return out if max_len is None else f"substring({out}, 1, {int(max_len)})"
 
 
-def safe_decimal(c: Column | str, precision: int = 18, scale: int = 4) -> Column:
+def _blank_to_null_cast(s: str, type_name: str) -> str:
+    return f"TRY_CAST(CASE WHEN {s} = '' THEN NULL ELSE {s} END AS {type_name})"
+
+
+@_sql_builder
+def safe_decimal(c: str, precision: int = 18, scale: int = 4) -> str:
     """Parse to decimal; ''/garbage -> NULL (try_cast semantics)."""
-    s = F.trim(_col(c).cast("string"))
-    return F.when(s == "", None).otherwise(s).try_cast(f"decimal({precision},{scale})")
+    return _blank_to_null_cast(f"trim(CAST(({c}) AS STRING))",
+                               f"DECIMAL({int(precision)},{int(scale)})")
 
 
-def safe_float(c: Column | str) -> Column:
-    s = F.trim(_col(c).cast("string"))
-    return F.when(s == "", None).otherwise(s).try_cast("double")
+@_sql_builder
+def safe_float(c: str) -> str:
+    return _blank_to_null_cast(f"trim(CAST(({c}) AS STRING))", "DOUBLE")
 
 
-def safe_int(c: Column | str) -> Column:
+@_sql_builder
+def safe_int(c: str) -> str:
     """int(float(str(v))): '3.0' -> 3, 'x' -> NULL, NULL -> NULL."""
-    d = safe_float(c)
-    return d.try_cast("long")
+    return f"TRY_CAST({safe_float.sql(c)} AS BIGINT)"
 
 
-def safe_bool(c: Column | str) -> Column:
+@_sql_builder
+def safe_bool(c: str) -> str:
     """true in {true,1,yes,on}; false in {false,0,no,off}; else NULL.
 
     Case-insensitive, like the reference's ``str(v).lower()``.
     """
-    col = _col(c)
-    s = F.lower(F.trim(col.cast("string")))
+    s = f"lower(trim(CAST(({c}) AS STRING)))"
     return (
-        F.when(col.isNull(), F.lit(None).cast("boolean"))
-        .when(s.isin(*_TRUE_LITERALS), F.lit(True))
-        .when(s.isin(*_FALSE_LITERALS), F.lit(False))
-        .otherwise(F.lit(None).cast("boolean"))
+        f"CASE WHEN ({c}) IS NULL THEN CAST(NULL AS BOOLEAN)"
+        f" WHEN {s} IN ({_in_list(_TRUE_LITERALS)}) THEN true"
+        f" WHEN {s} IN ({_in_list(_FALSE_LITERALS)}) THEN false"
+        " ELSE CAST(NULL AS BOOLEAN) END"
     )
 
 
-def safe_bool_default_false(c: Column | str) -> Column:
+@_sql_builder
+def safe_bool_default_false(c: str) -> str:
     """MISA rule: NaN/NULL -> False (misa_crm_transformer.py:192-195)."""
-    return F.coalesce(safe_bool(c), F.lit(False))
+    return f"coalesce({safe_bool.sql(c)}, false)"
 
 
-def _epoch_seconds(c: Column, ms_threshold: float) -> Column:
-    d = c.cast("double")
-    return F.when(d > F.lit(ms_threshold), d / 1000.0).otherwise(d)
+def _epoch_double(c: str) -> str:
+    return f"TRY_CAST(CAST(({c}) AS STRING) AS DOUBLE)"
 
 
-def epoch_to_ts(c: Column | str, ms_threshold: float = MS_THRESHOLD_TRANSFORM) -> Column:
+def _epoch_seconds(d: str, ms_threshold: float) -> str:
+    return (f"CASE WHEN {d} > {_double(ms_threshold)} THEN {d} / {_double(1000)}"
+            f" ELSE {d} END")
+
+
+@_sql_builder
+def epoch_to_ts(c: str, ms_threshold: float = MS_THRESHOLD_TRANSFORM) -> str:
     """Epoch seconds-or-milliseconds -> UTC timestamp; unparseable -> NULL.
 
     Values above ``ms_threshold`` are treated as milliseconds (reference
     heuristic, tiktok_shop_transformer.py:418-437).
     """
-    d = _col(c).cast("string").try_cast("double")
-    secs = _epoch_seconds(d, ms_threshold)
-    return F.timestamp_seconds(secs)
+    return f"timestamp_seconds({_epoch_seconds(_epoch_double(c), ms_threshold)})"
 
 
-def epoch_to_ts_zero_null(c: Column | str,
-                          ms_threshold: float = MS_THRESHOLD_TRANSFORM) -> Column:
+@_sql_builder
+def epoch_to_ts_zero_null(c: str, ms_threshold: float = MS_THRESHOLD_TRANSFORM) -> str:
     """Shopee rule: epoch 0 or NULL -> NULL (shopee_orders_transformer.py:36-43)."""
-    d = _col(c).cast("string").try_cast("double")
-    return F.when((d.isNull()) | (d == 0), F.lit(None).cast("timestamp")).otherwise(
-        F.timestamp_seconds(_epoch_seconds(d, ms_threshold))
-    )
+    d = _epoch_double(c)
+    return (f"CASE WHEN ({d} IS NULL) OR ({d} = 0) THEN CAST(NULL AS TIMESTAMP)"
+            f" ELSE timestamp_seconds({_epoch_seconds(d, ms_threshold)}) END")
 
 
-def iso_to_ts(c: Column | str) -> Column:
+@_sql_builder
+def iso_to_ts(c: str) -> str:
     """ISO-8601 (tz-aware or naive) -> UTC timestamp; coerce errors to NULL.
 
     Matches ``pd.to_datetime(utc=True, errors='coerce')``
     (misa_crm_transformer.py:172-181). Session timezone must be UTC (we set
     it in session.py) so offset-less strings are read as UTC.
     """
-    return _col(c).cast("string").try_cast("timestamp")
+    return f"TRY_CAST(CAST(({c}) AS STRING) AS TIMESTAMP)"
 
 
-def to_vn_naive(c: Column | str) -> Column:
+@_sql_builder
+def to_vn_naive(c: str) -> str:
     """UTC timestamp -> Asia/Ho_Chi_Minh wall-clock, tz-naive (egress only).
 
     The warehouse convention: compute in UTC, store +07-naive
     (tiktok_shop_staging_loader.py:196-253, docs/TAI_LIEU_BAN_GIAO_ETL.txt).
     """
-    return F.from_utc_timestamp(_col(c), VN_TZ).cast("timestamp_ntz")
+    return f"CAST(from_utc_timestamp(({c}), '{VN_TZ}') AS TIMESTAMP_NTZ)"
 
 
-def null_scrub(c: Column | str) -> Column:
+@_sql_builder
+def null_scrub(c: str) -> str:
     """Map literal 'nan'/'N/A'/'null'/'None'/'' (trimmed) -> NULL.
 
     Reference: shopee_orders_loader.py:403-442, misa_crm_loader.py:956-958.
     """
-    col = _col(c)
-    s = F.trim(col.cast("string"))
-    return F.when(s.isin(*_NULL_LITERALS), F.lit(None).cast("string")).otherwise(col.cast("string"))
+    s = f"CAST(({c}) AS STRING)"
+    return (f"CASE WHEN trim({s}) IN ({_in_list(_NULL_LITERALS)})"
+            f" THEN CAST(NULL AS STRING) ELSE {s} END")
 
 
-def clean_numeric_string(c: Column | str, precision: int = 18, scale: int = 4) -> Column:
+@_sql_builder
+def clean_numeric_string(c: str, precision: int = 18, scale: int = 4) -> str:
     """Strip '%' and thousands ',' then numeric cast (misa_crm_loader.py:920-925)."""
-    cleaned = F.regexp_replace(_col(c).cast("string"), "[%,]", "")
-    return F.when(F.trim(cleaned) == "", None).otherwise(F.trim(cleaned)).try_cast(
-        f"decimal({precision},{scale})"
-    )
+    return _blank_to_null_cast(
+        f"trim(regexp_replace(CAST(({c}) AS STRING), '[%,]', ''))",
+        f"DECIMAL({int(precision)},{int(scale)})")
 
 
-def json_stringify(c: Column | str) -> Column:
+@_sql_builder
+def json_stringify(c: str) -> str:
     """Struct/array column -> JSON string (NULL-safe), parity with json.dumps
     columns like payment_info_json (tiktok_shop_transformer.py:152-156)."""
-    col = _col(c)
-    return F.when(col.isNull(), F.lit(None).cast("string")).otherwise(F.to_json(col))
+    return f"CASE WHEN ({c}) IS NULL THEN CAST(NULL AS STRING) ELSE to_json({c}) END"

@@ -138,12 +138,6 @@ def resolve_upsert(
     q = SPARK_DIALECT.q
     on = " AND ".join(f"t.{q(k)} <=> s.{q(k)}" for k in keys)
     joined = target.alias("t").join(source.alias("s"), F.expr(on), "full_outer")
-    if "etl_updated_at" in cols:
-        # match the column's type (MISA/Shopee stamp +07 timestamp_ntz)
-        stamp = F.current_timestamp() if batch_time is None else batch_time
-        joined = joined.withColumn(
-            "__batch_time", stamp.cast(target.schema["etl_updated_at"].dataType)
-        )
 
     t_exists = f"t.{q(keys[0])} IS NOT NULL"
     s_exists = f"s.{q(keys[0])} IS NOT NULL"
@@ -154,19 +148,33 @@ def resolve_upsert(
     # not older — i.e. equal order_col but different guard values.
     guard = merge_matched_condition(order_col, guard_cols, tgt="t", src="s")
     update_applies = f"{s_exists} AND {t_exists} AND ({guard})"
-    take_source = f"(t.{q(keys[0])} IS NULL AND {s_exists}) OR ({update_applies})"
+    # The per-row decision, computed once in a projection over the join:
+    # __t target row exists, __upd matched update applies, __take the
+    # source row wins. Output CASEs read the flags, so Catalyst analyses
+    # and optimizes the guard twice, not once per column. CollapseProject
+    # keeps this projection: it inlines no non-cheap alias read twice.
+    flags = {
+        "__t": F.expr(t_exists),
+        "__upd": F.expr(update_applies),
+        "__take": F.expr(f"(t.{q(keys[0])} IS NULL AND {s_exists}) OR ({update_applies})"),
+    }
+    if "etl_updated_at" in cols:
+        # match the column's type (MISA/Shopee stamp +07 timestamp_ntz)
+        stamp = F.current_timestamp() if batch_time is None else batch_time
+        flags["__batch_time"] = stamp.cast(target.schema["etl_updated_at"].dataType)
+    joined = joined.withColumns(flags)
 
     out_cols = []
     for c in cols:
         src, tgt = f"s.{q(c)}", f"t.{q(c)}"
         if c == "etl_created_at":
             # insert: source's; update: target's original creation time
-            expr = f"CASE WHEN {t_exists} THEN {tgt} ELSE {src} END"
+            expr = f"CASE WHEN __t THEN {tgt} ELSE {src} END"
         elif c == "etl_updated_at":
-            expr = (f"CASE WHEN {update_applies} THEN __batch_time "
-                    f"WHEN {take_source} THEN {src} ELSE {tgt} END")
+            expr = (f"CASE WHEN __upd THEN __batch_time "
+                    f"WHEN __take THEN {src} ELSE {tgt} END")
         else:
-            expr = f"CASE WHEN {take_source} THEN {src} ELSE {tgt} END"
+            expr = f"CASE WHEN __take THEN {src} ELSE {tgt} END"
         out_cols.append(f"{expr} AS {q(c)}")
     return joined.selectExpr(*out_cols)
 
@@ -328,9 +336,9 @@ def stamp_etl_metadata(
         ts = F.from_utc_timestamp(F.current_timestamp(), "Asia/Ho_Chi_Minh").cast(
             "timestamp_ntz"
         )
-    return (
-        df.withColumn("etl_batch_id", F.lit(batch_id or str(uuid.uuid4())))
-        .withColumn("etl_created_at", ts)
-        .withColumn("etl_updated_at", ts)
-        .withColumn("etl_source", F.lit(source_name))
-    )
+    return df.withColumns({
+        "etl_batch_id": F.lit(batch_id or str(uuid.uuid4())),
+        "etl_created_at": ts,
+        "etl_updated_at": ts,
+        "etl_source": F.lit(source_name),
+    })

@@ -494,14 +494,14 @@ def coercion_kernel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events")
     # derive an epoch col: seconds for even ids, SAME instant in ms for odd
-    epoch = F.when(
-        F.col("event_id") % 2 == 0, F.unix_timestamp("ts").cast("double")
-    ).otherwise(F.unix_timestamp("ts").cast("double") * 1000)
+    epoch = ("CASE WHEN event_id % 2 = 0 THEN CAST(unix_timestamp(ts) AS DOUBLE)"
+             " ELSE CAST(unix_timestamp(ts) AS DOUBLE) * 1000 END")
     return ev.select(
         "event_id",
         F.get_json_object("props", "$.k").cast("long").alias("prop_k"),
         epoch_to_ts(epoch).alias("ts_normalized"),
-        null_scrub(F.when(F.col("event_type") == "error", "N/A").otherwise(F.col("event_type"))).alias("etype_clean"),
+        null_scrub("CASE WHEN event_type = 'error' THEN 'N/A' ELSE event_type END"
+                   ).alias("etype_clean"),
         safe_decimal("value", 18, 2).cast("double").alias("value_dec"),
     )
 

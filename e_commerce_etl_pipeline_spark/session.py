@@ -56,6 +56,11 @@ def get_spark(app_name: str = "e_commerce_etl_pipeline_spark",
         # driver testdata writes TIMESTAMP(NANOS) parquet, which Spark's
         # reader rejects; read as long and convert (see plans.queries.load_table)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # PySpark's call-site capture (a static conf, on by default) walks
+        # the Python stack and makes extra py4j calls on every F.* and
+        # Column call, to name the calling line in an error message; an
+        # analysis error still names the column and its condition.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -131,7 +131,7 @@ def flat_order_view(raw: DataFrame) -> DataFrame:
         F.col("invoice_data.number").alias("invoice_number"),
         F.col("invoice_data.series_number").alias("invoice_series_number"),
         F.col("invoice_data.access_key").alias("invoice_access_key"),
-        epoch_to_ts_zero_null(F.col("invoice_data.issue_date")).alias("invoice_issue_date"),
+        epoch_to_ts_zero_null("invoice_data.issue_date").alias("invoice_issue_date"),
         F.col("invoice_data.total_value").alias("invoice_total_value"),
         F.col("invoice_data.products_total_value").alias("invoice_products_total_value"),
         F.col("invoice_data.tax_code").alias("invoice_tax_code"),

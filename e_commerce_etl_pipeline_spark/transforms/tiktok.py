@@ -1,7 +1,8 @@
 """TikTok order flatten: nested order JSON -> one row per (order, line item).
 
 Parity with src/transformers/tiktok_shop_transformer.py:47-366 (T1-T5 in
-SURVEY.md §2.3), expressed as a single declarative select + explode_outer:
+SURVEY.md §2.3), expressed as two SQL-text select lists, the first ending
+in ``explode_outer``:
 
 - order-level projection (T2): renamed scalars + payment.* struct fields +
   packages[0].id + JSON-stringified sub-objects (:146-261)
@@ -68,45 +69,51 @@ _ITEM_MONEY_FIELDS = [
 ]
 
 
+# (output name, SQL expression) of the order-level projection (T2/T3)
+_ORDER_COLS = (
+    [("order_id", "id")]
+    + [(f, f) for f in _ORDER_STR_FIELDS]
+    + [(f, epoch_to_ts.sql(f)) for f in _EPOCH_S_FIELDS]
+    + [("recommended_shipping_time", epoch_to_ts.sql("recommended_shipping_time"))]
+    + [(f, f) for f in _ORDER_BOOL_FIELDS]
+    + [("fulfillment_priority_level", "fulfillment_priority_level")]
+    + [("payment_currency", "payment.currency")]
+    + [(f"payment_{f}", safe_decimal.sql(f"payment.{f}")) for f in _PAYMENT_MONEY_FIELDS]
+    + [("package_id_main", "try_element_at(packages, 1).id")]
+    + [
+        ("payment_info_json", json_stringify.sql("payment")),
+        ("recipient_address_json", json_stringify.sql("recipient_address")),
+        ("line_items_json", json_stringify.sql("line_items")),
+        ("packages_json", json_stringify.sql("packages")),
+    ]
+    + [(f"recipient_{f}", f"recipient_address.{f}") for f in _RECIPIENT_FIELDS]
+    + [("recipient_district_info_json",
+        json_stringify.sql("recipient_address.district_info"))]
+)
+# the item projection (T4) over the exploded ``__item`` struct
+_ITEM_COLS = (
+    [("item_id", "__item.id")]
+    + [(f"item_{f}", f"__item.{f}") for f in _ITEM_STR_FIELDS]
+    + [("item_quantity", "__item.quantity"), ("item_is_gift", "__item.is_gift")]
+    + [(f"item_{f}", safe_decimal.sql(f"__item.{f}")) for f in _ITEM_MONEY_FIELDS]
+    + [("item_rts_time", epoch_to_ts.sql("__item.rts_time")),
+       ("item_sku_attributes", json_stringify.sql("__item"))]
+)
+
+
+def _select_list(cols: list[tuple[str, str]]) -> list[str]:
+    return [e if e == n else f"{e} AS {n}" for n, e in cols]
+
+
+# Both lists are plain strings, rendered once at import: the transform
+# hands Catalyst two selectExpr calls and builds no Column objects.
+_EXPLODE_LIST = _select_list(_ORDER_COLS) + ["explode_outer(line_items) AS __item"]
+_FLAT_LIST = [n for n, _ in _ORDER_COLS] + _select_list(_ITEM_COLS)
+
+
 def transform_tiktok_orders(raw: DataFrame) -> DataFrame:
     """Nested raw orders -> flat order-item fact (~110 cols)."""
-    order_cols = (
-        [F.col("id").alias("order_id")]
-        + [F.col(f) for f in _ORDER_STR_FIELDS]
-        + [epoch_to_ts(f).alias(f) for f in _EPOCH_S_FIELDS]
-        + [epoch_to_ts("recommended_shipping_time").alias("recommended_shipping_time")]
-        + [F.col(f) for f in _ORDER_BOOL_FIELDS]
-        + [F.col("fulfillment_priority_level")]
-        + [F.col("payment.currency").alias("payment_currency")]
-        + [
-            safe_decimal(F.col(f"payment.{f}")).alias(f"payment_{f}")
-            for f in _PAYMENT_MONEY_FIELDS
-        ]
-        + [F.try_element_at("packages", F.lit(1))["id"].alias("package_id_main")]
-        + [
-            json_stringify("payment").alias("payment_info_json"),
-            json_stringify("recipient_address").alias("recipient_address_json"),
-            json_stringify("line_items").alias("line_items_json"),
-            json_stringify("packages").alias("packages_json"),
-        ]
-        + [
-            F.col(f"recipient_address.{f}").alias(f"recipient_{f}")
-            for f in _RECIPIENT_FIELDS
-        ]
-        + [json_stringify("recipient_address.district_info").alias("recipient_district_info_json")]
-    )
-    exploded = raw.select(*order_cols, F.explode_outer("line_items").alias("__item"))
-    item_cols = (
-        [F.col("__item.id").alias("item_id")]
-        + [F.col(f"__item.{f}").alias(f"item_{f}") for f in _ITEM_STR_FIELDS]
-        + [F.col("__item.quantity").alias("item_quantity"),
-           F.col("__item.is_gift").alias("item_is_gift")]
-        + [safe_decimal(F.col(f"__item.{f}")).alias(f"item_{f}") for f in _ITEM_MONEY_FIELDS]
-        + [epoch_to_ts(F.col("__item.rts_time")).alias("item_rts_time"),
-           json_stringify("__item").alias("item_sku_attributes")]
-    )
-    keep = [c for c in exploded.columns if c != "__item"]
-    return exploded.select(*keep, *item_cols)
+    return raw.selectExpr(*_EXPLODE_LIST).selectExpr(*_FLAT_LIST)
 
 
 def validate_tiktok_flatten(raw: DataFrame, flat: DataFrame) -> dict:

@@ -4,13 +4,12 @@
 
 import datetime
 
-from pyspark.sql import functions as F
-
 from e_commerce_etl_pipeline_spark.functions import (
     clean_numeric_string,
     epoch_to_ts,
     epoch_to_ts_zero_null,
     iso_to_ts,
+    json_stringify,
     null_scrub,
     safe_bool,
     safe_bool_default_false,
@@ -94,3 +93,33 @@ def test_clean_numeric_string(spark):
     df = one_col(spark, ["1,234.5", "12%", "x", None], "string")
     out = [r[0] for r in df.select(clean_numeric_string("v", 18, 2)).collect()]
     assert [str(v) if v is not None else None for v in out] == ["1234.50", "12.00", None, None]
+
+
+def test_coercions_take_struct_field_paths(spark):
+    df = spark.createDataFrame(
+        [(("12.5", 1700000000000, "N/A", "yes", {"k": 1}),)],
+        "s struct<m string, e long, t string, b string, j map<string,int>>")
+    r = df.select(
+        safe_decimal("s.m", 18, 2), epoch_to_ts("s.e"), null_scrub("s.t"),
+        safe_bool("s.b"), safe_int("s.m"), json_stringify("s.j"),
+    ).collect()[0]
+    assert str(r[0]) == "12.50"
+    assert r[1] == datetime.datetime(2023, 11, 14, 22, 13, 20)
+    assert r[2] is None and r[3] is True and r[4] == 12
+    assert r[5] == '{"k":1}'
+
+
+def test_coercions_take_sql_expressions(spark):
+    # the input is SQL text, not only a column name: an operator
+    # expression is wrapped whole, so precedence stays the caller's
+    df = one_col(spark, [1700000000, None], "long")
+    out = df.select(
+        epoch_to_ts("v * 1000"),
+        safe_decimal("concat(v, '.25')", 18, 2),
+        null_scrub("CASE WHEN v IS NULL THEN 'nan' ELSE 'x' END"),
+        safe_int("v + 1"),
+    ).collect()
+    assert out[0][0] == datetime.datetime(2023, 11, 14, 22, 13, 20)
+    assert str(out[0][1]) == "1700000000.25" and out[0][2] == "x"
+    assert out[0][3] == 1700000001
+    assert list(out[1]) == [None, None, None, None]

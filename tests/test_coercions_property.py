@@ -11,7 +11,6 @@ import re
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from e_commerce_etl_pipeline_spark.functions.coercions import (
     MS_THRESHOLD_TRANSFORM,
@@ -31,7 +30,7 @@ SETTINGS = settings(
 
 def _run(spark, values, col_builder, in_type):
     df = spark.createDataFrame([(v,) for v in values], f"x {in_type}")
-    return [r.y for r in df.select(col_builder(F.col("x")).alias("y")).collect()]
+    return [r.y for r in df.select(col_builder("x").alias("y")).collect()]
 
 
 # --- safe_int: int(float(str(v))) with null on failure -------------------

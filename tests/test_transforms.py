@@ -2,6 +2,7 @@
 reference's own smoke strategy (scripts/test_dag_functionality.py:123-231)
 plus the FIXTURES.md §5 reconciliation invariants."""
 
+import datetime
 import json
 
 from pyspark.sql import functions as F
@@ -76,6 +77,57 @@ def test_tiktok_flatten(spark):
     v = validate_tiktok_flatten(raw, flat)
     assert v["orders_match"] and v["items_match"]
 
+
+
+def _tiktok_rows(spark, orders):
+    raw = spark.read.schema(TIKTOK_ORDER_SCHEMA).json(
+        spark.sparkContext.parallelize([json.dumps(o, ensure_ascii=False) for o in orders])
+    )
+    return {r.order_id: r for r in transform_tiktok_orders(raw).collect()}
+
+
+def test_tiktok_epoch_ms_threshold(spark):
+    # recommended_shipping_time: seconds up to 1e10, milliseconds above
+    rows = _tiktok_rows(spark, [
+        {"id": "S", "recommended_shipping_time": 9_999_999_999},
+        {"id": "M", "recommended_shipping_time": 10_000_000_001},
+    ])
+    assert rows["S"].recommended_shipping_time == datetime.datetime(2286, 11, 20, 17, 46, 39)
+    assert rows["M"].recommended_shipping_time == datetime.datetime(
+        1970, 4, 26, 17, 46, 40, 1000)
+
+
+def test_tiktok_blank_and_garbage_money_is_null(spark):
+    rows = _tiktok_rows(spark, [
+        {"id": "B", "payment": {"total_amount": "", "sub_total": "  ", "tax": "abc"},
+         "line_items": [{"id": "L", "sale_price": "12x", "original_price": ""}]},
+    ])
+    r = rows["B"]
+    assert (r.payment_total_amount, r.payment_sub_total, r.payment_tax) == (None, None, None)
+    assert r.item_sale_price is None and r.item_original_price is None
+
+
+def test_tiktok_null_and_empty_line_items_one_row_each(spark):
+    raw = spark.read.schema(TIKTOK_ORDER_SCHEMA).json(spark.sparkContext.parallelize([
+        json.dumps({"id": "N", "line_items": None}),
+        json.dumps({"id": "E", "line_items": []}),
+    ]))
+    out = transform_tiktok_orders(raw).collect()
+    assert sorted(r.order_id for r in out) == ["E", "N"]
+    item_cols = [c for c in out[0].asDict() if c.startswith("item_")]
+    assert item_cols and all(r[c] is None for r in out for c in item_cols)
+    assert {r.order_id: r.line_items_json for r in out} == {"N": None, "E": "[]"}
+
+
+def test_tiktok_non_ascii_recipient_survives(spark):
+    name = "Nguyễn Thị Ánh 🌸"
+    rows = _tiktok_rows(spark, [
+        {"id": "U", "recipient_address": {"name": name, "full_address": "Hà Nội"}},
+    ])
+    r = rows["U"]
+    assert r.recipient_name == name
+    assert json.loads(r.recipient_address_json)["name"] == name
+    assert json.loads(r.recipient_address_json)["full_address"] == "Hà Nội"
 
 def _shopee_raw(spark):
     orders = [

@@ -34,7 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import jvm_warmup  # noqa: E402
+from bench import host_stamps, jvm_warmup  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.text import words_col  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.tokenizer import (  # noqa: E402
     _train_driver,
@@ -93,6 +93,9 @@ def main() -> None:
     n_merges = int(sys.argv[2]) if len(sys.argv) > 2 else 32_768
     spark = get_spark("bench-bpe-32k")
     jvm_warmup(spark)
+    # stamped before training: nothing may sit between training and the
+    # first emit below
+    stamps = host_stamps(spark)
 
     syl = F.array(*[F.lit(s) for s in SYLLABLES])
     pos = F.explode(F.sequence(F.lit(0), F.lit(WORDS_PER_DOC - 1)))
@@ -157,6 +160,7 @@ def main() -> None:
     out = {
         "metric": "bpe_32k_driver_train",
         "unit": "sec",
+        **stamps,
         "n_docs": N_DOCS,
         "words_per_doc": WORDS_PER_DOC,
         "vmax": VMAX,

@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import host_stamps  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions import (  # noqa: E402
     incremental_clusters as IC,
     similarity as S,
@@ -207,6 +208,7 @@ def main() -> None:
             "frame-append": "near_dup_incremental_append",
         }[mode],
         "sf_dir": sf_dir,
+        **host_stamps(spark),
         "corpus_vecs": S.corpus_count(spark, sf_dir),
         "prior_assignment_rows": n_prior,
         "batch_vecs": BATCH_VECS,

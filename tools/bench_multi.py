@@ -94,6 +94,10 @@ def main() -> None:
         ],
         "queries_warm_best": best,
         "sf": runs[0].get("sf"),
+        # each session's bench.host_stamps, taken in its own JVM
+        "per_session_host_stamps": [
+            {k: r.get(k) for k in ("calib_sec", "cpus", "nproc")} for r in runs
+        ],
         "warm_runs": runs[0].get("warm_runs"),
     }
     line = json.dumps(out)

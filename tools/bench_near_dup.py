@@ -31,6 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import host_stamps  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions import components  # noqa: E402
 from e_commerce_etl_pipeline_spark.extensions.semantic_dedup import (  # noqa: E402
     SEM_CHAIN_W,
@@ -116,6 +117,7 @@ def main() -> None:
     out = {
         "metric": "near_dup_family",
         "sf_dir": sf_dir,
+        **host_stamps(spark),
         "corpus_vecs": n,
         "params": {
             "max_lsh_bucket_vecs": MAX_LSH_BUCKET_VECS,

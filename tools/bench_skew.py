@@ -46,6 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import host_stamps  # noqa: E402
 from e_commerce_etl_pipeline_spark.operators.skew import (  # noqa: E402
     auto_salted_join,
     hot_keys,
@@ -238,6 +239,7 @@ def main() -> None:
         "metric": "skew_mitigation_bench",
         "unit": "sec",
         "sf_dir": sf_dir,
+        **host_stamps(spark),
         "n_events": n,
         "n_users": n_users,
         "hot_user": int(top["user_id"]),

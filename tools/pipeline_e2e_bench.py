@@ -29,7 +29,9 @@ Workload: the sf events table plays the landed source.
 Prints ONE JSON line with per-stage seconds, rows, rows/sec, and
 over_budget flags, stamped with bench.py's ``calib_sec``, ``cpus`` and
 ``nproc``; optional argv[2] writes it to a file. The audit table
-is included so the run itself demonstrates ST5 bookkeeping.
+is included so the run itself demonstrates ST5 bookkeeping: one row for
+each of the full-load, incremental, replay and streaming stages with
+the stage's rows, and the run fails unless it holds those 4 rows.
 
 Usage: python tools/pipeline_e2e_bench.py [SF_DIR] [OUT_JSON]
 """
@@ -42,6 +44,7 @@ import shutil
 import sys
 import tempfile
 import time
+import uuid
 from datetime import timedelta
 from pathlib import Path
 
@@ -77,16 +80,14 @@ def transform_events(raw):
         safe_decimal,
     )
 
-    epoch = F.when(
-        F.col("event_id") % 2 == 0, F.unix_timestamp("ts").cast("double")
-    ).otherwise(F.unix_timestamp("ts").cast("double") * 1000)
+    epoch = ("CASE WHEN event_id % 2 = 0 THEN CAST(unix_timestamp(ts) AS DOUBLE)"
+             " ELSE CAST(unix_timestamp(ts) AS DOUBLE) * 1000 END")
     return raw.select(
         "event_id", "user_id", "ts",
         F.get_json_object("props", "$.k").cast("long").alias("prop_k"),
         epoch_to_ts(epoch).alias("ts_normalized"),
         null_scrub(
-            F.when(F.col("event_type") == "error", "N/A")
-            .otherwise(F.col("event_type"))
+            "CASE WHEN event_type = 'error' THEN 'N/A' ELSE event_type END"
         ).alias("etype_clean"),
         safe_decimal("value", 18, 2).cast("double").alias("value_dec"),
     )
@@ -111,6 +112,14 @@ def main() -> None:
             "over_budget": seconds > BUDGET_S,
         }
 
+    def audit_stage(stage: str, started_at: float, finished_at: float,
+                    rows: int) -> None:
+        audit.record({"batch_id": str(uuid.uuid4()),
+                      "source_name": f"events_staged:{stage}",
+                      "status": "SUCCESS", "records_extracted": rows,
+                      "records_loaded": rows, "started_at": started_at,
+                      "finished_at": finished_at})
+
     source = load_table(spark, sf_dir, "events")
     keys, order_col = ["event_id"], "ts"
 
@@ -126,8 +135,6 @@ def main() -> None:
     record("full_load", time.time() - t0, counts["events_staged"])
 
     # ---- stage 2: incremental lookback window (newest 2% of ts range)
-    import uuid
-
     from e_commerce_etl_pipeline_spark.operators.upsert import (
         stamp_etl_metadata,
     )
@@ -146,7 +153,9 @@ def main() -> None:
         spark, batch_src, table_path, keys, order_col,
         lookback=lookback, now=hi,
     )
-    record("incremental", time.time() - t0, n_inc)
+    t1 = time.time()
+    record("incremental", t1 - t0, n_inc)
+    audit_stage("incremental", t0, t1, n_inc)
 
     # ---- stage 3: replay of the identical window (ST3: priced no-op)
     t0 = time.time()
@@ -154,7 +163,9 @@ def main() -> None:
         spark, batch_src, table_path, keys, order_col,
         lookback=lookback, now=hi,
     )
-    record("replay", time.time() - t0, n_rep)
+    t1 = time.time()
+    record("replay", t1 - t0, n_rep)
+    audit_stage("replay", t0, t1, n_rep)
     assert n_rep == n_inc, "replay must consider the same window"
 
     # ---- stage 4: the same window via Structured Streaming
@@ -168,7 +179,7 @@ def main() -> None:
         checkpoint_dir=f"{work}/ckpt",
     )
     q.awaitTermination()
-    drain_s = time.time() - t0
+    t1 = time.time()
     # the rows of the files the stream's source log committed: progress
     # numInputRows counts every scan of a micro-batch (its empty check
     # and each upsert action), three times the window here
@@ -183,7 +194,8 @@ def main() -> None:
         raise RuntimeError(
             f"streaming_drain processed 0 rows; the window file holds {n_window}"
         )
-    record("streaming_drain", drain_s, drained)
+    record("streaming_drain", t1 - t0, drained)
+    audit_stage("streaming_drain", t0, t1, drained)
 
     # ---- stage 5: analytics over the STAGED table (bucketed layout)
     staged = spark.read.parquet(table_path)
@@ -202,6 +214,10 @@ def main() -> None:
 
     audit_rows = [r.asDict() for r in
                   audit.runs().orderBy("started_at").collect()]
+    if len(audit_rows) != 4:
+        raise RuntimeError(
+            f"the run's audit holds {len(audit_rows)} rows; want 4, one for "
+            "each of full_load, incremental, replay and streaming_drain")
     out = {
         "metric": "pipeline_e2e",
         "sf_dir": sf_dir,
