@@ -18,7 +18,9 @@ instead of silently missing data — degrade loudly, never wrongly.
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import shutil
 from urllib.parse import urlparse
 
@@ -88,6 +90,14 @@ def count_files_with_suffix(
     )
 
 
+# the delta directories of operators/upsert.py's merge-on-read layout
+_DELTA_DIR = re.compile(r"\.s=\d+")
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(("_", ".")) and not _DELTA_DIR.fullmatch(name)
+
+
 def list_file_stats(
     path_str: str, spark: SparkSession | None = None
 ) -> list[tuple[str, int, int]]:
@@ -95,7 +105,9 @@ def list_file_stats(
     ``path_str``, recursive, sorted. Hidden entries (any path component
     starting with ``_`` or ``.``) are skipped at every level — the same
     visibility rule Spark's file index applies, so index artifacts under
-    ``_index/`` and commit markers never perturb the listing. This is the
+    ``_index/`` and commit markers never perturb the listing. The one
+    exception is an upsert table's delta directories (``.s=<n>``): raw
+    Spark reads skip them, but they are table content. This is the
     metadata source for content fingerprints (index_store): names+sizes+
     mtimes change on any rewrite, which is exactly the signal a lakehouse
     snapshot id provides. Missing path -> empty list."""
@@ -108,9 +120,9 @@ def list_file_stats(
                      st.st_mtime_ns // 1_000_000)]
         out: list[tuple[str, int, int]] = []
         for root, dirs, files in os.walk(base):
-            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            dirs[:] = [d for d in dirs if not _hidden(d)]
             for f in files:
-                if f.startswith(("_", ".")):
+                if _hidden(f):
                     continue
                 p = os.path.join(root, f)
                 st = os.stat(p)
@@ -131,10 +143,35 @@ def list_file_stats(
         st = it.next()
         full = st.getPath().toString()
         rel = full[len(base_uri):].lstrip("/")
-        if any(seg.startswith(("_", ".")) for seg in rel.split("/")):
+        if any(_hidden(seg) for seg in rel.split("/")):
             continue
         out.append((rel, st.getLen(), st.getModificationTime()))
     return sorted(out)
+
+
+def glob_parent_names(pattern: str, spark: SparkSession | None = None) -> list[str]:
+    """Names of the directories that hold an entry matching the glob
+    ``pattern``, sorted — e.g. which ``s=*`` directories hold a
+    completeness marker, in one listing call. Hidden names match like
+    any other."""
+    spark = _active_spark(spark)
+    if spark is None:
+        return sorted(os.path.basename(os.path.dirname(p))
+                      for p in glob.glob(_local_path(pattern)))
+    fs, jpath, _ = _hadoop(spark, pattern)
+    return sorted(st.getPath().getParent().getName()
+                  for st in fs.globStatus(jpath) or [])
+
+
+def rename(src: str, dst: str, spark: SparkSession | None = None) -> None:
+    """Move ``src`` to a ``dst`` that does not exist; raises on failure."""
+    spark = _active_spark(spark)
+    if spark is None:
+        os.rename(_local_path(src), _local_path(dst))
+        return
+    fs, jsrc, jvm = _hadoop(spark, src)
+    if not fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)):
+        raise RuntimeError(f"rename failed: {src} -> {dst}")
 
 
 def delete(path_str: str, spark: SparkSession | None = None) -> bool:

@@ -4,19 +4,20 @@ sessions.
 
 The reference's production sink is an actual SQL MERGE (SQL Server,
 misa_crm_loader.py:292-501, tiktok_shop_staging_loader.py:453-468). The
-in-lake replication here is ``operators/upsert.py`` (bucketed parquet +
-``resolve_upsert``); when the session has a v2 catalog that understands
-row-level MERGE (Delta Lake, Iceberg, or Spark's own v2 sources), this
-module emits and executes the SAME contract as one ``MERGE INTO``
-statement and lets the table format do copy-on-write / merge-on-read —
-at 100 TB that is strictly better than rewriting touched buckets
-ourselves, because the format maintains file-level statistics and
-deletion vectors we'd otherwise rebuild.
+in-lake replication here is ``operators/upsert.py`` (bucketed parquet
+with appended deltas, folded by ``fold_versions``); when the session has
+a v2 catalog that understands row-level MERGE (Delta Lake, Iceberg, or
+Spark's own v2 sources), this module emits and executes the SAME
+contract as one ``MERGE INTO`` statement and lets the table format do
+copy-on-write / merge-on-read — at 100 TB that is strictly better than
+folding deltas into buckets ourselves, because the format maintains
+file-level statistics and deletion vectors we'd otherwise rebuild.
 
-The contract (``resolve_upsert`` is the semantic source of truth; its
-pytest + oracle coverage is what every rendering is tested against):
+The contract (``fold_versions``, which ``resolve_upsert`` applies to one
+batch, is the semantic source of truth; its pytest + oracle coverage is
+what every rendering is tested against):
 
-- match on null-safe key equality, like the full-outer join;
+- match on null-safe key equality, like the fold's grouping by key;
 - UPDATE iff target order_col is NULL, older than source, or ties while
   any guard column differs (null-safely);
 - ``etl_created_at`` keeps the target value on UPDATE (carve-out);
@@ -28,7 +29,7 @@ pytest + oracle coverage is what every rendering is tested against):
 
 One renderer (``merge_matched_condition`` + ``_merge_parts``) builds
 every SQL form of it, in four dialects that differ only in identifier
-quoting and null-safe equality: Spark (``resolve_upsert``'s update rule
+quoting and null-safe equality: Spark (``fold_versions``' update rule
 and ``merge_into_statement``), DuckDB/Postgres and SQLite
 (``warehouse.upsert_statement``, INSERT .. ON CONFLICT) and T-SQL
 (``warehouse.tsql_merge_statement``).
@@ -106,7 +107,7 @@ def merge_matched_condition(
     """The WHEN MATCHED guard as a SQL boolean expression over the
     given target/source alias prefixes: stale target, or same version
     with a changed guard column. The one definition of the guard —
-    ``resolve_upsert``'s update rule, ``MERGE INTO`` and the warehouse
+    ``fold_versions``' update rule, ``MERGE INTO`` and the warehouse
     statements all render it."""
     oc = dialect.q(order_col)
     stale = f"{tgt}.{oc} IS NULL OR {tgt}.{oc} < {src}.{oc}"

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.local_rows import local_rows
-from ..operators.upsert import bucket_dirs, stamp_etl_metadata, upsert, write_table
+from ..operators.upsert import read_upsert_table, stamp_etl_metadata, upsert, write_table
 
 AUDIT_SCHEMA = T.StructType([
     T.StructField("batch_id", T.StringType()),
@@ -168,11 +168,11 @@ def full_load_pipeline(
 
     def overwrite(path, out, keys, order_col, guard_cols) -> int:
         write_table(spark, out, path, keys, order_col,
-                    drop_null_key_rows=pipeline.drop_null_key_rows)
-        # an all-empty table writes no bucket partition, so there is
-        # nothing to read back — that IS zero rows; any other read
-        # error fails the load
-        return spark.read.parquet(path).count() if bucket_dirs(spark, path) else 0
+                    drop_null_key_rows=pipeline.drop_null_key_rows,
+                    guard_cols=guard_cols)
+        # read back with the recorded schema: a load of zero rows reads
+        # 0, and any read error fails the load
+        return read_upsert_table(spark, path).count()
 
     with _audited_run(audit, pipeline.name) as (batch_id, fields):
         counts = _load_tables(pipeline, pipeline.extract(spark), batch_id,

@@ -25,11 +25,20 @@ def start_batches(
     checkpoint_dir: str | None = None,
 ):
     """Start ``stream`` with ``apply_batch(batch_df, batch_id)`` run on
-    every non-empty micro-batch; returns the StreamingQuery."""
+    every non-empty micro-batch; returns the StreamingQuery.
+
+    The batch is persisted around the emptiness check and
+    ``apply_batch``, so the source is scanned once however many actions
+    they run — and the progress's ``numInputRows``, which counts every
+    scan of the source, counts each row once."""
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            apply_batch(batch_df, batch_id)
+        batch_df.persist()
+        try:
+            if not batch_df.isEmpty():
+                apply_batch(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
 
     writer = stream.writeStream.foreachBatch(run).outputMode("append")
     if checkpoint_dir:

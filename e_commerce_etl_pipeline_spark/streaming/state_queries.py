@@ -159,7 +159,7 @@ def stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     and return the final table — sequential guarded upserts of
     key-disjoint batches compose to exactly the one-shot MERGE the
     batch oracle expresses."""
-    from ..operators.upsert import write_table
+    from ..operators.upsert import read_upsert_table, write_table
     from .incremental import incremental_upsert_stream
 
     orders = load_table(spark, sf_dir, "orders").select(
@@ -213,7 +213,7 @@ def stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{root}/ckpt",
     )
     return (
-        spark.read.parquet(table)
+        read_upsert_table(spark, table)
         .select(
             "o_orderkey", "o_custkey", "o_orderstatus",
             F.col("o_totalprice").cast("double").alias("o_totalprice"),

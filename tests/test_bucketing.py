@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime
 import hashlib
+import importlib
 import os
 import uuid
 
@@ -24,6 +25,8 @@ from e_commerce_etl_pipeline_spark.operators.upsert import (
     upsert,
 )
 
+# the module, not the function operators/__init__ re-exports
+upsert_mod = importlib.import_module("e_commerce_etl_pipeline_spark.operators.upsert")
 N_BUCKETS = 4
 
 
@@ -121,7 +124,13 @@ def _in_group(spark, fn):
     return group
 
 
-def _check_touched_only(spark, path, rows, batch_rows, num_buckets):
+def _delta_files(path):
+    """{delta_dir_name: [parquet file names]} of an upsert table."""
+    return {d: sorted(f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet"))
+            for d in os.listdir(path) if d.startswith(".s=")}
+
+
+def _check_append_only(spark, path, rows, batch_rows, num_buckets):
     upsert(spark, spark.createDataFrame(rows, _SCHEMA), path, _KEYS,
            "update_time", ["status"], num_buckets=num_buckets)
     before = _bucket_files(path)
@@ -133,31 +142,26 @@ def _check_touched_only(spark, path, rows, batch_rows, num_buckets):
     group = _in_group(spark, lambda: upsert(
         spark, batch, path, _KEYS, "update_time", ["status"],
         num_buckets=num_buckets))
-    after = _bucket_files(path)
-
-    touched = {f"__bucket={r[0]}" for r in
-               batch.select(_bucket_expr(_KEYS, num_buckets)).collect()}
-    for d in touched:
-        assert after[d] != before.get(d), f"touched bucket {d} was not rewritten"
-    for d, files in before.items():
-        if d not in touched:
-            assert after[d] == files, f"untouched bucket {d} was rewritten"
-    assert set(after) == set(before) | touched
+    assert _bucket_files(path) == before, "an upsert batch rewrote a bucket"
+    [(delta, files)] = _delta_files(path).items()
+    assert delta == ".s=1" and len(files) == 1, (delta, files)
+    # raw parquet readers see the base only
+    assert spark.read.parquet(path).count() == len(rows)
     assert sorted(read_upsert_table(spark, path).collect()) == expected
     assert _listing_jobs(spark, group) == [], "upsert listed every bucket"
     return before
 
 
-def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
-    """The scale contract of the bucketed upsert: a batch touching a few
-    keys must leave every other bucket's parquet files byte-identical on
-    disk (same names, sizes, mtimes) and must not list them — per-batch
-    work scales with the batch, not the table. The table must equal
+def test_upsert_appends_one_delta_and_rewrites_no_bucket(spark, tmp_path):
+    """The scale contract of the merge-on-read upsert: a batch is written
+    as one delta file, and every bucket's parquet files stay byte-identical
+    on disk (same names, sizes, mtimes) — per-batch work scales with the
+    batch, not the table, and no bucket is listed. The table must equal
     ``resolve_upsert`` over the whole old table."""
     ts = datetime.datetime(2024, 1, 1)
     rows = [(f"o{i}", "i1", "created", ts) for i in range(64)]
-    _check_touched_only(spark, str(tmp_path / "tbl"), rows,
-                        [("o3", "i1", "shipped", datetime.datetime(2024, 1, 2))], 8)
+    _check_append_only(spark, str(tmp_path / "tbl"), rows,
+                       [("o3", "i1", "shipped", datetime.datetime(2024, 1, 2))], 8)
 
     # More than 32 bucket directories, so a whole-table read would list
     # them in a distributed job; the batch updates one key and inserts
@@ -171,21 +175,61 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
         .select("order_id", _bucket_expr(_KEYS, 64).alias("b")).collect()
         if r.b not in written)
     path = str(tmp_path / "wide")
-    before = _check_touched_only(
+    before = _check_append_only(
         spark, path, rows,
         [("o5", "i1", "shipped", datetime.datetime(2024, 1, 2)),
          (new_key, "i1", "new", ts)], 64)
     assert len(before) > 32
     # the detector is not vacuous: a whole-table read does list in a job
-    group = _in_group(spark, lambda: spark.read.parquet(path).count())
+    group = _in_group(spark, lambda: read_upsert_table(spark, path).count())
     assert _listing_jobs(spark, group)
+
+
+def test_compaction_folds_deltas_into_touched_buckets(spark, tmp_path, monkeypatch):
+    """The batch that brings the live deltas to ``COMPACT_AT`` (4 here)
+    folds them into the buckets they touch: those buckets are rewritten,
+    every other bucket keeps its files, no delta is left, and the table
+    equals the batches applied one by one with ``resolve_upsert``."""
+    COMPACT_AT = 4
+    monkeypatch.setattr(upsert_mod, "COMPACT_AT", COMPACT_AT)
+    path = str(tmp_path / "tbl")
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [(f"o{i}", "i1", "created", ts) for i in range(64)]
+    upsert(spark, spark.createDataFrame(rows, _SCHEMA), path, _KEYS,
+           "update_time", ["status"], num_buckets=16)
+    expected = spark.createDataFrame(rows, _SCHEMA)
+    before = _bucket_files(path)
+    batches = [
+        spark.createDataFrame(
+            [(f"o{j}", "i1", f"s{j}", datetime.datetime(2024, 1, 2)),
+             (f"n{j}", "i1", "new", ts)], _SCHEMA)
+        for j in range(COMPACT_AT)
+    ]
+    for j, batch in enumerate(batches):
+        expected = resolve_upsert(expected, batch, _KEYS, "update_time", ["status"])
+        expected = spark.createDataFrame(expected.collect(), _SCHEMA)
+        upsert(spark, batch, path, _KEYS, "update_time", ["status"])
+        assert len(_delta_files(path)) == (j + 1) % COMPACT_AT
+        if j >= COMPACT_AT - 2:  # folded from live deltas, then compacted
+            assert sorted(read_upsert_table(spark, path).collect()) == sorted(expected.collect())
+    touched = {f"__bucket={r[0]}" for b in batches
+               for r in b.select(_bucket_expr(_KEYS, 16)).collect()}
+    after = _bucket_files(path)
+    assert set(before) - touched, "need an untouched bucket"
+    assert set(after) == set(before) | touched
+    for d, files in after.items():
+        if d in touched:
+            assert len(files) == 1 and files != before.get(d), d
+        else:
+            assert files == before[d], f"untouched bucket {d} was rewritten"
+    assert not [c for c in os.listdir(path) if c.startswith((".compact", "_compaction"))]
 
 
 def test_compact_buckets(spark, tmp_path):
     """Small-file accretion comes from append-mode ingestion (K1) and
     multi-task bulk loads — each append drops one more file into every
-    bucket it touches. (Upsert batches do NOT accrete: dynamic partition
-    overwrite replaces the touched bucket wholesale — proven above.)
+    bucket it touches. (Upsert batches do NOT accrete in the buckets:
+    they append deltas, which compaction folds — proven above.)
     Compaction rewrites only buckets over the file threshold, preserves
     rows, leaves slim buckets' files untouched."""
     from e_commerce_etl_pipeline_spark.operators.upsert import compact_buckets
@@ -236,11 +280,10 @@ def _content_hash(spark, path):
 
 
 def test_failed_upsert_leaves_table_unchanged_and_replay_converges(spark, tmp_path):
-    """The rewrite is one job that reads the buckets it replaces; dynamic
-    partition overwrite swaps them in only at job commit. A batch whose
-    payload raises only when a full row is evaluated — after the bucket
-    collect, inside the write job — must leave the table's files and
-    rows as they were, and replaying the corrected batch must reach the
+    """A batch is one job writing its delta. A batch whose payload
+    raises only when a full row is evaluated — inside that job — must
+    leave the table's files and rows as they were, with no delta
+    directory behind, and replaying the corrected batch must reach the
     content hash of a clean run (ST3)."""
     ts = datetime.datetime(2024, 1, 1)
     schema = _SCHEMA + ", payload string"
@@ -295,3 +338,87 @@ def test_upsert_into_table_without_rows(spark, tmp_path):
            path, _KEYS, "update_time", ["status"], num_buckets=8)
     assert [tuple(r) for r in read_upsert_table(spark, path).collect()] == [
         ("o1", "i1", "created", ts)]
+
+
+def _jobs(spark, group):
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_declares_recorded_schema(spark, tmp_path):
+    """``write_table`` records the table schema and ``read_upsert_table``
+    declares it, so building the read — base alone, or base and live
+    deltas — starts no Spark job; inferring a parquet schema starts one.
+    Four buckets keep the root listing on the driver."""
+    path = str(tmp_path / "tbl")
+    ts = datetime.datetime(2024, 1, 1)
+    upsert(spark, spark.createDataFrame([(f"o{i}", "i1", "created", ts) for i in range(20)],
+                                        _SCHEMA), path, _KEYS, "update_time", ["status"],
+           num_buckets=4)
+    assert _jobs(spark, _in_group(spark, lambda: read_upsert_table(spark, path))) == []
+    upsert(spark, spark.createDataFrame([("o1", "i1", "shipped", ts)], _SCHEMA),
+           path, _KEYS, "update_time", ["status"])
+    group = _in_group(spark, lambda: read_upsert_table(spark, path))
+    assert _jobs(spark, group) == []
+    assert read_upsert_table(spark, path).schema == spark.createDataFrame([], _SCHEMA).schema
+    # the detector is not vacuous: an inferring read does start a job
+    assert _jobs(spark, _in_group(spark, lambda: spark.read.parquet(path)))
+
+
+def test_compaction_crash_inside_swap_stays_readable_and_converges(
+        spark, tmp_path, monkeypatch):
+    """The compaction commit swaps each staged bucket in by a delete and a
+    rename. A process that stops between one bucket's delete and its
+    rename leaves the table readable, with the contents of the finished
+    compaction, and both a re-run of the compaction and a replay of the
+    batch that ran it converge to the uncrashed table."""
+    import shutil
+
+    from e_commerce_etl_pipeline_spark.operators import fsops
+
+    monkeypatch.setattr(upsert_mod, "COMPACT_AT", 3)
+    schema = _SCHEMA + ", payload string"
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [(f"o{i}", "i1", "created", ts, "v0") for i in range(40)]
+    batches = [[(f"o{i}", "i1", "shipped", datetime.datetime(2024, 1, 2 + j), f"v{j}")
+                for i in range(j, 40, 5)] + [(f"n{j}", "i1", "new", ts, "v0")]
+               for j in range(3)]
+
+    def apply(path, batch):
+        upsert(spark, spark.createDataFrame(batch, schema), path, _KEYS,
+               "update_time", ["status"], num_buckets=8)
+
+    clean = str(tmp_path / "clean")
+    for b in [rows, *batches]:
+        apply(clean, b)
+    clean_hash = _content_hash(spark, clean)
+
+    path = str(tmp_path / "tbl")
+    for b in [rows, *batches[:-1]]:
+        apply(path, b)
+    rename, calls = fsops.rename, []
+
+    def rename_once(src, dst, spark_=None):
+        calls.append(dst)
+        if len(calls) == 2:
+            raise RuntimeError("stopped inside the swap")
+        rename(src, dst, spark_)
+
+    monkeypatch.setattr(fsops, "rename", rename_once)
+    with pytest.raises(RuntimeError, match="stopped inside the swap"):
+        apply(path, batches[-1])
+    monkeypatch.setattr(fsops, "rename", rename)
+    lost = os.path.basename(calls[1])
+    assert lost not in os.listdir(path), "the crash must fall between delete and rename"
+    assert "_compaction" in os.listdir(path)
+    assert _content_hash(spark, path) == clean_hash
+
+    rerun = str(tmp_path / "rerun")
+    shutil.copytree(path, rerun)
+    spark.catalog.refreshByPath(rerun)
+    upsert_mod.compact_buckets(spark, rerun)
+    apply(path, batches[-1])  # the replayed batch
+    for p in (rerun, path):
+        assert _content_hash(spark, p) == clean_hash
+        assert lost in os.listdir(p)
+        assert not {"_compaction", ".compact"} & set(os.listdir(p))

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from e_commerce_etl_pipeline_spark.operators import fsops, index_store
 from e_commerce_etl_pipeline_spark.operators.upsert import (
+    read_upsert_table,
     upsert as run_upsert,
     write_table,
 )
@@ -161,13 +162,16 @@ def test_upsert_invalidates_index(spark, tmp_path):
     )
     assert fsops.exists(f"{t}/_index/test_inv", spark)
     batch = spark.createDataFrame([(3, 30, "c")], "k long, ord long, val string")
+    fp = index_store.table_fingerprint(t, spark)
     run_upsert(spark, batch, t, ["k"], "ord")
+    # the batch is a hidden delta directory, but table content all the same
+    assert index_store.table_fingerprint(t, spark) != fp
     assert not fsops.exists(f"{t}/_index/test_inv", spark), (
         "mutating upsert must drop derived index artifacts"
     )
     # and a rebuilt artifact sees the post-upsert contents
     out = index_store.stored_df(
         spark, t, "test_inv",
-        lambda: spark.read.parquet(t).select("k"),
+        lambda: read_upsert_table(spark, t).select("k"),
     )
     assert out.count() == 3

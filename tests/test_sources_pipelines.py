@@ -12,6 +12,7 @@ from e_commerce_etl_pipeline_spark.pipelines import (
     full_load_pipeline,
     incremental_pipeline,
 )
+from e_commerce_etl_pipeline_spark.operators.upsert import read_upsert_table
 from e_commerce_etl_pipeline_spark.pipelines.etl import SourcePipeline
 from e_commerce_etl_pipeline_spark.schemas import TIKTOK_ORDER_SCHEMA
 from e_commerce_etl_pipeline_spark.sources import (
@@ -193,7 +194,7 @@ def test_full_load_then_incremental(spark, tmp_path):
 
     counts = full_load_pipeline(spark, pipe, staging, audit)
     assert counts == {"tiktok_shop_order_detail": 2}
-    tbl = spark.read.parquet(f"{staging}/tiktok_shop_order_detail")
+    tbl = read_upsert_table(spark, f"{staging}/tiktok_shop_order_detail")
     assert {r.order_id for r in tbl.collect()} == {"T1", "T2"}
     assert "etl_batch_id" in tbl.columns
 
@@ -207,7 +208,6 @@ def test_full_load_then_incremental(spark, tmp_path):
     counts2 = incremental_pipeline(spark, pipe2, staging, window=(4000, 6000), audit=audit)
     assert counts2 == {"tiktok_shop_order_detail": 1}
 
-    from e_commerce_etl_pipeline_spark.operators.upsert import read_upsert_table
     out = {r.order_id: r.status for r in
            read_upsert_table(spark, f"{staging}/tiktok_shop_order_detail").collect()}
     assert out == {"T1": "SHIPPED", "T2": "CREATED"}
@@ -286,7 +286,6 @@ def test_incremental_replay_noop(spark, tmp_path):
     # replay the full window twice — idempotent (ST3)
     for _ in range(2):
         incremental_pipeline(spark, pipe, staging, window=(0, 10_000))
-    from e_commerce_etl_pipeline_spark.operators.upsert import read_upsert_table
     tbl = read_upsert_table(spark, f"{staging}/tiktok_shop_order_detail")
     assert tbl.count() == 2
     assert tbl.filter(F.col("order_id").isNull()).count() == 0

@@ -8,7 +8,7 @@ import time
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from e_commerce_etl_pipeline_spark.operators.upsert import read_upsert_table
+from e_commerce_etl_pipeline_spark.operators.upsert import read_upsert_table, upsert
 from e_commerce_etl_pipeline_spark.streaming import (
     incremental_upsert_stream,
     run_incremental_batch,
@@ -139,3 +139,33 @@ def test_empty_micro_batch_is_skipped(spark, tmp_path):
     assert [p["batchId"] for p in q.recentProgress] == [0]
     assert q.recentProgress[0]["numInputRows"] == 0
     assert not table.exists()
+
+
+def test_stream_batch_scans_source_once(spark, tmp_path):
+    """Progress ``numInputRows`` counts every scan of the source. The
+    runner persists the micro-batch around its emptiness check and the
+    upsert, so a 100-row batch reads as 100 rows, not once per action,
+    and leaves the table a one-shot upsert of the same rows leaves."""
+    src_dir = tmp_path / "incoming"
+    rows = [(f"o{i}", "created" if i % 3 else "paid",
+             ts("2024-01-01T00:00:00") + datetime.timedelta(minutes=i % 7))
+            for i in range(100)]
+    seed = [(f"o{i}", "old", ts("2024-01-01T00:03:00")) for i in range(0, 100, 2)]
+    spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(str(src_dir / "b1"))
+    table, oneshot = str(tmp_path / "tbl"), str(tmp_path / "oneshot")
+    for path in (table, oneshot):
+        upsert(spark, spark.createDataFrame(seed, SCHEMA), path, ["order_id"],
+               "update_time", ["status"])
+
+    stream = spark.readStream.schema(SCHEMA).option(
+        "recursiveFileLookup", "true").parquet(str(src_dir))
+    q = incremental_upsert_stream(spark, stream, table, ["order_id"], "update_time",
+                                  guard_cols=["status"],
+                                  checkpoint_dir=str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    assert [p.numInputRows for p in q.recentProgress if p.numInputRows] == [100]
+
+    upsert(spark, spark.createDataFrame(rows, SCHEMA), oneshot, ["order_id"],
+           "update_time", ["status"])
+    assert sorted(read_upsert_table(spark, table).collect()) == sorted(
+        read_upsert_table(spark, oneshot).collect())

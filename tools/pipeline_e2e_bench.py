@@ -136,6 +136,7 @@ def main() -> None:
 
     # ---- stage 2: incremental lookback window (newest 2% of ts range)
     from e_commerce_etl_pipeline_spark.operators.upsert import (
+        read_upsert_table,
         stamp_etl_metadata,
     )
 
@@ -197,8 +198,8 @@ def main() -> None:
     record("streaming_drain", t1 - t0, drained)
     audit_stage("streaming_drain", t0, t1, drained)
 
-    # ---- stage 5: analytics over the STAGED table (bucketed layout)
-    staged = spark.read.parquet(table_path)
+    # ---- stage 5: analytics over the STAGED table (base + live deltas)
+    staged = read_upsert_table(spark, table_path)
     t0 = time.time()
     newest = staged.groupBy("user_id").agg(
         F.max_by("etype_clean", F.col("ts")).alias("last_type"),
