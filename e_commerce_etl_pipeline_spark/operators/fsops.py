@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import glob
 import os
-import re
 import shutil
 from urllib.parse import urlparse
 
@@ -90,12 +89,16 @@ def count_files_with_suffix(
     )
 
 
-# the delta directories of operators/upsert.py's merge-on-read layout
-_DELTA_DIR = re.compile(r"\.s=\d+")
+# Name prefix of the delta directories (``.s=<n>``) of
+# operators/upsert.py's merge-on-read layout, defined here once: the
+# upsert writes them and list_file_stats counts them as table content.
+DELTA_PREFIX = ".s="
 
 
 def _hidden(name: str) -> bool:
-    return name.startswith(("_", ".")) and not _DELTA_DIR.fullmatch(name)
+    if name.startswith(DELTA_PREFIX) and name[len(DELTA_PREFIX):].isdigit():
+        return False
+    return name.startswith(("_", "."))
 
 
 def list_file_stats(

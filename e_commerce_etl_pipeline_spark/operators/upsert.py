@@ -22,10 +22,11 @@ no-op; an older order_col never regresses a newer row.
 
 Layout (merge-on-read)::
 
-    _bucket_count     bucket count, recorded at creation
-    _table            JSON: the table schema, recorded at creation so no
-                      read infers one, and the keys, order and guard
-                      columns the deltas fold with
+    _table            JSON: the table schema and bucket count, recorded
+                      at creation so no read infers a schema and no
+                      writer routes keys to the wrong bucket, and the
+                      keys, order and guard columns the deltas fold with,
+                      recorded by the upsert that writes the first delta
     __bucket=<n>/     the base: one row per key, hash-bucketed on the key
     .s=<seq>/         one delta per upsert batch: the batch's deduped rows
                       with ``__bucket``, ``__seq`` and ``__batch_time``,
@@ -80,11 +81,10 @@ COMPACT_AT = 32
 
 q = SPARK_DIALECT.q
 
-_BUCKET_MARKER = "_bucket_count"
 _META = "_table"
 _COMMIT = "_compaction"
 _STAGE = ".compact"
-_SEQ = ".s="
+_SEQ = fsops.DELTA_PREFIX
 
 
 def _bucket_sql(keys: Sequence[str], num_buckets: int) -> str:
@@ -95,54 +95,43 @@ def _bucket_expr(keys: Sequence[str], num_buckets: int) -> Column:
     return F.expr(_bucket_sql(keys, num_buckets)).alias("__bucket")
 
 
-def _write_bucket_marker(
-    table_path: str, num_buckets: int, spark: SparkSession | None = None
-) -> None:
-    fsops.write_text(f"{table_path}/{_BUCKET_MARKER}", str(num_buckets), spark)
-
-
-def _read_bucket_marker(
-    table_path: str, spark: SparkSession | None = None
-) -> int | None:
-    """The table's actual bucket count, recorded at creation. A caller
-    upserting with a different num_buckets than the layout was written
-    with would route batch keys to the wrong bucket partitions and
-    silently DUPLICATE keys — the marker makes the layout authoritative,
-    exactly like a lakehouse table's bucket spec living in its metadata
-    rather than in every writer's config. Read/written through the
-    Hadoop FileSystem API so the layout works on HDFS/S3A, not just
-    local disk."""
-    text = fsops.read_text(f"{table_path}/{_BUCKET_MARKER}", spark)
-    try:
-        return int(text.strip()) if text is not None else None
-    except ValueError:
-        return None
-
-
 def _read_json(spark: SparkSession, path: str) -> dict | None:
     text = fsops.read_text(path, spark)
     return json.loads(text) if text else None
 
 
 def _write_meta(spark: SparkSession, table_path: str, schema: StructType,
-                merge: dict) -> None:
+                num_buckets: int, merge: dict | None = None) -> None:
+    meta = {"schema": schema.jsonValue(), "num_buckets": num_buckets}
+    if merge is not None:
+        meta["merge"] = merge
     # atomic: an upsert may rewrite it, and every read needs it whole
-    fsops.write_text_atomic(f"{table_path}/{_META}",
-                            json.dumps({"schema": schema.jsonValue(), "merge": merge}), spark)
+    fsops.write_text_atomic(f"{table_path}/{_META}", json.dumps(meta), spark)
 
 
 def _merge_spec(keys: Sequence[str], order_col: str, guard_cols: Sequence[str]) -> dict:
     return {"keys": list(keys), "order_col": order_col, "guard_cols": list(guard_cols)}
 
 
-def _table_meta(spark: SparkSession, table_path: str) -> tuple[StructType, dict | None]:
-    """The table schema (``__bucket`` included) and merge spec that
-    ``write_table`` or the last ``upsert`` recorded. A table written
-    without the record (plain appends) has its schema inferred."""
+def _table_meta(
+    spark: SparkSession, table_path: str
+) -> tuple[StructType, int | None, dict | None]:
+    """The table schema (``__bucket`` included), bucket count and merge
+    spec recorded in ``_table``, read through the Hadoop FileSystem API.
+
+    The recorded bucket count wins over an upserting caller's: a batch
+    bucketed with another count would route keys to the wrong bucket
+    partitions and silently DUPLICATE them, so the layout is
+    authoritative, like a lakehouse table's bucket spec living in its
+    metadata rather than in every writer's config. A table without the
+    record (plain appends, or written before it existed) has its schema
+    inferred and its count read from the older ``_bucket_count`` marker."""
     meta = _read_json(spark, f"{table_path}/{_META}")
     if meta is None:
-        return spark.read.parquet(table_path).schema, None
-    return StructType.fromJson(meta["schema"]), meta["merge"]
+        text = fsops.read_text(f"{table_path}/_bucket_count", spark)
+        count = int(text) if text and text.strip().isdigit() else None
+        return spark.read.parquet(table_path).schema, count, None
+    return StructType.fromJson(meta["schema"]), meta["num_buckets"], meta.get("merge")
 
 
 def write_table(
@@ -154,21 +143,18 @@ def write_table(
     num_buckets: int = 64,
     drop_null_key_rows: bool = False,
     tiebreak: Sequence[str] = (),
-    guard_cols: Sequence[str] = (),
 ) -> None:
     """Full-load (truncate+insert, K2) writer in the upsert-compatible
     hash-bucketed layout: dedup keep-newest, optional null-key drop (D5,
-    MISA parity), bucket by key hash, overwrite. The overwrite removes
-    any deltas and compaction state with the old base. ``guard_cols``
-    are recorded with the keys and order column for later upserts."""
+    MISA parity), bucket by key hash, overwrite, and record the schema
+    and bucket count in ``_table``. The overwrite removes any deltas and
+    compaction state with the old base."""
     out = keep_newest(df, keys, order_col, tiebreak)
     if drop_null_key_rows:
         out = drop_null_keys(out, keys)
     out = out.withColumn("__bucket", _bucket_expr(keys, num_buckets))
     out.write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
-    _write_bucket_marker(table_path, num_buckets, spark)
-    _write_meta(spark, table_path, out.schema,
-                _merge_spec(keys, order_col, guard_cols))
+    _write_meta(spark, table_path, out.schema, num_buckets)
     # Derived index artifacts (IVF lists, cluster assignments, TF/basket
     # intermediates) are now stale — drop them eagerly. The fingerprint
     # keys in index_store already prevent stale READS; this reclaims the
@@ -407,20 +393,19 @@ def upsert(
     load (``write_table``)."""
     if not fsops.exists(table_path, spark):
         write_table(spark, source, table_path, keys, order_col, num_buckets,
-                    drop_null_key_rows, tiebreak, guard_cols)
+                    drop_null_key_rows, tiebreak)
         return
     _recover(spark, table_path)
-    # The existing layout's bucket count wins over the caller's argument
-    # (see _read_bucket_marker — a mismatch would silently duplicate keys).
-    num_buckets = _read_bucket_marker(table_path, spark) or num_buckets
-    schema, merge = _table_meta(spark, table_path)
+    # the table's recorded bucket count wins over the argument (_table_meta)
+    schema, recorded, merge = _table_meta(spark, table_path)
+    num_buckets = recorded or num_buckets
     seqs = _live_seqs(spark, table_path)
     spec = _merge_spec(keys, order_col, guard_cols)
     if merge != spec:
         if seqs:  # the live deltas fold under the spec they were written with
             compact_buckets(spark, table_path)
             seqs = []
-        _write_meta(spark, table_path, schema, spec)
+        _write_meta(spark, table_path, schema, num_buckets, spec)
     seq = (seqs[-1] if seqs else 0) + 1
 
     rows = keep_newest(source, keys, order_col, tiebreak)
@@ -454,7 +439,7 @@ def upsert(
 def read_upsert_table(spark: SparkSession, table_path: str) -> DataFrame:
     """The table's rows: the base folded with its live deltas, read with
     the recorded schema. With no live delta this is a scan of the base."""
-    schema, merge = _table_meta(spark, table_path)
+    schema, _, merge = _table_meta(spark, table_path)
     commit = _read_json(spark, f"{table_path}/{_COMMIT}")
     df = _read_base(spark, table_path, schema, commit)
     seqs = _live_seqs(spark, table_path, commit["upto"] if commit else 0)
@@ -490,7 +475,7 @@ def compact_buckets(
     }
     if not (seqs or bloated):
         return []
-    schema, merge = _table_meta(spark, table_path)
+    schema, _, merge = _table_meta(spark, table_path)
     touched: set[int] = set()
     if seqs:
         deltas = _read_deltas(spark, table_path, schema, seqs)

@@ -168,8 +168,7 @@ def full_load_pipeline(
 
     def overwrite(path, out, keys, order_col, guard_cols) -> int:
         write_table(spark, out, path, keys, order_col,
-                    drop_null_key_rows=pipeline.drop_null_key_rows,
-                    guard_cols=guard_cols)
+                    drop_null_key_rows=pipeline.drop_null_key_rows)
         # read back with the recorded schema: a load of zero rows reads
         # 0, and any read error fails the load
         return read_upsert_table(spark, path).count()

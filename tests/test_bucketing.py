@@ -365,6 +365,27 @@ def test_read_declares_recorded_schema(spark, tmp_path):
     assert _jobs(spark, _in_group(spark, lambda: spark.read.parquet(path)))
 
 
+def test_upsert_keeps_bucket_count_of_older_layout(spark, tmp_path):
+    """A table written before ``_table`` existed records its bucket count
+    in a ``_bucket_count`` marker; an upsert with another count still
+    routes keys to the table's own buckets."""
+    from e_commerce_etl_pipeline_spark.operators import fsops
+
+    path = str(tmp_path / "tbl")
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [(f"o{i}", "i1", "created", ts) for i in range(20)]
+    upsert(spark, spark.createDataFrame(rows, _SCHEMA), path, _KEYS,
+           "update_time", ["status"], num_buckets=4)
+    os.remove(os.path.join(path, "_table"))
+    fsops.write_text(f"{path}/_bucket_count", "4", spark)
+    upsert(spark, spark.createDataFrame(
+        [(f"o{i}", "i1", "shipped", datetime.datetime(2024, 1, 2)) for i in range(20)],
+        _SCHEMA), path, _KEYS, "update_time", ["status"], num_buckets=64)
+    upsert_mod.compact_buckets(spark, path)
+    assert _bucket_files(path).keys() <= {f"__bucket={b}" for b in range(4)}
+    assert sorted(r.status for r in read_upsert_table(spark, path).collect()) == ["shipped"] * 20
+
+
 def test_compaction_crash_inside_swap_stays_readable_and_converges(
         spark, tmp_path, monkeypatch):
     """The compaction commit swaps each staged bucket in by a delete and a

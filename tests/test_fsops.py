@@ -11,6 +11,7 @@ schemes without a session.
 from __future__ import annotations
 
 import datetime
+import json
 
 import pytest
 
@@ -62,14 +63,14 @@ def test_bucket_marker_and_upsert_through_file_uri(spark, tmp_path):
     )
     write_table(spark, target, uri, keys=["order_id"], order_col="update_time",
                 num_buckets=4)
-    # marker written through the FS API and readable back
-    assert fsops.read_text(f"{uri}/_bucket_count", spark) == "4"
+    # the bucket count is recorded through the FS API and readable back
+    assert json.loads(fsops.read_text(f"{uri}/_table", spark))["num_buckets"] == 4
 
     batch = spark.createDataFrame(
         [(1, "SHIPPED", 11), (3, "NEW", 5)],
         "order_id int, status string, update_time int",
     )
-    # wrong num_buckets on purpose: the marker must win through the URI path
+    # wrong num_buckets on purpose: the recorded count must win through the URI path
     upsert(spark, batch, uri, ["order_id"], "update_time",
            guard_cols=["status"], num_buckets=64)
     got = {(r["order_id"], r["status"]) for r in read_upsert_table(spark, uri).collect()}

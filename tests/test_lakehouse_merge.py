@@ -178,8 +178,8 @@ def test_fallback_parquet_path(spark, tmp_path):
     backend = lakehouse_upsert(
         spark, batch, "ignored.table", keys=["order_id"],
         order_col="update_time", guard_cols=["status"], fallback_path=path,
-        # deliberately NOT the table's bucket count (4): the layout's
-        # _bucket_count marker must win, else keys silently duplicate
+        # deliberately NOT the table's bucket count (4): the count
+        # recorded in the layout's _table must win, else keys duplicate
         num_buckets=64,
     )
     assert backend == "parquet"
