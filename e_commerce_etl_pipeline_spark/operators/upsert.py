@@ -56,9 +56,9 @@ from __future__ import annotations
 
 import json
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructType
 
@@ -93,6 +93,17 @@ def _bucket_sql(keys: Sequence[str], num_buckets: int) -> str:
 
 def _bucket_expr(keys: Sequence[str], num_buckets: int) -> Column:
     return F.expr(_bucket_sql(keys, num_buckets)).alias("__bucket")
+
+
+def observe_rows(df: DataFrame) -> tuple[DataFrame, Callable[[], int]]:
+    """``df`` with its row count observed, and a function returning that
+    count. The count rides the first action on the returned frame
+    (``DataFrame.observe``) and starts no job of its own; the function
+    waits for that action. Only the first action counts, and a ``limit``
+    or ``first()`` stops it early, so hand the frame to the one action
+    that reads all of it."""
+    seen = Observation()
+    return df.observe(seen, F.count(F.lit(1)).alias("rows")), lambda: seen.get["rows"]
 
 
 def _read_json(spark: SparkSession, path: str) -> dict | None:
@@ -390,10 +401,17 @@ def upsert(
     table, no join, no bucket rewrite. The batch that brings the live
     deltas to ``COMPACT_AT`` then folds them into the buckets
     (``compact_buckets``). A first batch into a missing table is a full
-    load (``write_table``)."""
+    load (``write_table``).
+
+    A batch with no rows to write is a no-op: it leaves no live delta,
+    and into a missing table it creates no table. That is found on the
+    write itself (an empty delta is deleted, an empty full load removed),
+    so the batch is not counted in a job of its own."""
     if not fsops.exists(table_path, spark):
         write_table(spark, source, table_path, keys, order_col, num_buckets,
                     drop_null_key_rows, tiebreak)
+        if not bucket_dirs(spark, table_path):
+            fsops.delete(table_path, spark)
         return
     _recover(spark, table_path)
     # the table's recorded bucket count wins over the argument (_table_meta)
@@ -422,14 +440,18 @@ def upsert(
         cols.append(f"CAST(current_timestamp() AS "
                     f"{schema[ETL_UPDATED].dataType.simpleString()}) AS __batch_time")
     path = _seq_dir(table_path, seq)
+    delta, written = observe_rows(rows.selectExpr(*cols))
     try:
         # _SUCCESS, written by the job commit after every data file, is
         # the delta's completeness marker: pin it on for this write
-        rows.selectExpr(*cols).write.mode("overwrite").option(
+        delta.write.mode("overwrite").option(
             "mapreduce.fileoutputcommitter.marksuccessfuljobs", "true").parquet(path)
     except Exception:
         fsops.delete(path, spark)
         raise
+    if not written():
+        fsops.delete(path, spark)
+        return
     if len(seqs) + 1 >= COMPACT_AT:
         compact_buckets(spark, table_path)
     else:

@@ -9,13 +9,14 @@
   keyed upsert (incremental_etl_dag.py's 15-minute path, ST1-ST3).
   The bridge/backfill DAG (ST4) is the same call with a wider window.
 - ``RunAudit``: etl_control.batch_runs parity (ST5) — one row per run,
-  appended to a small parquet audit table. Every pipeline function runs
-  inside ``_audited_run``, the one place that writes the SUCCESS / FAILED
-  row.
+  written as one small JSON file into the audit directory, with no Spark
+  job. Every pipeline function runs inside ``_audited_run``, the one
+  place that writes the SUCCESS / FAILED row.
 """
 
 from __future__ import annotations
 
+import json
 import time
 import uuid
 from collections.abc import Callable, Sequence
@@ -26,8 +27,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.local_rows import local_rows
-from ..operators.upsert import read_upsert_table, stamp_etl_metadata, upsert, write_table
+from ..operators import fsops
+from ..operators.upsert import (
+    observe_rows,
+    read_upsert_table,
+    stamp_etl_metadata,
+    upsert,
+    write_table,
+)
 
 AUDIT_SCHEMA = T.StructType([
     T.StructField("batch_id", T.StringType()),
@@ -59,7 +66,13 @@ class RunAudit:
     execution budget, >20% error-rate alert): every recorded run is
     stamped with its duration and an over-budget mark, and ``alerts()``
     surfaces the sources breaching either threshold so an orchestrator
-    can page exactly like the reference's Airflow SLA/alert hooks."""
+    can page exactly like the reference's Airflow SLA/alert hooks.
+
+    Each row is one JSON file in the ``path`` directory, written through
+    the Hadoop FileSystem API (``fsops``): recording a run starts no Spark
+    job. The file is written under a hidden name and renamed into place,
+    so a reader never sees a half-written row. ``runs()`` reads the
+    directory's ``*.json`` files with ``AUDIT_SCHEMA``."""
 
     spark: SparkSession
     path: str
@@ -72,12 +85,15 @@ class RunAudit:
         if base["started_at"] is not None and base["finished_at"] is not None:
             base["duration_s"] = float(base["finished_at"] - base["started_at"])
             base["over_budget"] = base["duration_s"] > self.budget_s
-        df = local_rows(self.spark, [tuple(base[f.name] for f in AUDIT_SCHEMA.fields)],
-                        AUDIT_SCHEMA)
-        df.write.mode("append").parquet(self.path)
+        line = json.dumps({f.name: base[f.name] for f in AUDIT_SCHEMA.fields})
+        name = f"{uuid.uuid4().hex}.json"
+        tmp = f"{self.path}/.{name}"   # hidden from Spark's file index
+        fsops.write_text(tmp, line + "\n", self.spark)
+        fsops.rename(tmp, f"{self.path}/{name}", self.spark)
 
     def runs(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        return (self.spark.read.schema(AUDIT_SCHEMA)
+                .option("pathGlobFilter", "*.json").json(self.path))
 
     def alerts(self) -> DataFrame:
         """Per-source health: failure rate vs the alert threshold and
@@ -258,18 +274,13 @@ def incremental_pipeline(
     upsert per table. Replays/overlapping windows are no-ops (ST3)."""
 
     def merge(path, out, keys, order_col, guard_cols) -> int:
-        # One materialization per table: the count action populates the
-        # cache and the upsert's source side reads it back, instead of
-        # re-running the extract->transform lineage a second time.
-        out = out.persist()
-        try:
-            n = out.count()
-            if n:
-                upsert(spark, out, path, keys, order_col, guard_cols,
-                       drop_null_key_rows=pipeline.drop_null_key_rows)
-            return n
-        finally:
-            out.unpersist()
+        # The rows offered (before dedup) are counted by the upsert's own
+        # write, which reads the batch once; an empty batch is a no-op
+        # there.
+        out, offered = observe_rows(out)
+        upsert(spark, out, path, keys, order_col, guard_cols,
+               drop_null_key_rows=pipeline.drop_null_key_rows)
+        return offered()
 
     with _audited_run(audit, pipeline.name) as (batch_id, fields):
         counts = _load_tables(pipeline, pipeline.extract(spark, window=window),

@@ -21,7 +21,7 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.upsert import upsert
+from ..operators.upsert import observe_rows, upsert
 from .runner import start_batches
 
 
@@ -39,22 +39,19 @@ def run_incremental_batch(
     ``order_col`` (ST2 watermark analog), upsert into the table. Returns
     rows considered. Replay-safe by construction.
 
-    The lookback-filtered source is scanned ONCE: the batch is pinned with
-    an eager localCheckpoint, so both the count and the upsert read the
-    materialized blocks instead of re-running the source scan (the
-    count-then-act double read was r4 finding #1; same fix shape as
-    pipelines/etl.py's write-then-count)."""
+    The lookback-filtered source is scanned once, by the upsert's write:
+    the rows considered are counted on that write (``observe_rows``, as
+    ``pipelines/etl.py``'s incremental path counts them), and an empty
+    batch is a no-op inside ``upsert``."""
     batch = source
     if lookback is not None:
         # naive-UTC to match the column convention (order_col timestamps
         # are session-tz/UTC); datetime.utcnow() is deprecated
         now = now or datetime.now(timezone.utc).replace(tzinfo=None)
         batch = source.filter(F.col(order_col) >= F.lit(now - lookback))
-    batch = batch.localCheckpoint(eager=True)
-    n = batch.count()
-    if n:
-        upsert(spark, batch, table_path, keys, order_col, guard_cols)
-    return n
+    batch, considered = observe_rows(batch)
+    upsert(spark, batch, table_path, keys, order_col, guard_cols)
+    return considered()
 
 
 def incremental_upsert_stream(

@@ -23,6 +23,7 @@ from e_commerce_etl_pipeline_spark.operators.upsert import (
     read_upsert_table,
     resolve_upsert,
     upsert,
+    write_table,
 )
 
 # the module, not the function operators/__init__ re-exports
@@ -327,12 +328,15 @@ def test_failed_upsert_leaves_table_unchanged_and_replay_converges(spark, tmp_pa
 
 
 def test_upsert_into_table_without_rows(spark, tmp_path):
-    """A full load of zero rows leaves no bucket directory to read a
-    schema from; the next upsert loads its batch like a first write."""
+    """An upsert of zero rows into a missing table creates no table. A
+    full load of zero rows leaves no bucket directory to read a schema
+    from; the next upsert loads its batch like a first write."""
     path = str(tmp_path / "tbl")
     ts = datetime.datetime(2024, 1, 1)
-    upsert(spark, spark.createDataFrame([], _SCHEMA), path, _KEYS,
-           "update_time", ["status"], num_buckets=8)
+    empty = spark.createDataFrame([], _SCHEMA)
+    upsert(spark, empty, path, _KEYS, "update_time", ["status"], num_buckets=8)
+    assert not os.path.exists(path)
+    write_table(spark, empty, path, _KEYS, "update_time", num_buckets=8)
     assert not _bucket_files(path)
     upsert(spark, spark.createDataFrame([("o1", "i1", "created", ts)], _SCHEMA),
            path, _KEYS, "update_time", ["status"], num_buckets=8)

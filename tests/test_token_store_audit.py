@@ -111,16 +111,17 @@ def _plan_node(df):
     return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
 
 
-def test_control_rows_are_local_relations(spark, tmp_path, monkeypatch):
-    """The audit row and the token row are planned as a LocalRelation —
-    no pickled Python RDD, so writing them starts no Python worker — with
-    the tables' schemas and values, NULL columns included, unchanged."""
+def test_control_rows_are_local_relations(spark, tmp_path, monkeypatch, jobs_of):
+    """Recording an audit row builds no DataFrame and starts no Spark job;
+    the token row is planned as a LocalRelation — no pickled Python RDD,
+    so writing it starts no Python worker. Both keep their tables'
+    schemas and values, NULL columns included."""
     made = _spy_frames(monkeypatch, spark)
     audit = RunAudit(spark, str(tmp_path / "runs"), budget_s=10.0)
-    audit.record({"batch_id": "b1", "source_name": "tiktok", "status": "SUCCESS",
-                  "records_loaded": 5, "started_at": 1.0, "finished_at": 2.5})
-    assert [_plan_node(df) for df in made] == ["LocalRelation"]
-    assert made[0].schema == AUDIT_SCHEMA
+    assert jobs_of(lambda: audit.record({
+        "batch_id": "b1", "source_name": "tiktok", "status": "SUCCESS",
+        "records_loaded": 5, "started_at": 1.0, "finished_at": 2.5})) == []
+    assert made == []
     assert audit.runs().schema == AUDIT_SCHEMA
     assert [r.asDict() for r in audit.runs().collect()] == [{
         "batch_id": "b1", "source_name": "tiktok", "status": "SUCCESS",
@@ -139,3 +140,21 @@ def test_control_rows_are_local_relations(spark, tmp_path, monkeypatch):
         "platform": "tiktok", "access_token": "a1", "refresh_token": None,
         "expires_at": None, "refreshed_at": 7,
     }]
+
+
+def test_audit_reads_only_complete_rows(spark, tmp_path):
+    """A row is renamed into place once written whole, so a torn or
+    temporary file — a record stopped between its write and its rename —
+    stays hidden, and so does a parquet file an older audit wrote:
+    ``runs()`` returns the complete JSON rows only."""
+    from e_commerce_etl_pipeline_spark.operators.local_rows import local_rows
+
+    path = tmp_path / "runs"
+    audit = RunAudit(spark, str(path))
+    audit.record({"batch_id": "ok", "source_name": "tiktok", "status": "SUCCESS",
+                  "started_at": 1.0, "finished_at": 2.0})
+    (path / ".0123abcd.json").write_text('{"batch_id": "torn", "sta')
+    (path / ".4567cdef.json").write_text('{"batch_id": "tmp", "status": "SUCCESS"}\n')
+    local_rows(spark, [("old",) + (None,) * (len(AUDIT_SCHEMA) - 1)], AUDIT_SCHEMA
+               ).write.mode("append").parquet(str(path))
+    assert [r.batch_id for r in audit.runs().collect()] == ["ok"]
