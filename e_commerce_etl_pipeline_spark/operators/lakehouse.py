@@ -208,7 +208,7 @@ def lakehouse_upsert(
     guard_cols: Sequence[str] = (),
     drop_null_key_rows: bool = False,
     fallback_path: str | None = None,
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     tiebreak: Sequence[str] = (),
 ) -> str:
     """Apply a guarded keyed-upsert batch through the best available

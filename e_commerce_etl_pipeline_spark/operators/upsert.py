@@ -47,7 +47,9 @@ appends it as one delta: no read of the table, no join, no bucket
 rewrite. A read folds base and live deltas in one aggregate over the key
 (one shuffle); with no live delta it is a plain scan. Once a table holds
 ``COMPACT_AT`` live deltas, the upsert that wrote the last one folds them
-into the buckets they touch, so the fold a reader pays stays bounded. At
+into the buckets they touch, so the fold a reader pays stays bounded. A
+new table's bucket count is sized from its first load, one bucket per
+``BUCKET_TARGET_BYTES`` of estimated input, so a small table is one. At
 100 TB the lakehouse MERGE (``operators/lakehouse.py``) is preferred:
 the table format keeps file statistics and deletion vectors.
 """
@@ -70,14 +72,25 @@ ETL_COLS = ("etl_batch_id", "etl_created_at", "etl_updated_at", "etl_source")
 
 # Live deltas at which an upsert folds them into the base. A read folds
 # every live delta and a compaction rewrites every bucket they touch.
-# Measured on the perfbench TikTok table (2,000 rows, 64 buckets, 18
-# changes a batch, 4 cores): a read's fold costs 0.1-0.9 s CPU over the
-# 2.1 s plain read whether 1 or 31 deltas are live, while a compaction
-# costs 3.4-5.5 s (most buckets are touched by 8 batches). So the bound
-# is the largest that keeps the deltas' listing on the driver: Spark
-# lists more than 32 paths in a distributed job of one task per path
-# (spark.sql.sources.parallelPartitionDiscovery.threshold).
+# Measured in-process on the perfbench TikTok table (1,984 rows sized to
+# one bucket, 18 changes a batch, 4 cores): a read costs 0.12-0.14 s CPU
+# with no live delta and 0.4-0.8 s whether 1 or 31 are live, while the
+# compacting batch costs 3.2 s against 0.5-0.7 s for an appending one.
+# So the bound is the largest that keeps the deltas' listing on the
+# driver: Spark lists more than 32 paths in a distributed job of one
+# task per path (spark.sql.sources.parallelPartitionDiscovery.threshold).
 COMPACT_AT = 32
+
+# Estimated input bytes per bucket when write_table sizes a new table:
+# one scan split (the spark.sql.files.maxPartitionBytes default). A bucket
+# that fits a split is read by one task and compacted into one file, so
+# the bucketing adds no task a plain parquet table of that size would
+# not run, and a table below the target is one bucket: one file, and one
+# directory for a read to list on the driver. The estimate is of the
+# input's plan (a JSON source's text bytes), so it overstates parquet.
+BUCKET_TARGET_BYTES = 128 * 1024 * 1024
+# The count for an input Spark cannot size (a frame over a Python RDD)
+UNSIZED_BUCKETS = 64
 
 q = SPARK_DIALECT.q
 
@@ -126,7 +139,7 @@ def _merge_spec(keys: Sequence[str], order_col: str, guard_cols: Sequence[str]) 
 
 def _table_meta(
     spark: SparkSession, table_path: str
-) -> tuple[StructType, int | None, dict | None]:
+) -> tuple[StructType, int, dict | None]:
     """The table schema (``__bucket`` included), bucket count and merge
     spec recorded in ``_table``, read through the Hadoop FileSystem API.
 
@@ -134,15 +147,27 @@ def _table_meta(
     bucketed with another count would route keys to the wrong bucket
     partitions and silently DUPLICATE them, so the layout is
     authoritative, like a lakehouse table's bucket spec living in its
-    metadata rather than in every writer's config. A table without the
-    record (plain appends, or written before it existed) has its schema
-    inferred and its count read from the older ``_bucket_count`` marker."""
+    metadata rather than in every writer's config. A directory without
+    the record was not written by ``write_table``; routing into it would
+    guess the count, so it raises."""
     meta = _read_json(spark, f"{table_path}/{_META}")
     if meta is None:
-        text = fsops.read_text(f"{table_path}/_bucket_count", spark)
-        count = int(text) if text and text.strip().isdigit() else None
-        return spark.read.parquet(table_path).schema, count, None
+        raise FileNotFoundError(
+            f"{table_path} has no {_META} record: not a table written by write_table")
     return StructType.fromJson(meta["schema"]), meta["num_buckets"], meta.get("merge")
+
+
+def _sized_buckets(df: DataFrame) -> int:
+    """The bucket count for a new table holding ``df``, from the
+    optimizer's size estimate of its plan (no job): one bucket per
+    ``BUCKET_TARGET_BYTES``, at least one. A plan Spark cannot size
+    reports ``spark.sql.defaultSizeInBytes`` (or more, summed over a
+    union), and gets ``UNSIZED_BUCKETS``."""
+    jdf = df._jdf
+    estimate = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if estimate >= jdf.sparkSession().sessionState().conf().defaultSizeInBytes():
+        return UNSIZED_BUCKETS
+    return max(1, -(-estimate // BUCKET_TARGET_BYTES))
 
 
 def write_table(
@@ -151,7 +176,7 @@ def write_table(
     table_path: str,
     keys: Sequence[str],
     order_col: str,
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     drop_null_key_rows: bool = False,
     tiebreak: Sequence[str] = (),
 ) -> None:
@@ -159,7 +184,13 @@ def write_table(
     hash-bucketed layout: dedup keep-newest, optional null-key drop (D5,
     MISA parity), bucket by key hash, overwrite, and record the schema
     and bucket count in ``_table``. The overwrite removes any deltas and
-    compaction state with the old base."""
+    compaction state with the old base.
+
+    ``num_buckets`` defaults to ``_sized_buckets(df)``, so a small load
+    is one bucket. The table keeps the count: one that grows is not
+    re-bucketed."""
+    if num_buckets is None:
+        num_buckets = _sized_buckets(df)
     out = keep_newest(df, keys, order_col, tiebreak)
     if drop_null_key_rows:
         out = drop_null_keys(out, keys)
@@ -390,7 +421,7 @@ def upsert(
     keys: Sequence[str],
     order_col: str,
     guard_cols: Sequence[str] = (),
-    num_buckets: int = 64,
+    num_buckets: int | None = None,
     drop_null_key_rows: bool = False,
     tiebreak: Sequence[str] = (),
 ) -> None:
@@ -401,7 +432,9 @@ def upsert(
     table, no join, no bucket rewrite. The batch that brings the live
     deltas to ``COMPACT_AT`` then folds them into the buckets
     (``compact_buckets``). A first batch into a missing table is a full
-    load (``write_table``).
+    load (``write_table``), bucketed by ``num_buckets`` or, without it,
+    sized from the batch; into an existing table the batch takes the
+    table's recorded count, whatever ``num_buckets`` says.
 
     A batch with no rows to write is a no-op: it leaves no live delta,
     and into a missing table it creates no table. That is found on the
@@ -415,8 +448,7 @@ def upsert(
         return
     _recover(spark, table_path)
     # the table's recorded bucket count wins over the argument (_table_meta)
-    schema, recorded, merge = _table_meta(spark, table_path)
-    num_buckets = recorded or num_buckets
+    schema, num_buckets, merge = _table_meta(spark, table_path)
     seqs = _live_seqs(spark, table_path)
     spec = _merge_spec(keys, order_col, guard_cols)
     if merge != spec:

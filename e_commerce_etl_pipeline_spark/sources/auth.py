@@ -102,7 +102,7 @@ class TokenStore:
                state.get("refreshed_at", int(time.time())))
         df = local_rows(self.spark, [row], self.SCHEMA)
         upsert(self.spark, df, self.path, keys=["platform"],
-               order_col="refreshed_at", num_buckets=1)
+               order_col="refreshed_at")
 
     def load(self, platform: str) -> dict | None:
         if not os.path.exists(self.path):

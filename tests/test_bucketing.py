@@ -7,7 +7,9 @@ from __future__ import annotations
 import datetime
 import hashlib
 import importlib
+import json
 import os
+import re
 import uuid
 
 import pytest
@@ -237,14 +239,17 @@ def test_compact_buckets(spark, tmp_path):
 
     path = str(tmp_path / "tbl")
     base_ts = datetime.datetime(2024, 1, 1)
-    # 6 append slices of 2 keys each — per-bucket file counts end up
-    # uneven (hash-dependent but deterministic for fixed keys)
+    # a full load of zero rows records the table, then 6 append slices of
+    # 2 keys each — per-bucket file counts end up uneven (hash-dependent
+    # but deterministic for fixed keys)
+    write_table(spark, spark.createDataFrame([], _SCHEMA), path, _KEYS, "update_time",
+                num_buckets=8)
     for j in range(6):
         part = spark.createDataFrame(
             [(f"o{2 * j}", "i1", "created", base_ts),
              (f"o{2 * j + 1}", "i1", "created", base_ts)],
-            "order_id string, item_id string, status string, update_time timestamp",
-        ).withColumn("__bucket", _bucket_expr(["order_id", "item_id"], 8))
+            _SCHEMA,
+        ).withColumn("__bucket", _bucket_expr(_KEYS, 8))
         part.coalesce(1).write.mode("append").partitionBy("__bucket").parquet(path)
 
     before = _bucket_files(path)
@@ -369,27 +374,6 @@ def test_read_declares_recorded_schema(spark, tmp_path):
     assert _jobs(spark, _in_group(spark, lambda: spark.read.parquet(path)))
 
 
-def test_upsert_keeps_bucket_count_of_older_layout(spark, tmp_path):
-    """A table written before ``_table`` existed records its bucket count
-    in a ``_bucket_count`` marker; an upsert with another count still
-    routes keys to the table's own buckets."""
-    from e_commerce_etl_pipeline_spark.operators import fsops
-
-    path = str(tmp_path / "tbl")
-    ts = datetime.datetime(2024, 1, 1)
-    rows = [(f"o{i}", "i1", "created", ts) for i in range(20)]
-    upsert(spark, spark.createDataFrame(rows, _SCHEMA), path, _KEYS,
-           "update_time", ["status"], num_buckets=4)
-    os.remove(os.path.join(path, "_table"))
-    fsops.write_text(f"{path}/_bucket_count", "4", spark)
-    upsert(spark, spark.createDataFrame(
-        [(f"o{i}", "i1", "shipped", datetime.datetime(2024, 1, 2)) for i in range(20)],
-        _SCHEMA), path, _KEYS, "update_time", ["status"], num_buckets=64)
-    upsert_mod.compact_buckets(spark, path)
-    assert _bucket_files(path).keys() <= {f"__bucket={b}" for b in range(4)}
-    assert sorted(r.status for r in read_upsert_table(spark, path).collect()) == ["shipped"] * 20
-
-
 def test_compaction_crash_inside_swap_stays_readable_and_converges(
         spark, tmp_path, monkeypatch):
     """The compaction commit swaps each staged bucket in by a delete and a
@@ -447,3 +431,106 @@ def test_compaction_crash_inside_swap_stays_readable_and_converges(
         assert _content_hash(spark, p) == clean_hash
         assert lost in os.listdir(p)
         assert not {"_compaction", ".compact"} & set(os.listdir(p))
+
+
+def _recorded_buckets(path):
+    with open(os.path.join(path, "_table")) as f:
+        return json.load(f)["num_buckets"]
+
+
+def _file_backed(spark, tmp_path, rows):
+    """``rows`` as a parquet-backed frame, which the optimizer sizes
+    from its files."""
+    src = str(tmp_path / f"src-{uuid.uuid4().hex}")
+    spark.createDataFrame(rows, _SCHEMA).write.parquet(src)
+    return spark.read.schema(_SCHEMA).parquet(src)
+
+
+_ROWS = [(f"o{i}", "i1", "created", datetime.datetime(2024, 1, 1)) for i in range(200)]
+
+
+def test_full_load_sizes_bucket_count_from_data(spark, tmp_path):
+    """A full load with no bucket count sizes it from the optimizer's
+    estimate of its input: a small file-backed input is one bucket (one
+    directory), recorded in ``_table``. An explicit count wins, and an
+    input Spark cannot size (a Python list, planned over an RDD) keeps
+    ``UNSIZED_BUCKETS``."""
+    path = str(tmp_path / "sized")
+    write_table(spark, _file_backed(spark, tmp_path, _ROWS), path, _KEYS, "update_time")
+    assert _recorded_buckets(path) == 1
+    assert list(_bucket_files(path)) == ["__bucket=0"]
+    assert read_upsert_table(spark, path).count() == len(_ROWS)
+
+    path = str(tmp_path / "explicit")
+    write_table(spark, _file_backed(spark, tmp_path, _ROWS), path, _KEYS, "update_time",
+                num_buckets=4)
+    assert _recorded_buckets(path) == 4
+    assert len(_bucket_files(path)) == 4
+
+    path = str(tmp_path / "unsized")
+    write_table(spark, spark.createDataFrame(_ROWS, _SCHEMA), path, _KEYS, "update_time")
+    assert _recorded_buckets(path) == upsert_mod.UNSIZED_BUCKETS == 64
+    assert len(_bucket_files(path)) > 32
+
+
+def test_bucket_sizing_starts_no_job(spark, tmp_path, jobs_of, monkeypatch):
+    """The count comes from the optimized plan's statistics, which start
+    no Spark job, and is the estimate over ``BUCKET_TARGET_BYTES``
+    rounded up."""
+    df = _file_backed(spark, tmp_path, _ROWS)
+    counts = []
+    assert jobs_of(lambda: counts.append(upsert_mod._sized_buckets(df))) == []
+    assert counts == [1]
+    estimate = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    monkeypatch.setattr(upsert_mod, "BUCKET_TARGET_BYTES", estimate // 3 + 1)
+    assert upsert_mod._sized_buckets(df) == 3
+
+
+def test_upsert_keeps_recorded_bucket_count(spark, tmp_path):
+    """An upsert that passes another count routes its rows by the count
+    ``_table`` records, so keys stay in the table's own buckets."""
+    path = str(tmp_path / "tbl")
+    upsert(spark, _file_backed(spark, tmp_path, _ROWS[:20]), path, _KEYS, "update_time",
+           ["status"])
+    assert _recorded_buckets(path) == 1
+    upsert(spark, spark.createDataFrame(
+        [(f"o{i}", "i1", "shipped", datetime.datetime(2024, 1, 2)) for i in range(20)],
+        _SCHEMA), path, _KEYS, "update_time", ["status"], num_buckets=64)
+    upsert_mod.compact_buckets(spark, path)
+    assert _recorded_buckets(path) == 1
+    assert list(_bucket_files(path)) == ["__bucket=0"]
+    assert sorted(r.status for r in read_upsert_table(spark, path).collect()) == ["shipped"] * 20
+
+
+def test_sized_table_lists_no_bucket_in_a_job(spark, tmp_path):
+    """On a sized table, a full load, three appends, a read and a
+    compaction run no distributed listing job (64 buckets, more than
+    Spark's 32-path threshold, did)."""
+    path = str(tmp_path / "tbl")
+    df = _file_backed(spark, tmp_path, _ROWS)
+    groups = [_in_group(spark, lambda: write_table(spark, df, path, _KEYS, "update_time"))]
+    for j in range(3):
+        batch = spark.createDataFrame(
+            [(f"o{i}", "i1", f"s{j}", datetime.datetime(2024, 1, 2 + j))
+             for i in range(j, 200, 7)], _SCHEMA)
+        groups.append(_in_group(spark, lambda: upsert(
+            spark, batch, path, _KEYS, "update_time", ["status"])))
+    groups.append(_in_group(spark, lambda: read_upsert_table(spark, path).count()))
+    groups.append(_in_group(spark, lambda: upsert_mod.compact_buckets(spark, path)))
+    assert _recorded_buckets(path) == 1
+    assert not _delta_files(path)
+    assert [_listing_jobs(spark, g) for g in groups] == [[]] * len(groups)
+
+
+def test_directory_without_table_record_raises(spark, tmp_path):
+    """A directory without ``_table`` was not written by ``write_table``:
+    reading or upserting it raises an error that names it, instead of
+    guessing its schema and bucket count."""
+    path = str(tmp_path / "tbl")
+    write_table(spark, spark.createDataFrame(_ROWS[:20], _SCHEMA), path, _KEYS,
+                "update_time", num_buckets=4)
+    os.remove(os.path.join(path, "_table"))
+    with pytest.raises(FileNotFoundError, match=re.escape(path)):
+        read_upsert_table(spark, path)
+    with pytest.raises(FileNotFoundError, match=re.escape(path)):
+        upsert(spark, spark.createDataFrame(_ROWS[:1], _SCHEMA), path, _KEYS, "update_time")

@@ -5,6 +5,9 @@ operational budget/alert analog (config/production.py:24,38,40).
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql.types import StructType
 
@@ -40,6 +43,19 @@ def test_token_store_replay_safe(spark, tmp_path):
     store.persist("misa", {"access_token": "m1", "expires_at": 7, "refreshed_at": 50})
     assert store.load("misa")["access_token"] == "m1"
     assert store.load("nope") is None
+
+
+def test_token_store_sized_to_one_bucket(spark, tmp_path):
+    """The store's rows are a local relation Spark can size, so its
+    table is sized to one bucket with no count passed, and keeps it
+    through later persists."""
+    path = tmp_path / "tokens"
+    store = TokenStore(spark, str(path))
+    store.persist("shopee", {"access_token": "a", "expires_at": 9, "refreshed_at": 1})
+    store.persist("misa", {"access_token": "m", "expires_at": 9, "refreshed_at": 1})
+    assert [d for d in os.listdir(path) if d.startswith("__bucket=")] == ["__bucket=0"]
+    assert json.loads((path / "_table").read_text())["num_buckets"] == 1
+    assert store.load("misa")["access_token"] == "m"
 
 
 def test_cache_seeded_from_store_skips_refresh(spark, tmp_path):
