@@ -49,7 +49,8 @@ rewrite. A read folds base and live deltas in one aggregate over the key
 ``COMPACT_AT`` live deltas, the upsert that wrote the last one folds them
 into the buckets they touch, so the fold a reader pays stays bounded. A
 new table's bucket count is sized from its first load, one bucket per
-``BUCKET_TARGET_BYTES`` of estimated input, so a small table is one. At
+``BUCKET_TARGET_BYTES`` of estimated input up to ``MAX_BUCKETS``, so a
+small table is one; a large one passes its own count. At
 100 TB the lakehouse MERGE (``operators/lakehouse.py``) is preferred:
 the table format keeps file statistics and deletion vectors.
 """
@@ -89,8 +90,11 @@ COMPACT_AT = 32
 # directory for a read to list on the driver. The estimate is of the
 # input's plan (a JSON source's text bytes), so it overstates parquet.
 BUCKET_TARGET_BYTES = 128 * 1024 * 1024
-# The count for an input Spark cannot size (a frame over a Python RDD)
-UNSIZED_BUCKETS = 64
+# The most buckets the sizing gives (the fixed count it replaced). An
+# estimate is not a measurement: a plan Spark cannot size reports
+# spark.sql.defaultSizeInBytes, a projection over it scales that down
+# only a little, and a join multiplies its inputs' sizes.
+MAX_BUCKETS = 64
 
 q = SPARK_DIALECT.q
 
@@ -160,14 +164,10 @@ def _table_meta(
 def _sized_buckets(df: DataFrame) -> int:
     """The bucket count for a new table holding ``df``, from the
     optimizer's size estimate of its plan (no job): one bucket per
-    ``BUCKET_TARGET_BYTES``, at least one. A plan Spark cannot size
-    reports ``spark.sql.defaultSizeInBytes`` (or more, summed over a
-    union), and gets ``UNSIZED_BUCKETS``."""
-    jdf = df._jdf
-    estimate = int(jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if estimate >= jdf.sparkSession().sessionState().conf().defaultSizeInBytes():
-        return UNSIZED_BUCKETS
-    return max(1, -(-estimate // BUCKET_TARGET_BYTES))
+    ``BUCKET_TARGET_BYTES``, at least one and at most ``MAX_BUCKETS``,
+    which is what a plan Spark cannot size gets."""
+    estimate = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return max(1, min(MAX_BUCKETS, -(-estimate // BUCKET_TARGET_BYTES)))
 
 
 def write_table(

@@ -453,8 +453,8 @@ def test_full_load_sizes_bucket_count_from_data(spark, tmp_path):
     """A full load with no bucket count sizes it from the optimizer's
     estimate of its input: a small file-backed input is one bucket (one
     directory), recorded in ``_table``. An explicit count wins, and an
-    input Spark cannot size (a Python list, planned over an RDD) keeps
-    ``UNSIZED_BUCKETS``."""
+    input Spark cannot size (a Python list, planned over an RDD) gets
+    ``MAX_BUCKETS``."""
     path = str(tmp_path / "sized")
     write_table(spark, _file_backed(spark, tmp_path, _ROWS), path, _KEYS, "update_time")
     assert _recorded_buckets(path) == 1
@@ -469,8 +469,35 @@ def test_full_load_sizes_bucket_count_from_data(spark, tmp_path):
 
     path = str(tmp_path / "unsized")
     write_table(spark, spark.createDataFrame(_ROWS, _SCHEMA), path, _KEYS, "update_time")
-    assert _recorded_buckets(path) == upsert_mod.UNSIZED_BUCKETS == 64
+    assert _recorded_buckets(path) == upsert_mod.MAX_BUCKETS == 64
     assert len(_bucket_files(path)) > 32
+
+
+def test_bucket_sizing_caps_an_inflated_estimate(spark, tmp_path):
+    """An estimate Spark derives from an unsized plan is not the
+    unsized default: a projection scales it down a little, and a join
+    multiplies its inputs' sizes. Both are capped at ``MAX_BUCKETS``,
+    so the bucket column stays an int and a key never gets its own
+    directory. The JSON frame is how the API extract path lands
+    records."""
+    projected = spark.createDataFrame(_ROWS, _SCHEMA).select(*_KEYS, "update_time")
+    lines = [json.dumps({"order_id": k, "item_id": i, "status": s, "update_time": str(t)})
+             for k, i, s, t in _ROWS]
+    landed = (spark.read.json(spark.sparkContext.parallelize(lines))
+              .select(*_KEYS, F.col("update_time").cast("timestamp").alias("update_time")))
+    wide = [(uuid.uuid4().hex, "i1", uuid.uuid4().hex, datetime.datetime(2024, 1, 1))
+            for _ in range(4000)]  # the join's estimate passes 8 GiB
+    joined = _file_backed(spark, tmp_path, wide).join(
+        _file_backed(spark, tmp_path, wide).select("order_id", F.col("status").alias("s2")),
+        "order_id")
+    for name, df in [("projected", projected), ("landed", landed), ("joined", joined)]:
+        path = str(tmp_path / name)
+        write_table(spark, df, path, _KEYS, "update_time")
+        assert _recorded_buckets(path) == upsert_mod.MAX_BUCKETS, name
+        assert 1 < len(_bucket_files(path)) <= upsert_mod.MAX_BUCKETS, name
+        with open(os.path.join(path, "_table")) as f:
+            fields = {c["name"]: c["type"] for c in json.load(f)["schema"]["fields"]}
+        assert fields["__bucket"] == "integer", name
 
 
 def test_bucket_sizing_starts_no_job(spark, tmp_path, jobs_of, monkeypatch):
