@@ -22,6 +22,7 @@ The protocol, defined here only and imported by the tools:
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -212,6 +213,29 @@ def time_entries(spark, queries, sf_dir: str, names, action: str = "count",
     return out
 
 
+def calib_series(head: Timings, tail: Timings, calib: float) -> dict:
+    """Warm seconds over ``calib_sec`` per entry, and the geometric mean of
+    the headline's warm seconds, raw and over ``calib_sec``: host drift
+    scales both sides of a ratio alike, so the normalized series compare
+    across hosts and hours. A warm time reads at least 1 ms (its rounding
+    step) in the mean; a headline with errors has no mean."""
+    def per_calib(warm: dict[str, float]) -> dict[str, float]:
+        return {n: round(w / calib, 3) for n, w in warm.items()}
+
+    geomean = None
+    if head.warm and not head.errors:
+        geomean = round(math.exp(sum(math.log(max(w, 1e-3))
+                                     for w in head.warm.values())
+                                 / len(head.warm)), 4)
+    return {
+        "queries_warm_calib": per_calib(head.warm),
+        "registry_tail_warm_calib": per_calib(tail.warm),
+        "geomean_warm": geomean,
+        "geomean_warm_calib": (round(geomean / calib, 4)
+                               if geomean is not None else None),
+    }
+
+
 HEADLINE = [
     # scan/agg/join analytics
     "q1_pricing_summary", "q3_top_unshipped", "q5_revenue_by_nation",
@@ -339,6 +363,7 @@ def main() -> None:
             round(sum(head.warm.values()) + sum(tail.warm.values()), 3)
             if valid and not tail.errors else None
         ),
+        **calib_series(head, tail, stamps["calib_sec"]),
         "map_only_noop_warm": map_only_noop_warm,
         "basket_fence_dropped_rows": basket_dropped,
         "lsh_fence_dropped_vecs": lsh_dropped,

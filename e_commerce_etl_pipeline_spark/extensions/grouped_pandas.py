@@ -41,13 +41,14 @@ def _median_fn(pdf: pd.DataFrame) -> pd.DataFrame:
     # O(n) introselect — the former sort_values() pre-sort was wasted
     # work (median() partitions internally) plus a full Series copy.
     vals = pdf["value"].to_numpy()
+    # Spark NULLs arrive as NaN, and the SQL twin's median ignores NULLs
+    # and is NULL for a group with none left: the NaN-skipping semantics
+    # are part of the operator's contract.
+    present = vals[~np.isnan(vals)]
     return pd.DataFrame({
         "user_id": [pdf["user_id"].iat[0]],
         "n_events": [len(vals)],
-        # nanmedian, not median: Series.median() skips NaN (Spark NULLs
-        # arrive as NaN), and the SQL twin's median ignores NULLs — the
-        # NaN-skipping semantics are part of the operator's contract
-        "median_value": [float(np.nanmedian(vals))],
+        "median_value": [float(np.median(present)) if len(present) else None],
     })
 
 

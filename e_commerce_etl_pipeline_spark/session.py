@@ -5,6 +5,13 @@ transfers (AQE, UTC session time, Arrow); partition counts are sized by
 ``SPARK_GRAFT_CPUS`` so the same code scales from local[2] tests to a
 1000-executor cluster (where ``spark.sql.shuffle.partitions`` would be
 set to ~2-3x total cores, or left to AQE coalescing).
+
+Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``):
+Spark's own daemon, minus two fixed costs per task. It skips the per-task
+re-read of Spark's archives' central directories, and freezes its
+pre-imported numpy/pandas/pyarrow heap before the fork. A worker must be
+able to import this package, as it already must to unpickle the
+package's kernels.
 """
 
 from __future__ import annotations
@@ -61,6 +68,8 @@ def get_spark(app_name: str = "e_commerce_etl_pipeline_spark",
         # Column call, to name the calling line in an error message; an
         # analysis error still names the column and its condition.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module",
+                "e_commerce_etl_pipeline_spark.worker_daemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
