@@ -30,9 +30,16 @@ def _active_spark(spark: SparkSession | None) -> SparkSession | None:
     return spark or SparkSession.getActiveSession()
 
 
+# JVM classes are looked up by their full name, in one gateway round trip:
+# ``jvm.org.apache.hadoop.fs.Path`` looks up each dotted segment in a
+# round trip of its own, and each miss searches the whole classpath.
+def _jpath(jvm, path_str: str):
+    return getattr(jvm, "org.apache.hadoop.fs.Path")(path_str)
+
+
 def _hadoop(spark: SparkSession, path_str: str):
     jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path_str)
+    jpath = _jpath(jvm, path_str)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, jpath, jvm
 
@@ -173,7 +180,7 @@ def rename(src: str, dst: str, spark: SparkSession | None = None) -> None:
         os.rename(_local_path(src), _local_path(dst))
         return
     fs, jsrc, jvm = _hadoop(spark, src)
-    if not fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)):
+    if not fs.rename(jsrc, _jpath(jvm, dst)):
         raise RuntimeError(f"rename failed: {src} -> {dst}")
 
 
@@ -204,9 +211,7 @@ def read_text(path_str: str, spark: SparkSession | None = None) -> str | None:
         return None
     stream = fs.open(jpath)
     try:
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8"
-        )
+        return getattr(jvm, "org.apache.commons.io.IOUtils").toString(stream, "UTF-8")
     finally:
         stream.close()
 
@@ -251,7 +256,7 @@ def write_text_atomic(
         os.replace(tmp, p)
         return
     fs, jpath, jvm = _hadoop(spark, path_str)
-    tmp_path = jvm.org.apache.hadoop.fs.Path(path_str + ".__tmp__")
+    tmp_path = _jpath(jvm, path_str + ".__tmp__")
     out = fs.create(tmp_path, True)
     try:
         out.write(content.encode("utf-8"))
@@ -263,13 +268,12 @@ def write_text_atomic(
     # is the delete→rename gap — still strictly smaller than in-place
     # truncate+write, and the tmp file survives for manual recovery)
     try:
-        ctx = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        ctx = getattr(jvm, "org.apache.hadoop.fs.FileContext").getFileContext(
             jpath.toUri(), spark._jsc.hadoopConfiguration()
         )
-        overwrite = spark._sc._gateway.new_array(
-            jvm.org.apache.hadoop.fs.Options.Rename, 1
-        )
-        overwrite[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+        rename_opt = getattr(jvm, "org.apache.hadoop.fs.Options$Rename")
+        overwrite = spark._sc._gateway.new_array(rename_opt, 1)
+        overwrite[0] = rename_opt.OVERWRITE
         ctx.rename(tmp_path, jpath, overwrite)
     except Exception:  # noqa: BLE001 — FS without FileContext support
         if fs.exists(jpath):

@@ -24,8 +24,11 @@ what every rendering is tested against):
 - ``etl_updated_at`` takes the batch stamp on UPDATE, source value on
   INSERT;
 - INSERT when not matched;
-- the source is deduped keep-newest per key first (MERGE requires a
-  unique source key; the reference dedups pre-MERGE the same way, D1).
+- the source's newest row per key is the one applied (the reference
+  dedups keep-newest pre-MERGE, D1): ``MERGE INTO`` takes a source
+  deduped first, since it requires a unique source key, and
+  ``fold_versions`` keeps the newest row of each batch in its own
+  aggregate.
 
 One renderer (``merge_matched_condition`` + ``_merge_parts``) builds
 every SQL form of it, in four dialects that differ only in identifier
@@ -52,6 +55,21 @@ from .dedup import drop_null_keys, keep_newest
 
 ETL_CREATED = "etl_created_at"
 ETL_UPDATED = "etl_updated_at"
+
+
+def batch_stamp(data_type: str) -> str:
+    """The batch's ETL stamp as Spark SQL of ``data_type``: the
+    ``etl_created_at``/``etl_updated_at`` of a transformed batch and the
+    ``etl_updated_at`` every applied update sets. A ``timestamp`` is the
+    instant (TikTok stamps UTC); a ``timestamp_ntz`` is the +07
+    wall-clock time MISA and Shopee stamp (misa_crm_transformer.py:41-60,
+    K4's ``etl_updated_at = now(+07)``)."""
+    if data_type == "timestamp":
+        return "current_timestamp()"
+    if data_type == "timestamp_ntz":
+        return ("CAST(from_utc_timestamp(current_timestamp(), 'Asia/Ho_Chi_Minh') "
+                "AS timestamp_ntz)")
+    return f"CAST(current_timestamp() AS {data_type})"
 
 
 class _Dialect:
@@ -231,9 +249,10 @@ def lakehouse_upsert(
         view = f"__merge_src_{uuid.uuid4().hex}"
         batch.createOrReplaceTempView(view)
         try:
+            target = dict(spark.table(target_table).dtypes)
             stmt = merge_into_statement(
-                target_table, view, spark.table(target_table).columns,
-                keys, order_col, guard_cols,
+                target_table, view, list(target), keys, order_col, guard_cols,
+                batch_stamp(target.get(ETL_UPDATED, "timestamp")),
             )
             spark.sql(stmt)
         finally:
@@ -246,7 +265,8 @@ def lakehouse_upsert(
         )
     from .upsert import upsert
 
-    # upsert dedups the batch itself (resolve_upsert / write_table)
+    # upsert keeps each key's newest batch row itself: write_table dedups
+    # a first load, and a delta's rows are deduped by fold_versions
     upsert(spark, source, fallback_path, keys, order_col, guard_cols,
            num_buckets=num_buckets, drop_null_key_rows=drop_null_key_rows,
            tiebreak=tiebreak)

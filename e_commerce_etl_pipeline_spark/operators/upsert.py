@@ -4,7 +4,8 @@ Replicates SURVEY.md §2.2 K4-K6 (T-SQL ``MERGE ... WHEN MATCHED AND
 (target.order < source.order OR any guard column changed) THEN UPDATE``,
 ``WHEN NOT MATCHED THEN INSERT``) as a pure DataFrame program:
 
-1. dedup incoming batch by key (one of the three modes in ``dedup.py``);
+1. per key and batch, keep the newest row (``dedup.keep_newest``'s
+   pick, made inside the fold);
 2. per key, fold the versions in batch order: a version wins iff the key
    is new, the current version is stale (``current.order_col <
    version.order_col``, or a NULL current order), or the order ties and
@@ -25,12 +26,15 @@ Layout (merge-on-read)::
     _table            JSON: the table schema and bucket count, recorded
                       at creation so no read infers a schema and no
                       writer routes keys to the wrong bucket, and the
-                      keys, order and guard columns the deltas fold with,
-                      recorded by the upsert that writes the first delta
+                      keys, order, guard and tiebreak columns the deltas
+                      fold with, recorded by the upsert that writes the
+                      first delta
     __bucket=<n>/     the base: one row per key, hash-bucketed on the key
-    .s=<seq>/         one delta per upsert batch: the batch's deduped rows
-                      with ``__bucket``, ``__seq`` and ``__batch_time``,
-                      one parquet file for a small batch; its ``_SUCCESS``
+    .s=<seq>/         one delta per upsert batch: the batch's rows as
+                      offered (any number per key; the fold keeps the
+                      newest), cast to the table schema, with
+                      ``__bucket``, ``__seq`` and ``__batch_time``, one
+                      parquet file for a small batch; its ``_SUCCESS``
                       is the completeness marker, written last, and a
                       delta without one is invisible
     _compaction       a compaction's commit point, present while its swap
@@ -42,10 +46,11 @@ Spark's file index skips ``.``- and ``_``-prefixed names (``_`` unless
 the name holds ``=``), so a raw ``spark.read.parquet(table)`` reads the
 base only; ``read_upsert_table`` is the table.
 
-Scale note: an upsert batch costs its own rows. It dedups the batch and
-appends it as one delta: no read of the table, no join, no bucket
-rewrite. A read folds base and live deltas in one aggregate over the key
-(one shuffle); with no live delta it is a plain scan. Once a table holds
+Scale note: an upsert batch costs its own rows. It appends them as one
+delta in one narrow job (scan, project, write): no read of the table, no
+join, no shuffle, no bucket rewrite. A read folds base and live deltas
+in one aggregate over the key (one shuffle); with no live delta it is a
+plain scan. Once a table holds
 ``COMPACT_AT`` live deltas, the upsert that wrote the last one folds them
 into the buckets they touch, so the fold a reader pays stays bounded. A
 new table's bucket count is sized from its first load, one bucket per
@@ -67,7 +72,13 @@ from pyspark.sql.types import IntegerType, StructType
 
 from . import fsops, index_store
 from .dedup import drop_null_keys, keep_newest
-from .lakehouse import ETL_CREATED, ETL_UPDATED, SPARK_DIALECT, merge_matched_condition
+from .lakehouse import (
+    ETL_CREATED,
+    ETL_UPDATED,
+    SPARK_DIALECT,
+    batch_stamp,
+    merge_matched_condition,
+)
 
 ETL_COLS = ("etl_batch_id", "etl_created_at", "etl_updated_at", "etl_source")
 
@@ -82,7 +93,8 @@ ETL_COLS = ("etl_batch_id", "etl_created_at", "etl_updated_at", "etl_source")
 # task per path (spark.sql.sources.parallelPartitionDiscovery.threshold).
 COMPACT_AT = 32
 
-# Estimated input bytes per bucket when write_table sizes a new table:
+# Estimated input bytes per bucket when write_table sizes a new table,
+# and per write task of an upsert's delta:
 # one scan split (the spark.sql.files.maxPartitionBytes default). A bucket
 # that fits a split is read by one task and compacted into one file, so
 # the bucketing adds no task a plain parquet table of that size would
@@ -137,8 +149,10 @@ def _write_meta(spark: SparkSession, table_path: str, schema: StructType,
     fsops.write_text_atomic(f"{table_path}/{_META}", json.dumps(meta), spark)
 
 
-def _merge_spec(keys: Sequence[str], order_col: str, guard_cols: Sequence[str]) -> dict:
-    return {"keys": list(keys), "order_col": order_col, "guard_cols": list(guard_cols)}
+def _merge_spec(keys: Sequence[str], order_col: str, guard_cols: Sequence[str],
+                tiebreak: Sequence[str]) -> dict:
+    return {"keys": list(keys), "order_col": order_col, "guard_cols": list(guard_cols),
+            "tiebreak": list(tiebreak)}
 
 
 def _table_meta(
@@ -146,6 +160,8 @@ def _table_meta(
 ) -> tuple[StructType, int, dict | None]:
     """The table schema (``__bucket`` included), bucket count and merge
     spec recorded in ``_table``, read through the Hadoop FileSystem API.
+    A spec recorded before deltas carried a tiebreak reads as
+    ``tiebreak=[]``: its deltas fold the same under it.
 
     The recorded bucket count wins over an upserting caller's: a batch
     bucketed with another count would route keys to the wrong bucket
@@ -158,16 +174,40 @@ def _table_meta(
     if meta is None:
         raise FileNotFoundError(
             f"{table_path} has no {_META} record: not a table written by write_table")
-    return StructType.fromJson(meta["schema"]), meta["num_buckets"], meta.get("merge")
+    merge = meta.get("merge")
+    if merge is not None:
+        merge.setdefault("tiebreak", [])
+    return StructType.fromJson(meta["schema"]), meta["num_buckets"], merge
+
+
+def _per_target(plan) -> int:
+    """One per ``BUCKET_TARGET_BYTES`` of ``plan``'s size estimate, at
+    least one and at most ``MAX_BUCKETS``."""
+    estimate = int(plan.stats().sizeInBytes())
+    return max(1, min(MAX_BUCKETS, -(-estimate // BUCKET_TARGET_BYTES)))
 
 
 def _sized_buckets(df: DataFrame) -> int:
     """The bucket count for a new table holding ``df``, from the
-    optimizer's size estimate of its plan (no job): one bucket per
-    ``BUCKET_TARGET_BYTES``, at least one and at most ``MAX_BUCKETS``,
-    which is what a plan Spark cannot size gets."""
-    estimate = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    return max(1, min(MAX_BUCKETS, -(-estimate // BUCKET_TARGET_BYTES)))
+    optimizer's size estimate of its plan (no job): ``_per_target``,
+    so a plan Spark cannot size gets ``MAX_BUCKETS``."""
+    return _per_target(df._jdf.queryExecution().optimizedPlan())
+
+
+def _write_tasks(df: DataFrame) -> int:
+    """The partitions an upsert writes its delta ``df`` from (no job):
+    ``_per_target`` of its plan, or one when a leaf of the plan is one
+    Spark cannot size. Such a leaf reports ``spark.sql.defaultSizeInBytes``
+    exactly, which an estimate scaled through a projection or a join
+    does not, and it holds rows the driver made (a Python list, the API
+    extract's JSON over an RDD), so a small batch stays one file."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    unsized = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    leaves = plan.collectLeaves()
+    if any(int(leaves.apply(i).stats().sizeInBytes()) == unsized
+           for i in range(leaves.size())):
+        return 1
+    return _per_target(plan)
 
 
 def write_table(
@@ -210,23 +250,29 @@ def fold_versions(
     keys: Sequence[str],
     order_col: str,
     guard_cols: Sequence[str] = (),
+    tiebreak: Sequence[str] = (),
 ) -> DataFrame:
-    """The guarded MERGE of ``deltas`` into ``base``: an exact left fold
-    per key, in ``__seq`` order, of ``merge_matched_condition``.
+    """The guarded MERGE of ``deltas`` into ``base``: per key, each
+    ``__seq``'s newest row, then an exact left fold of
+    ``merge_matched_condition`` over them in ``__seq`` order.
 
     ``base`` holds at most one row per key (null-safe: NULL key values
     match each other, like the MERGE's ``<=>`` join). ``deltas`` holds the
-    base's columns plus ``__seq`` (> 0, at most one row per key and seq)
-    and, when the table has ``etl_updated_at``, ``__batch_time`` of the
-    same type. Returns ``base``'s columns. A key's first version is its
-    base row, or else its first delta row taken as an insert. Each later
-    version replaces the current one when the guard applies, keeping the
-    current ``etl_created_at`` and stamping ``etl_updated_at`` with the
-    version's ``__batch_time``.
+    base's columns plus ``__seq`` (> 0, any number of rows per key and
+    seq) and, when the table has ``etl_updated_at``, ``__batch_time`` of
+    the same type. Returns ``base``'s columns. Of a key's rows in one
+    seq, the fold takes the last in ``(order_col, *tiebreak)`` order with
+    NULLs lowest: ``keep_newest``'s pick (``tiebreak``: columns of
+    ``base``). A key's first version is its base row, or else its first
+    kept delta row taken as an insert. Each later version replaces the
+    current one when the guard applies, keeping the current
+    ``etl_created_at`` and stamping ``etl_updated_at`` with the version's
+    ``__batch_time``.
 
     One SQL aggregate over the union: ``collect_list`` of each key's
-    versions, sorted by ``__seq``, folded with ``aggregate`` — one shuffle
-    on the key, no join."""
+    versions, sorted by ``(__seq, order_col, *tiebreak)``, filtered to
+    the last of each seq, folded with ``aggregate`` — one shuffle on the
+    key, no join."""
     cols = base.columns
     fields = ["__seq", *(["__batch_time"] if "__batch_time" in deltas.columns else []), *cols]
     versions = base.selectExpr(*map(q, cols), "0 AS __seq").unionByName(
@@ -238,12 +284,17 @@ def fold_versions(
     else:
         updated = "x"
     guard = merge_matched_condition(order_col, guard_cols, tgt="acc", src="x")
-    by_seq = ("(a, b) -> CASE WHEN a.__seq < b.__seq THEN -1 "
-              "WHEN a.__seq > b.__seq THEN 1 ELSE 0 END")
-    history = f"array_sort(collect_list(struct({', '.join(map(q, fields))})), {by_seq})"
+    cmp = "0"  # ascending, NULLs lowest
+    for f in reversed(["__seq", order_col, *tiebreak]):
+        a, b = f"a.{q(f)}", f"b.{q(f)}"
+        cmp = f"CASE WHEN {a} <=> {b} THEN {cmp} WHEN {a} IS NULL OR {a} < {b} THEN -1 ELSE 1 END"
+    history = f"array_sort(collect_list(struct({', '.join(map(q, fields))})), (a, b) -> {cmp})"
+    # a row is its seq's newest when the next row is of another seq
+    newest = "filter(__v, (x, i) -> NOT (try_element_at(__v, i + 2).__seq <=> x.__seq))"
     return (
         versions.groupBy(*keys)
         .agg(F.expr(history).alias("__v"))
+        .selectExpr(f"{newest} AS __v")
         .selectExpr(f"aggregate(slice(__v, 2, size(__v)), __v[0], "
                     f"(acc, x) -> IF({guard}, {updated}, acc)) AS __r")
         .selectExpr(*[f"__r.{q(c)} AS {q(c)}" for c in cols])
@@ -261,7 +312,8 @@ def resolve_upsert(
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Pure (no I/O) MERGE resolve: returns the post-upsert table contents,
-    ``fold_versions`` of the deduped ``source`` as one delta.
+    ``fold_versions`` of ``source`` as one delta, which keeps each key's
+    newest source row.
 
     Both inputs must share the same schema. ``guard_cols``: update also
     applies when target/source differ on any of these even if order_col
@@ -273,24 +325,28 @@ def resolve_upsert(
     (itemless orders carry NULL item_id by design) — the key match here
     is null-safe, so replays still match.
 
-    ``tiebreak``: extra columns completing the source's keep-newest total
-    order. Without it, a batch holding two rows with the same key AND the
-    same order_col picks the survivor nondeterministically — and replay
-    idempotence (ST3) then fails in the guard-tie case, because a replay
-    may pick the other row and the changed-guard clause applies it.
+    ``batch_time``: the ``etl_updated_at`` an applied update sets;
+    ``batch_stamp`` of the column's type by default.
+
+    ``tiebreak``: extra columns of the table completing the source's
+    keep-newest total order. Without it, a batch holding two rows with
+    the same key AND the same order_col picks the survivor
+    nondeterministically — and replay idempotence (ST3) then fails in
+    the guard-tie case, because a replay may pick the other row and the
+    changed-guard clause applies it.
     Batches with a genuinely total (key, order) order don't need it;
     pytest's property suite (test_upsert_property.py) exercises the
     ambiguous case with it set.
     """
-    source = keep_newest(source, keys, order_col, tiebreak)
     if drop_null_key_rows:
         source = drop_null_keys(source, keys)
     delta = {"__seq": F.lit(1)}
     if ETL_UPDATED in target.columns:
-        # match the column's type (MISA/Shopee stamp +07 timestamp_ntz)
-        stamp = F.current_timestamp() if batch_time is None else batch_time
-        delta["__batch_time"] = stamp.cast(target.schema[ETL_UPDATED].dataType)
-    return fold_versions(target, source.withColumns(delta), keys, order_col, guard_cols)
+        kind = target.schema[ETL_UPDATED].dataType
+        stamp = F.expr(batch_stamp(kind.simpleString())) if batch_time is None else batch_time
+        delta["__batch_time"] = stamp.cast(kind)
+    return fold_versions(target, source.withColumns(delta), keys, order_col, guard_cols,
+                         tiebreak)
 
 
 def bucket_dirs(spark: SparkSession, table_path: str) -> set[str]:
@@ -427,11 +483,14 @@ def upsert(
 ) -> None:
     """Apply a guarded keyed upsert batch to the table at ``table_path``.
 
-    The batch is deduped keep-newest, bucketed, and written as the next
-    delta (``.s=<seq>``) with its seq and batch time: no read of the
-    table, no join, no bucket rewrite. The batch that brings the live
-    deltas to ``COMPACT_AT`` then folds them into the buckets
-    (``compact_buckets``). A first batch into a missing table is a full
+    The batch's rows, cast to the table schema and bucketed, are written
+    as the next delta (``.s=<seq>``) with its seq and batch time, in one
+    narrow job: no read of the table, no join, no shuffle, no bucket
+    rewrite. A key's newest row in the batch is picked by the fold
+    (``fold_versions``), not before the write. The delta is written from
+    ``_write_tasks`` partitions, one for a batch of driver-made rows.
+    The batch that brings the live deltas to ``COMPACT_AT`` then folds
+    them into the buckets (``compact_buckets``). A first batch into a missing table is a full
     load (``write_table``), bucketed by ``num_buckets`` or, without it,
     sized from the batch; into an existing table the batch takes the
     table's recorded count, whatever ``num_buckets`` says.
@@ -450,7 +509,7 @@ def upsert(
     # the table's recorded bucket count wins over the argument (_table_meta)
     schema, num_buckets, merge = _table_meta(spark, table_path)
     seqs = _live_seqs(spark, table_path)
-    spec = _merge_spec(keys, order_col, guard_cols)
+    spec = _merge_spec(keys, order_col, guard_cols, tiebreak)
     if merge != spec:
         if seqs:  # the live deltas fold under the spec they were written with
             compact_buckets(spark, table_path)
@@ -458,9 +517,7 @@ def upsert(
         _write_meta(spark, table_path, schema, num_buckets, spec)
     seq = (seqs[-1] if seqs else 0) + 1
 
-    rows = keep_newest(source, keys, order_col, tiebreak)
-    if drop_null_key_rows:
-        rows = drop_null_keys(rows, keys)
+    rows = drop_null_keys(source, keys) if drop_null_key_rows else source
     types = dict(rows.dtypes)
     cols = [
         q(f.name) if types.get(f.name) == f.dataType.simpleString()
@@ -469,10 +526,9 @@ def upsert(
     ]
     cols += [f"{_bucket_sql(keys, num_buckets)} AS __bucket", f"{seq} AS __seq"]
     if ETL_UPDATED in schema.fieldNames():
-        cols.append(f"CAST(current_timestamp() AS "
-                    f"{schema[ETL_UPDATED].dataType.simpleString()}) AS __batch_time")
+        cols.append(f"{batch_stamp(schema[ETL_UPDATED].dataType.simpleString())} AS __batch_time")
     path = _seq_dir(table_path, seq)
-    delta, written = observe_rows(rows.selectExpr(*cols))
+    delta, written = observe_rows(rows.selectExpr(*cols).coalesce(_write_tasks(rows)))
     try:
         # _SUCCESS, written by the job commit after every data file, is
         # the delta's completeness marker: pin it on for this write
@@ -556,11 +612,7 @@ def stamp_etl_metadata(
     TikTok stamps UTC; MISA/Shopee stamp +07-naive at transform
     (misa_crm_transformer.py:41-60) — ``vn_naive`` selects the convention.
     """
-    ts = F.current_timestamp()
-    if vn_naive:
-        ts = F.from_utc_timestamp(F.current_timestamp(), "Asia/Ho_Chi_Minh").cast(
-            "timestamp_ntz"
-        )
+    ts = F.expr(batch_stamp("timestamp_ntz" if vn_naive else "timestamp"))
     return df.withColumns({
         "etl_batch_id": F.lit(batch_id or str(uuid.uuid4())),
         "etl_created_at": ts,

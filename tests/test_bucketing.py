@@ -20,6 +20,7 @@ from e_commerce_etl_pipeline_spark.operators.bucketing import (
     count_exchanges,
     write_bucketed,
 )
+from e_commerce_etl_pipeline_spark.operators import fsops
 from e_commerce_etl_pipeline_spark.operators.upsert import (
     _bucket_expr,
     read_upsert_table,
@@ -561,3 +562,147 @@ def test_directory_without_table_record_raises(spark, tmp_path):
         read_upsert_table(spark, path)
     with pytest.raises(FileNotFoundError, match=re.escape(path)):
         upsert(spark, spark.createDataFrame(_ROWS[:1], _SCHEMA), path, _KEYS, "update_time")
+
+
+def _sql_plans(spark, group):
+    """Physical plans of the SQL executions run in job group ``group``
+    (``_in_group`` describes each with the group name)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 16), 16)
+    return [e.physicalPlanDescription() for e in
+            (recent.apply(i) for i in range(recent.size()))
+            if e.description() == group]
+
+
+def test_appending_batch_is_one_narrow_job(spark, tmp_path):
+    """A batch into an existing table, with several rows per key, is
+    written by one Spark job of one stage: scan, project, write, with
+    no Exchange. Its newest rows are picked by the read's fold."""
+    path = str(tmp_path / "tbl")
+    write_table(spark, _file_backed(spark, tmp_path, _ROWS), path, _KEYS, "update_time")
+    batch = spark.createDataFrame(
+        [(f"o{i % 5}", "i1", f"s{i}", datetime.datetime(2024, 1, 2, i)) for i in range(12)],
+        _SCHEMA)
+    group = _in_group(spark, lambda: upsert(spark, batch, path, _KEYS, "update_time",
+                                            ["status"]))
+    [job] = _jobs(spark, group)
+    info = spark.sparkContext.statusTracker().getJobInfo(job)
+    assert len(info.stageIds) == 1
+    [plan] = _sql_plans(spark, group)
+    assert "Exchange" not in plan and "Scan" in plan, plan
+    got = {r.order_id: r.status for r in read_upsert_table(spark, path).collect()}
+    assert {k: got[k] for k in ("o0", "o1", "o2", "o3", "o4")} == {
+        "o0": "s10", "o1": "s11", "o2": "s7", "o3": "s8", "o4": "s9"}
+
+
+_TB_SCHEMA = "order_id string, item_id string, status string, update_time timestamp, v int"
+
+
+def _newest(rows):
+    """Pure-Python keep_newest: per (order_id, item_id), the last row in
+    (update_time, status, v) order with NULLs lowest."""
+    def rank(r):
+        return tuple((r[i] is not None, r[i]) for i in (3, 2, 4))
+    best = {}
+    for r in rows:
+        k = r[:2]
+        if k not in best or rank(r) > rank(best[k]):
+            best[k] = r
+    return best
+
+
+def _apply(table, batch):
+    """The guarded MERGE of one keep-newest batch, guard column
+    ``status``: a NULL current order, a stale one, or equal orders with a
+    changed status."""
+    for k, r in _newest(batch).items():
+        cur = table.get(k)
+        if cur is None or cur[3] is None or (
+                r[3] is not None and (cur[3] < r[3] or (cur[3] == r[3] and cur[2] != r[2]))):
+            table[k] = r
+
+
+def test_batches_with_many_rows_per_key_match_keep_newest_model(spark, tmp_path):
+    """Batches holding several rows per key read back equal to a
+    pure-Python keep-newest-then-guard model, before and after
+    ``compact_buckets``: ties on ``update_time`` broken only by the
+    ``tiebreak`` columns, NULL orders losing, and a NULL key."""
+    t = [datetime.datetime(2024, 1, d) for d in range(1, 5)]
+    base = [(f"o{i}", "i1", "created", t[1], 0) for i in range(6)]
+    batches = [
+        [("o0", "i1", "a", t[2], 1), ("o0", "i1", "b", t[2], 0),      # tie: status wins
+         ("o1", "i1", "x", None, 5), ("o1", "i1", "y", t[3], 1),      # NULL order loses
+         ("o2", "i1", "n", None, 1),                                   # NULL order only
+         ("o3", "i1", "created", t[1], 1), ("o3", "i1", "shipped", t[1], 1),  # guard tie
+         ("o4", "i1", "z", t[2], 1), ("o4", "i1", "z", t[2], 2),      # tie: v wins
+         ("n1", "i1", "a", t[1], 1), ("n1", "i1", "b", t[2], 1), ("n1", "i1", "c", None, 9),
+         (None, "i1", "a", t[1], 1), (None, "i1", "b", t[2], 1)],     # NULL key
+        [("o0", "i1", "a", t[2], 7), ("o0", "i1", "c", t[1], 9),
+         (None, "i1", "a", t[2], 1), (None, "i1", None, t[2], 3),
+         ("o5", "i1", "late", t[0], 1), ("n1", "i1", "d", t[2], 0)],
+    ]
+    path = str(tmp_path / "tbl")
+    write_table(spark, spark.createDataFrame(base, _TB_SCHEMA), path, _KEYS, "update_time",
+                num_buckets=4)
+    model = {r[:2]: r for r in base}
+    for b in batches:
+        upsert(spark, spark.createDataFrame(b, _TB_SCHEMA), path, _KEYS, "update_time",
+               ["status"], tiebreak=["status", "v"])
+        _apply(model, b)
+    expected = sorted(model.values(), key=lambda r: tuple((x is None, x) for x in r))
+
+    def table():
+        return sorted((tuple(r) for r in read_upsert_table(spark, path).collect()),
+                      key=lambda r: tuple((x is None, x) for x in r))
+    assert len(_delta_files(path)) == 2
+    assert table() == expected
+    upsert_mod.compact_buckets(spark, path)
+    assert not _delta_files(path)
+    assert table() == expected
+
+
+def test_merge_spec_without_tiebreak_appends_without_compaction(spark, tmp_path):
+    """A table whose ``_table`` merge spec was recorded before the spec
+    carried ``tiebreak`` reads it as no tiebreak: an upsert without one
+    appends a delta (no forced compaction, no spec rewrite) and the read
+    folds every delta."""
+    path = str(tmp_path / "tbl")
+    write_table(spark, spark.createDataFrame(_ROWS[:20], _SCHEMA), path, _KEYS,
+                "update_time", num_buckets=4)
+    upsert(spark, spark.createDataFrame([("o1", "i1", "shipped",
+                                          datetime.datetime(2024, 1, 2))], _SCHEMA),
+           path, _KEYS, "update_time", ["status"])
+    meta_path = os.path.join(path, "_table")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["merge"]["tiebreak"]
+    fsops.write_text_atomic(meta_path, json.dumps(meta), spark)  # keeps the .crc right
+    upsert(spark, spark.createDataFrame([("o2", "i1", "shipped",
+                                          datetime.datetime(2024, 1, 2))], _SCHEMA),
+           path, _KEYS, "update_time", ["status"])
+    assert sorted(_delta_files(path)) == [".s=1", ".s=2"]
+    with open(meta_path) as f:
+        assert json.load(f) == meta
+    got = {r.order_id: r.status for r in read_upsert_table(spark, path).collect()}
+    assert len(got) == 20 and got["o1"] == got["o2"] == "shipped"
+
+
+def test_delta_is_one_file_for_sized_and_unsized_batches(spark, tmp_path):
+    """A batch read from two small parquet files (sized: far below
+    ``BUCKET_TARGET_BYTES``) and a batch of Python rows (a leaf Spark
+    cannot size) each write their delta as one file, though each is
+    scanned in more than one partition."""
+    path = str(tmp_path / "tbl")
+    write_table(spark, _file_backed(spark, tmp_path, _ROWS), path, _KEYS, "update_time")
+    rows = [(f"o{i}", "i1", "shipped", datetime.datetime(2024, 1, 2)) for i in range(40)]
+    src = str(tmp_path / "two-files")
+    spark.createDataFrame(rows, _SCHEMA).repartition(2).write.parquet(src)
+    sized = spark.read.schema(_SCHEMA).parquet(src)
+    unsized = spark.createDataFrame(rows[::-1], _SCHEMA)
+    assert sized.rdd.getNumPartitions() == 2 and unsized.rdd.getNumPartitions() > 1
+    assert upsert_mod._write_tasks(sized) == upsert_mod._write_tasks(unsized) == 1
+    for batch in (sized, unsized):
+        upsert(spark, batch, path, _KEYS, "update_time", ["status"])
+    assert {d: len(f) for d, f in _delta_files(path).items()} == {".s=1": 1, ".s=2": 1}

@@ -15,7 +15,9 @@ from e_commerce_etl_pipeline_spark.operators import (
 from e_commerce_etl_pipeline_spark.operators.upsert import (
     read_upsert_table,
     resolve_upsert,
+    stamp_etl_metadata,
     upsert,
+    write_table,
 )
 
 
@@ -124,3 +126,36 @@ def test_upsert_parquet_bucketed(spark, tmp_path):
     upsert(spark, b2, path, ["order_id", "item_id"], "update_time", ["status"])
     out2 = {r.order_id: r.status for r in read_upsert_table(spark, path).collect()}
     assert out2 == out
+
+
+def _stamped(spark, rows, vn_naive):
+    return stamp_etl_metadata(_mk(spark, rows), "src", vn_naive=vn_naive)
+
+
+@pytest.mark.parametrize("vn_naive", [True, False])
+def test_update_stamp_matches_created_stamp_convention(spark, tmp_path, vn_naive):
+    """An applied update stamps ``etl_updated_at`` in the convention
+    ``etl_created_at`` was stamped in, through ``upsert`` and
+    ``resolve_upsert``: +07 wall-clock time for a ``timestamp_ntz``
+    (MISA/Shopee) table, the instant for a ``timestamp`` (TikTok) one.
+    So the update is never before the creation, and it lies within 60 s
+    of the clock it is read against."""
+    keys = ["order_id", "item_id"]
+    base = _stamped(spark, [("o1", "i1", "created", ts("2024-01-01T00:00:00"))], vn_naive)
+    batch = _stamped(spark, [("o1", "i1", "shipped", ts("2024-01-02T00:00:00"))], vn_naive)
+    path = str(tmp_path / "tbl")
+    write_table(spark, base, path, keys, "update_time")
+    upsert(spark, batch, path, keys, "update_time", ["status"])
+    target = read_upsert_table(spark, path)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    # a timestamp_ntz reads back as its wall-clock time, a timestamp in
+    # this process's local time
+    clock = (now + datetime.timedelta(hours=7)).replace(tzinfo=None) if vn_naive \
+        else now.astimezone().replace(tzinfo=None)
+    kind = "timestamp_ntz" if vn_naive else "timestamp"
+    assert dict(target.dtypes)["etl_updated_at"] == kind
+    for out in (target, resolve_upsert(base, batch, keys, "update_time", ["status"])):
+        [r] = out.collect()
+        assert r.status == "shipped"
+        assert r.etl_updated_at >= r.etl_created_at
+        assert abs((r.etl_updated_at - clock).total_seconds()) < 60

@@ -100,3 +100,24 @@ def test_compaction_through_file_uri(spark, tmp_path):
 def test_remote_scheme_without_session_fails_loudly():
     with pytest.raises(RuntimeError, match="Hadoop FileSystem API"):
         fsops._local_path("s3a://bucket/table")
+
+
+def test_exists_resolves_path_class_in_one_round_trip(spark, tmp_path, monkeypatch):
+    """``fsops.exists`` makes 5 py4j gateway round trips: the Path class
+    (one fully qualified lookup), its constructor, the session's Hadoop
+    configuration, ``getFileSystem`` and ``exists``. Naming the class
+    segment by segment (``jvm.org.apache.hadoop.fs.Path``) made 5
+    lookups alone."""
+    client = spark._sc._gateway._gateway_client
+    sent = []
+    send = client.send_command
+
+    def counted(command, *a, **k):
+        sent.append(command)
+        return send(command, *a, **k)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    assert fsops.exists(str(tmp_path), spark)
+    assert not fsops.exists(str(tmp_path / "missing"), spark)
+    monkeypatch.undo()
+    assert len(sent) == 2 * 5, sent

@@ -15,8 +15,9 @@ budget used by test_coercions_property.py.
 
 ``test_fold_versions_is_left_fold`` checks the multi-batch fold itself:
 ``fold_versions`` over a base and 1-5 deltas, with NULL keys, NULL
-orders and guard ties, must equal a left fold, written here in plain
-Python, of the guard and the ETL-metadata carve-outs.
+orders, guard ties and several rows of a key in one delta, must equal a
+left fold, written here in plain Python, of each delta's keep-newest
+rows through the guard and the ETL-metadata carve-outs.
 """
 
 from __future__ import annotations
@@ -110,11 +111,24 @@ batches = st.lists(st.lists(version, max_size=6), min_size=1, max_size=5)
 
 
 def _by_key_once(versions):
-    """One version per key (the fold's input contract), first wins."""
+    """One version per key (the base's contract), first wins."""
     out = {}
     for key, status, order, v in versions:
         out.setdefault(key, (status, order, v))
     return out
+
+
+def _newest_per_key(versions):
+    """keep_newest in Python: per key, the last version in (order,
+    status, v) order with NULLs lowest."""
+    def rank(version):
+        _, status, order, v = version
+        return tuple((x is not None, x) for x in (order, status, v))
+    out = {}
+    for version in versions:
+        if version[0] not in out or rank(version) > rank(out[version[0]]):
+            out[version[0]] = version
+    return {key: rest for key, *rest in out.values()}
 
 
 def _guard(cur_order, cur_status, order, status):
@@ -141,8 +155,9 @@ def test_fold_versions_is_left_fold(spark, base, deltas):
     delta_rows = []
     for seq, batch in enumerate(deltas, start=1):
         stamp = 100 + seq
-        for key, (status, order, v) in _by_key_once(batch).items():
-            delta_rows.append((*key, status, order, v, seq, seq, seq, stamp))
+        delta_rows += [(*key, status, order, v, seq, seq, seq, stamp)
+                       for key, status, order, v in batch]
+        for key, (status, order, v) in _newest_per_key(batch).items():
             cur = table.get(key)
             if cur is None:  # insert: the version's own ETL stamps
                 table[key] = (*key, status, order, v, seq, seq)
@@ -154,5 +169,6 @@ def test_fold_versions_is_left_fold(spark, base, deltas):
         FOLD_SCHEMA)
     delta_df = spark.createDataFrame(
         delta_rows, FOLD_SCHEMA + ", __seq int, __batch_time int")
-    got = fold_versions(base_df, delta_df, ["k", "k2"], "ord", ["status"]).collect()
+    got = fold_versions(base_df, delta_df, ["k", "k2"], "ord", ["status"],
+                        tiebreak=["status", "v"]).collect()
     assert sorted(map(tuple, got), key=_sort_key) == sorted(table.values(), key=_sort_key)
