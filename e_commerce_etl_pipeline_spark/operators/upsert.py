@@ -47,10 +47,10 @@ the name holds ``=``), so a raw ``spark.read.parquet(table)`` reads the
 base only; ``read_upsert_table`` is the table.
 
 Scale note: an upsert batch costs its own rows. It appends them as one
-delta in one narrow job (scan, project, write): no read of the table, no
-join, no shuffle, no bucket rewrite. A read folds base and live deltas
-in one aggregate over the key (one shuffle); with no live delta it is a
-plain scan. Once a table holds
+delta, in one narrow job (scan, project, write) when Spark can size the
+batch: no read of the table, no join, no shuffle, no bucket rewrite. A
+read folds base and live deltas in one aggregate over the key (one
+shuffle); with no live delta it is a plain scan. Once a table holds
 ``COMPACT_AT`` live deltas, the upsert that wrote the last one folds them
 into the buckets they touch, so the fold a reader pays stays bounded. A
 new table's bucket count is sized from its first load, one bucket per
@@ -68,7 +68,15 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    CalendarIntervalType,
+    DataType,
+    IntegerType,
+    MapType,
+    StructType,
+    VariantType,
+)
 
 from . import fsops, index_store
 from .dedup import drop_null_keys, keep_newest
@@ -94,15 +102,16 @@ ETL_COLS = ("etl_batch_id", "etl_created_at", "etl_updated_at", "etl_source")
 COMPACT_AT = 32
 
 # Estimated input bytes per bucket when write_table sizes a new table,
-# and per write task of an upsert's delta:
-# one scan split (the spark.sql.files.maxPartitionBytes default). A bucket
-# that fits a split is read by one task and compacted into one file, so
-# the bucketing adds no task a plain parquet table of that size would
-# not run, and a table below the target is one bucket: one file, and one
-# directory for a read to list on the driver. The estimate is of the
-# input's plan (a JSON source's text bytes), so it overstates parquet.
+# and per write task of an upsert's delta: one scan split (the
+# spark.sql.files.maxPartitionBytes default). A bucket that fits a split
+# is read by one task and compacted into one file, so the bucketing adds
+# no task a plain parquet table of that size would not run, and a table
+# below the target is one bucket: one file, and one directory for a read
+# to list on the driver. The estimate is of the input's plan (a JSON
+# source's text bytes), so it overstates parquet.
 BUCKET_TARGET_BYTES = 128 * 1024 * 1024
-# The most buckets the sizing gives (the fixed count it replaced). An
+# The most buckets the sizing gives (the fixed count it replaced), and
+# the most write tasks an upsert's delta takes from an estimate. An
 # estimate is not a measurement: a plan Spark cannot size reports
 # spark.sql.defaultSizeInBytes, a projection over it scales that down
 # only a little, and a join multiplies its inputs' sizes.
@@ -180,34 +189,34 @@ def _table_meta(
     return StructType.fromJson(meta["schema"]), meta["num_buckets"], merge
 
 
-def _per_target(plan) -> int:
-    """One per ``BUCKET_TARGET_BYTES`` of ``plan``'s size estimate, at
-    least one and at most ``MAX_BUCKETS``."""
-    estimate = int(plan.stats().sizeInBytes())
+def _estimate(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df``'s plan, in bytes (no job)."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _per_target(estimate: int) -> int:
+    """One per ``BUCKET_TARGET_BYTES`` of ``estimate``, at least one and
+    at most ``MAX_BUCKETS``."""
     return max(1, min(MAX_BUCKETS, -(-estimate // BUCKET_TARGET_BYTES)))
 
 
 def _sized_buckets(df: DataFrame) -> int:
-    """The bucket count for a new table holding ``df``, from the
-    optimizer's size estimate of its plan (no job): ``_per_target``,
-    so a plan Spark cannot size gets ``MAX_BUCKETS``."""
-    return _per_target(df._jdf.queryExecution().optimizedPlan())
+    """The bucket count for a new table holding ``df``: ``_per_target``
+    of its estimate, so a plan Spark cannot size gets ``MAX_BUCKETS``."""
+    return _per_target(_estimate(df))
 
 
-def _write_tasks(df: DataFrame) -> int:
-    """The partitions an upsert writes its delta ``df`` from (no job):
-    ``_per_target`` of its plan, or one when a leaf of the plan is one
-    Spark cannot size. Such a leaf reports ``spark.sql.defaultSizeInBytes``
-    exactly, which an estimate scaled through a projection or a join
-    does not, and it holds rows the driver made (a Python list, the API
-    extract's JSON over an RDD), so a small batch stays one file."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    unsized = df.sparkSession._jsparkSession.sessionState().conf().defaultSizeInBytes()
-    leaves = plan.collectLeaves()
-    if any(int(leaves.apply(i).stats().sizeInBytes()) == unsized
-           for i in range(leaves.size())):
-        return 1
-    return _per_target(plan)
+def _delta_layout(df: DataFrame) -> DataFrame:
+    """``df`` partitioned for its delta write (no job). An estimate of at
+    most ``MAX_BUCKETS`` targets is coalesced to ``_per_target`` of it:
+    narrow, so the write stays one stage. A larger estimate is not
+    trusted, and it is what every plan Spark cannot size gives (rows from
+    a Python list or an RDD): the write rebalances, and AQE sizes its
+    partitions from the bytes the shuffle measures."""
+    estimate = _estimate(df)
+    if estimate > MAX_BUCKETS * BUCKET_TARGET_BYTES:
+        return df.hint("rebalance")
+    return df.coalesce(_per_target(estimate))
 
 
 def write_table(
@@ -244,6 +253,16 @@ def write_table(
     index_store.invalidate(table_path, spark)
 
 
+def _orderable(t: DataType) -> bool:
+    """Whether Spark can compare values of ``t``: no map, variant or
+    interval inside it."""
+    if isinstance(t, StructType):
+        return all(_orderable(f.dataType) for f in t.fields)
+    if isinstance(t, ArrayType):
+        return _orderable(t.elementType)
+    return not isinstance(t, (MapType, VariantType, CalendarIntervalType))
+
+
 def fold_versions(
     base: DataFrame,
     deltas: DataFrame,
@@ -263,11 +282,13 @@ def fold_versions(
     the same type. Returns ``base``'s columns. Of a key's rows in one
     seq, the fold takes the last in ``(order_col, *tiebreak)`` order with
     NULLs lowest: ``keep_newest``'s pick (``tiebreak``: columns of
-    ``base``). A key's first version is its base row, or else its first
-    kept delta row taken as an insert. Each later version replaces the
-    current one when the guard applies, keeping the current
-    ``etl_created_at`` and stamping ``etl_updated_at`` with the version's
-    ``__batch_time``.
+    ``base``). Rows tied on those are ordered by their remaining
+    columns (those Spark can compare), so every read and compaction of
+    the same files picks the same row. A key's first version is its
+    base row, or else its first kept delta row taken as an insert. Each
+    later version replaces the current one when the guard applies,
+    keeping the current ``etl_created_at`` and stamping
+    ``etl_updated_at`` with the version's ``__batch_time``.
 
     One SQL aggregate over the union: ``collect_list`` of each key's
     versions, sorted by ``(__seq, order_col, *tiebreak)``, filtered to
@@ -284,8 +305,18 @@ def fold_versions(
     else:
         updated = "x"
     guard = merge_matched_condition(order_col, guard_cols, tgt="acc", src="x")
-    cmp = "0"  # ascending, NULLs lowest
-    for f in reversed(["__seq", order_col, *tiebreak]):
+    # Rows equal on the sort columns are ordered by their other columns,
+    # so the pick depends on the stored rows, not on the order the
+    # shuffle fetched a multi-file delta in.
+    types = dict(zip(versions.columns, (f.dataType for f in versions.schema.fields)))
+    rest = [f for f in fields if f not in {"__seq", order_col, *tiebreak}
+            and _orderable(types[f])]
+    if rest:
+        a, b = (f"struct({', '.join(f'{v}.{q(f)}' for f in rest)})" for v in "ab")
+        cmp = f"CASE WHEN {a} < {b} THEN -1 WHEN {a} > {b} THEN 1 ELSE 0 END"
+    else:
+        cmp = "0"
+    for f in reversed(["__seq", order_col, *tiebreak]):  # ascending, NULLs lowest
         a, b = f"a.{q(f)}", f"b.{q(f)}"
         cmp = f"CASE WHEN {a} <=> {b} THEN {cmp} WHEN {a} IS NULL OR {a} < {b} THEN -1 ELSE 1 END"
     history = f"array_sort(collect_list(struct({', '.join(map(q, fields))})), (a, b) -> {cmp})"
@@ -484,13 +515,14 @@ def upsert(
     """Apply a guarded keyed upsert batch to the table at ``table_path``.
 
     The batch's rows, cast to the table schema and bucketed, are written
-    as the next delta (``.s=<seq>``) with its seq and batch time, in one
-    narrow job: no read of the table, no join, no shuffle, no bucket
-    rewrite. A key's newest row in the batch is picked by the fold
-    (``fold_versions``), not before the write. The delta is written from
-    ``_write_tasks`` partitions, one for a batch of driver-made rows.
-    The batch that brings the live deltas to ``COMPACT_AT`` then folds
-    them into the buckets (``compact_buckets``). A first batch into a missing table is a full
+    as the next delta (``.s=<seq>``) with its seq and batch time: no read
+    of the table, no join, no bucket rewrite. A key's newest row in the
+    batch is picked by the fold (``fold_versions``), not before the
+    write. A batch Spark can size below ``MAX_BUCKETS`` targets is
+    written in one narrow job; any other is rebalanced first
+    (``_delta_layout``). The batch that brings the live deltas to
+    ``COMPACT_AT`` then folds them into the buckets
+    (``compact_buckets``). A first batch into a missing table is a full
     load (``write_table``), bucketed by ``num_buckets`` or, without it,
     sized from the batch; into an existing table the batch takes the
     table's recorded count, whatever ``num_buckets`` says.
@@ -528,7 +560,7 @@ def upsert(
     if ETL_UPDATED in schema.fieldNames():
         cols.append(f"{batch_stamp(schema[ETL_UPDATED].dataType.simpleString())} AS __batch_time")
     path = _seq_dir(table_path, seq)
-    delta, written = observe_rows(rows.selectExpr(*cols).coalesce(_write_tasks(rows)))
+    delta, written = observe_rows(_delta_layout(rows.selectExpr(*cols)))
     try:
         # _SUCCESS, written by the job commit after every data file, is
         # the delta's completeness marker: pin it on for this write

@@ -577,14 +577,15 @@ def _sql_plans(spark, group):
 
 
 def test_appending_batch_is_one_narrow_job(spark, tmp_path):
-    """A batch into an existing table, with several rows per key, is
-    written by one Spark job of one stage: scan, project, write, with
-    no Exchange. Its newest rows are picked by the read's fold."""
+    """A batch Spark can size, into an existing table and with several
+    rows per key, is written by one Spark job of one stage: scan,
+    project, write, with no Exchange. Its newest rows are picked by the
+    read's fold."""
     path = str(tmp_path / "tbl")
     write_table(spark, _file_backed(spark, tmp_path, _ROWS), path, _KEYS, "update_time")
-    batch = spark.createDataFrame(
-        [(f"o{i % 5}", "i1", f"s{i}", datetime.datetime(2024, 1, 2, i)) for i in range(12)],
-        _SCHEMA)
+    batch = _file_backed(
+        spark, tmp_path,
+        [(f"o{i % 5}", "i1", f"s{i}", datetime.datetime(2024, 1, 2, i)) for i in range(12)])
     group = _in_group(spark, lambda: upsert(spark, batch, path, _KEYS, "update_time",
                                             ["status"]))
     [job] = _jobs(spark, group)
@@ -689,11 +690,15 @@ def test_merge_spec_without_tiebreak_appends_without_compaction(spark, tmp_path)
     assert len(got) == 20 and got["o1"] == got["o2"] == "shipped"
 
 
-def test_delta_is_one_file_for_sized_and_unsized_batches(spark, tmp_path):
+def test_delta_layout_coalesces_sized_and_rebalances_unsized_batches(
+        spark, tmp_path, monkeypatch):
     """A batch read from two small parquet files (sized: far below
-    ``BUCKET_TARGET_BYTES``) and a batch of Python rows (a leaf Spark
-    cannot size) each write their delta as one file, though each is
-    scanned in more than one partition."""
+    ``BUCKET_TARGET_BYTES``) is coalesced to one partition, with no
+    Exchange; a batch of Python rows (a plan Spark cannot size) is
+    rebalanced, and AQE sizes it to one partition. Each writes its delta
+    as one file, though each is scanned in more than one partition. A
+    sized estimate of n targets is coalesced to n partitions, and one
+    over ``MAX_BUCKETS`` targets is rebalanced."""
     path = str(tmp_path / "tbl")
     write_table(spark, _file_backed(spark, tmp_path, _ROWS), path, _KEYS, "update_time")
     rows = [(f"o{i}", "i1", "shipped", datetime.datetime(2024, 1, 2)) for i in range(40)]
@@ -702,7 +707,53 @@ def test_delta_is_one_file_for_sized_and_unsized_batches(spark, tmp_path):
     sized = spark.read.schema(_SCHEMA).parquet(src)
     unsized = spark.createDataFrame(rows[::-1], _SCHEMA)
     assert sized.rdd.getNumPartitions() == 2 and unsized.rdd.getNumPartitions() > 1
-    assert upsert_mod._write_tasks(sized) == upsert_mod._write_tasks(unsized) == 1
+
+    def plan(df):
+        return upsert_mod._delta_layout(df)._jdf.queryExecution().optimizedPlan().toString()
+    # a coalesce is "Repartition <n>, false" in a logical plan
+    assert "Rebalance" not in plan(sized) and "Repartition 1, false" in plan(sized)
+    assert "RebalancePartitions" in plan(unsized)
     for batch in (sized, unsized):
         upsert(spark, batch, path, _KEYS, "update_time", ["status"])
     assert {d: len(f) for d, f in _delta_files(path).items()} == {".s=1": 1, ".s=2": 1}
+
+    estimate = upsert_mod._estimate(sized)
+    monkeypatch.setattr(upsert_mod, "BUCKET_TARGET_BYTES", estimate // 3 + 1)
+    assert "Repartition 3, false" in plan(sized)
+    monkeypatch.setattr(upsert_mod, "BUCKET_TARGET_BYTES",
+                        estimate // (upsert_mod.MAX_BUCKETS + 1))
+    assert "RebalancePartitions" in plan(sized)
+
+
+def _two_file_batch(spark, tmp_path, first, second):
+    """A file-backed batch of two parquet files, ``first`` and ``second``."""
+    src = str(tmp_path / f"src-{uuid.uuid4().hex}")
+    for rows in (first, second):
+        spark.createDataFrame(rows, _TB_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    return spark.read.schema(_TB_SCHEMA).parquet(src)
+
+
+def test_tie_across_delta_files_is_picked_by_remaining_columns(spark, tmp_path, monkeypatch):
+    """Rows of one key tied on ``update_time`` in one delta, with no
+    tiebreak, written to two delta files: whichever file holds which
+    row, every read and the compaction pick the row with the greater
+    remaining columns (``status``, then ``v``, NULLs lowest), the
+    pure-Python model's pick."""
+    # write each scan partition, one per file, to its own delta file
+    monkeypatch.setattr(upsert_mod, "_delta_layout", lambda df: df)
+    t = datetime.datetime(2024, 1, 2)
+    base = [(f"o{i}", "i1", "created", datetime.datetime(2024, 1, 1), 0) for i in range(4)]
+    tied = [[("o0", "i1", "a", t, 9), ("o1", "i1", None, t, 9), ("o2", "i1", "s", t, 1)],
+            [("o0", "i1", "b", t, 1), ("o1", "i1", "a", t, 0), ("o2", "i1", "s", t, None)]]
+    expected = sorted([("o0", "i1", "b", t, 1), ("o1", "i1", "a", t, 0),
+                       ("o2", "i1", "s", t, 1), base[3]])
+    for name, files in (("ab", tied), ("ba", tied[::-1])):
+        path = str(tmp_path / name)
+        write_table(spark, spark.createDataFrame(base, _TB_SCHEMA), path, _KEYS,
+                    "update_time")
+        upsert(spark, _two_file_batch(spark, tmp_path, *files), path, _KEYS, "update_time")
+        assert [len(f) for f in _delta_files(path).values()] == [2], name
+        for _ in range(3):
+            assert sorted(map(tuple, read_upsert_table(spark, path).collect())) == expected, name
+        upsert_mod.compact_buckets(spark, path)
+        assert sorted(map(tuple, read_upsert_table(spark, path).collect())) == expected, name
