@@ -307,15 +307,14 @@ def fold_versions(
     guard = merge_matched_condition(order_col, guard_cols, tgt="acc", src="x")
     # Rows equal on the sort columns are ordered by their other columns,
     # so the pick depends on the stored rows, not on the order the
-    # shuffle fetched a multi-file delta in.
+    # shuffle fetched a multi-file delta in. Whole rows compare with the
+    # shortest lambda (it is analyzed on every read); a column Spark
+    # cannot compare is left out.
     types = dict(zip(versions.columns, (f.dataType for f in versions.schema.fields)))
-    rest = [f for f in fields if f not in {"__seq", order_col, *tiebreak}
-            and _orderable(types[f])]
-    if rest:
-        a, b = (f"struct({', '.join(f'{v}.{q(f)}' for f in rest)})" for v in "ab")
-        cmp = f"CASE WHEN {a} < {b} THEN -1 WHEN {a} > {b} THEN 1 ELSE 0 END"
-    else:
-        cmp = "0"
+    comparable = [f for f in fields if _orderable(types[f])]
+    a, b = ("a", "b") if len(comparable) == len(fields) else (
+        f"struct({', '.join(f'{v}.{q(f)}' for f in comparable)})" for v in "ab")
+    cmp = f"CASE WHEN {a} < {b} THEN -1 WHEN {a} > {b} THEN 1 ELSE 0 END"
     for f in reversed(["__seq", order_col, *tiebreak]):  # ascending, NULLs lowest
         a, b = f"a.{q(f)}", f"b.{q(f)}"
         cmp = f"CASE WHEN {a} <=> {b} THEN {cmp} WHEN {a} IS NULL OR {a} < {b} THEN -1 ELSE 1 END"

@@ -757,3 +757,14 @@ def test_tie_across_delta_files_is_picked_by_remaining_columns(spark, tmp_path, 
             assert sorted(map(tuple, read_upsert_table(spark, path).collect())) == expected, name
         upsert_mod.compact_buckets(spark, path)
         assert sorted(map(tuple, read_upsert_table(spark, path).collect())) == expected, name
+
+
+def test_tie_order_leaves_out_a_map_column(spark):
+    """A column Spark cannot compare (a map) is left out of the order
+    that breaks a tie; the others still decide it, and the map comes
+    along with its row."""
+    schema = "k string, ord int, s string, m map<string, int>"
+    base = spark.createDataFrame([("a", 0, "x", {"p": 1})], schema)
+    batch = spark.createDataFrame([("a", 1, "c", {"r": 3}), ("a", 1, "b", {"q": 2})], schema)
+    [r] = resolve_upsert(base, batch, ["k"], "ord").collect()
+    assert (r.s, r.m) == ("c", {"r": 3})
