@@ -173,6 +173,15 @@ def glob_parent_names(pattern: str, spark: SparkSession | None = None) -> list[s
                   for st in fs.globStatus(jpath) or [])
 
 
+def glob_paths(pattern: str, spark: SparkSession | None = None) -> list[str]:
+    """Paths of the entries matching the glob ``pattern``, sorted."""
+    spark = _active_spark(spark)
+    if spark is None:
+        return sorted(glob.glob(_local_path(pattern)))
+    fs, jpath, _ = _hadoop(spark, pattern)
+    return sorted(st.getPath().toString() for st in fs.globStatus(jpath) or [])
+
+
 def rename(src: str, dst: str, spark: SparkSession | None = None) -> None:
     """Move ``src`` to a ``dst`` that does not exist; raises on failure."""
     spark = _active_spark(spark)

@@ -23,28 +23,36 @@ no-op; an older order_col never regresses a newer row.
 
 Layout (merge-on-read)::
 
-    _table            JSON: the table schema and bucket count, recorded
-                      at creation so no read infers a schema and no
-                      writer routes keys to the wrong bucket, and the
-                      keys, order, guard and tiebreak columns the deltas
-                      fold with, recorded by the upsert that writes the
-                      first delta
-    __bucket=<n>/     the base: one row per key, hash-bucketed on the key
+    _table            JSON, the table's one commit point, replaced
+                      atomically: the table schema and bucket count,
+                      recorded at creation so no read infers a schema and
+                      no writer routes keys to the wrong bucket; each
+                      bucket's live base generation (``base``) and the
+                      last delta seq folded into the base (``upto``); and
+                      the keys, order, guard and tiebreak columns the
+                      deltas fold with, recorded by the upsert that
+                      writes the first delta
+    __bucket=<n>/__g=<gen>/
+                      the base: one row per key, hash-bucketed on the
+                      key; only the generation ``_table`` names is read
     .s=<seq>/         one delta per upsert batch: the batch's rows as
                       offered (any number per key; the fold keeps the
                       newest), cast to the table schema, with
                       ``__bucket``, ``__seq`` and ``__batch_time``, one
                       parquet file for a small batch; its ``_SUCCESS``
                       is the completeness marker, written last, and a
-                      delta without one is invisible
-    _compaction       a compaction's commit point, present while its swap
-                      is unfinished: the staged buckets and the last seq
-                      folded into them
-    .compact/         the compaction's staged buckets
+                      delta without one, or at or below ``upto``, is
+                      invisible
 
-Spark's file index skips ``.``- and ``_``-prefixed names (``_`` unless
-the name holds ``=``), so a raw ``spark.read.parquet(table)`` reads the
-base only; ``read_upsert_table`` is the table.
+An upsert or compaction stopped at any point leaves the old ``_table``
+or the new one, and each names only complete files; a full load
+truncates the table first, so one stopped before it wrote ``_table``
+leaves a directory that raises until the load is re-run. Spark's file
+index skips ``.``- and ``_``-prefixed names (``_`` unless the name holds
+``=``), so a raw ``spark.read.parquet(table)`` reads the base only, with
+``__g`` as one more partition column (and any generation a stopped
+compaction left, until the next one deletes it); ``read_upsert_table``
+is the table.
 
 Scale note: an upsert batch costs its own rows. It appends them as one
 delta, in one narrow job (scan, project, write) when Spark can size the
@@ -117,11 +125,13 @@ BUCKET_TARGET_BYTES = 128 * 1024 * 1024
 # only a little, and a join multiplies its inputs' sizes.
 MAX_BUCKETS = 64
 
+# Files a bucket's live generation may hold before ``compact_buckets``
+# rewrites it as one file.
+MAX_FILES_PER_BUCKET = 4
+
 q = SPARK_DIALECT.q
 
 _META = "_table"
-_COMMIT = "_compaction"
-_STAGE = ".compact"
 _SEQ = fsops.DELTA_PREFIX
 
 
@@ -149,12 +159,9 @@ def _read_json(spark: SparkSession, path: str) -> dict | None:
     return json.loads(text) if text else None
 
 
-def _write_meta(spark: SparkSession, table_path: str, schema: StructType,
-                num_buckets: int, merge: dict | None = None) -> None:
-    meta = {"schema": schema.jsonValue(), "num_buckets": num_buckets}
-    if merge is not None:
-        meta["merge"] = merge
-    # atomic: an upsert may rewrite it, and every read needs it whole
+def _write_meta(spark: SparkSession, table_path: str, meta: dict) -> None:
+    # atomic: it commits every change of the base or merge spec, and
+    # every read needs it whole
     fsops.write_text_atomic(f"{table_path}/{_META}", json.dumps(meta), spark)
 
 
@@ -164,13 +171,9 @@ def _merge_spec(keys: Sequence[str], order_col: str, guard_cols: Sequence[str],
             "tiebreak": list(tiebreak)}
 
 
-def _table_meta(
-    spark: SparkSession, table_path: str
-) -> tuple[StructType, int, dict | None]:
-    """The table schema (``__bucket`` included), bucket count and merge
-    spec recorded in ``_table``, read through the Hadoop FileSystem API.
-    A spec recorded before deltas carried a tiebreak reads as
-    ``tiebreak=[]``: its deltas fold the same under it.
+def _table_meta(spark: SparkSession, table_path: str) -> tuple[StructType, dict]:
+    """The table schema (``__bucket`` included) and the whole ``_table``
+    record, read through the Hadoop FileSystem API.
 
     The recorded bucket count wins over an upserting caller's: a batch
     bucketed with another count would route keys to the wrong bucket
@@ -178,15 +181,17 @@ def _table_meta(
     authoritative, like a lakehouse table's bucket spec living in its
     metadata rather than in every writer's config. A directory without
     the record was not written by ``write_table``; routing into it would
-    guess the count, so it raises."""
+    guess the count, so it raises. So does a record without ``base``:
+    its table was written in the layout before base generations."""
     meta = _read_json(spark, f"{table_path}/{_META}")
     if meta is None:
         raise FileNotFoundError(
             f"{table_path} has no {_META} record: not a table written by write_table")
-    merge = meta.get("merge")
-    if merge is not None:
-        merge.setdefault("tiebreak", [])
-    return StructType.fromJson(meta["schema"]), meta["num_buckets"], merge
+    if "base" not in meta:
+        raise FileNotFoundError(
+            f"{table_path}/{_META} names no base generation: the table was written in an "
+            "older layout; re-run its full load")
+    return StructType.fromJson(meta["schema"]), meta
 
 
 def _estimate(df: DataFrame) -> int:
@@ -231,9 +236,10 @@ def write_table(
 ) -> None:
     """Full-load (truncate+insert, K2) writer in the upsert-compatible
     hash-bucketed layout: dedup keep-newest, optional null-key drop (D5,
-    MISA parity), bucket by key hash, overwrite, and record the schema
-    and bucket count in ``_table``. The overwrite removes any deltas and
-    compaction state with the old base.
+    MISA parity), bucket by key hash, overwrite as base generation 0,
+    and record the schema, bucket count and written buckets in
+    ``_table``. The overwrite removes any deltas and generations with the
+    old base.
 
     ``num_buckets`` defaults to ``_sized_buckets(df)``, so a small load
     is one bucket. The table keeps the count: one that grows is not
@@ -244,8 +250,12 @@ def write_table(
     if drop_null_key_rows:
         out = drop_null_keys(out, keys)
     out = out.withColumn("__bucket", _bucket_expr(keys, num_buckets))
-    out.write.partitionBy("__bucket").mode("overwrite").parquet(table_path)
-    _write_meta(spark, table_path, out.schema, num_buckets)
+    (out.withColumn("__g", F.lit(0))
+     .write.partitionBy("__bucket", "__g").mode("overwrite").parquet(table_path))
+    written = fsops.glob_parent_names(f"{table_path}/__bucket=*/__g=0", spark)
+    _write_meta(spark, table_path, {
+        "schema": out.schema.jsonValue(), "num_buckets": num_buckets,
+        "base": {d.split("=", 1)[1]: 0 for d in written}, "upto": 0})
     # Derived index artifacts (IVF lists, cluster assignments, TF/basket
     # intermediates) are now stale — drop them eagerly. The fingerprint
     # keys in index_store already prevent stale READS; this reclaims the
@@ -379,21 +389,18 @@ def resolve_upsert(
                          tiebreak)
 
 
-def bucket_dirs(spark: SparkSession, table_path: str) -> set[str]:
-    """Names of the table's ``__bucket=<n>`` directories — none after a
-    full load of zero rows, which writes no partition."""
-    return {d for d in fsops.list_child_names(table_path, spark)
-            if d.startswith("__bucket=")}
+def _gen_dir(table_path: str, bucket: int | str, gen: int) -> str:
+    return f"{table_path}/__bucket={bucket}/__g={gen}"
 
 
 def _seq_dir(table_path: str, seq: int) -> str:
     return f"{table_path}/{_SEQ}{seq}"
 
 
-def _live_seqs(spark: SparkSession, table_path: str, after: int = 0) -> list[int]:
-    """Seqs of the complete deltas above ``after``, ascending."""
+def _live_seqs(spark: SparkSession, table_path: str, upto: int) -> list[int]:
+    """Seqs of the complete deltas above ``upto``, ascending."""
     names = fsops.glob_parent_names(f"{table_path}/{_SEQ}*/_SUCCESS", spark)
-    return sorted(s for s in (int(n[len(_SEQ):]) for n in names) if s > after)
+    return sorted(s for s in (int(n[len(_SEQ):]) for n in names) if s > upto)
 
 
 def _delta_schema(schema: StructType) -> StructType:
@@ -414,90 +421,22 @@ def _read_base(
     spark: SparkSession,
     table_path: str,
     schema: StructType,
-    pending: dict | None = None,
+    meta: dict,
     buckets: Sequence[int] | None = None,
 ) -> DataFrame:
-    """The base rows, of ``buckets`` only when given.
-
-    The whole base, with no compaction swap in progress, is a read of the
-    table root. A list of buckets names their directories, with
-    ``basePath`` for partition discovery: a read of the root lists every
-    bucket before the bucket filter prunes any, and past Spark's 32-path
-    threshold (``spark.sql.sources.parallelPartitionDiscovery.threshold``)
-    that listing is a distributed job of one task per directory. During
-    an unfinished swap (``pending``) a bucket whose staged copy is still
-    in ``.compact`` reads that copy: the swap may already have deleted
-    the bucket's old directory."""
-    reader = spark.read.schema(schema)
-    staged = _staged(spark, table_path) if pending else set()
-    if buckets is None and not staged:
-        return reader.parquet(table_path)
-    final = bucket_dirs(spark, table_path)
-    want = final | staged if buckets is None else {f"__bucket={b}" for b in buckets}
-    parts = [
-        reader.option("basePath", root).parquet(*[f"{root}/{d}" for d in sorted(dirs)])
-        for root, dirs in ((table_path, want & final - staged),
-                           (f"{table_path}/{_STAGE}", want & staged)) if dirs
-    ]
-    if not parts:
+    """The base rows, of ``buckets`` only when given: the generation
+    ``_table`` names for each bucket, read by naming its directory, with
+    ``basePath`` for partition discovery. A generation no committed
+    ``_table`` names is never read. Past Spark's 32-path threshold
+    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) the
+    listing is a distributed job of one task per directory, so a
+    compaction names only the buckets it rewrites."""
+    paths = [_gen_dir(table_path, b, g) for b, g in meta["base"].items()
+             if buckets is None or int(b) in buckets]
+    if not paths:
         return spark.createDataFrame([], schema)
-    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-
-
-def _staged(spark: SparkSession, table_path: str) -> set[str]:
-    stage = f"{table_path}/{_STAGE}"
-    return bucket_dirs(spark, stage) if fsops.exists(stage, spark) else set()
-
-
-def _overwrite_buckets(
-    spark: SparkSession, df: DataFrame, table_path: str, upto: int = 0
-) -> None:
-    """Replace the bucket partitions ``df`` has rows for; every other
-    bucket keeps its files byte-identical. ``upto``: the last delta seq
-    folded into ``df``, dropped once the swap is done.
-
-    ``df`` may read the very buckets it replaces. One job writes its
-    buckets to ``.compact``; a job that fails leaves the table as it was.
-    Then the commit point, ``_compaction``, records the staged buckets
-    and ``upto``, and the swap deletes each old bucket directory and
-    renames the staged one into place. A process that stops inside the
-    swap leaves the commit point behind: readers take the staged copy of
-    each bucket not yet swapped, and the next writer finishes the swap
-    (``_finish_swap``), so a re-run or a replayed batch converges (ST3)."""
-    stage = f"{table_path}/{_STAGE}"
-    try:
-        df.write.partitionBy("__bucket").mode("overwrite").parquet(stage)
-    except Exception:
-        fsops.delete(stage, spark)
-        raise
-    commit = {"upto": upto, "buckets": sorted(bucket_dirs(spark, stage))}
-    fsops.write_text_atomic(f"{table_path}/{_COMMIT}", json.dumps(commit), spark)
-    _finish_swap(spark, table_path, commit)
-
-
-def _finish_swap(spark: SparkSession, table_path: str, commit: dict) -> None:
-    """Complete a committed swap; every step can run again."""
-    stage = f"{table_path}/{_STAGE}"
-    for d in sorted(_staged(spark, table_path) & set(commit["buckets"])):
-        fsops.delete(f"{table_path}/{d}", spark)
-        fsops.rename(f"{stage}/{d}", f"{table_path}/{d}", spark)
-    for name in fsops.list_child_names(table_path, spark):
-        if name.startswith(_SEQ) and int(name[len(_SEQ):]) <= commit["upto"]:
-            fsops.delete(f"{table_path}/{name}", spark)
-    fsops.delete(stage, spark)
-    fsops.delete(f"{table_path}/{_COMMIT}", spark)
-    # The swap replaced files under paths the session may hold cached
-    # listings for (FileStatusCache has no TTL by default) — invalidate,
-    # or the next read of a swapped bucket hits FILE_NOT_EXIST.
-    spark.catalog.refreshByPath(table_path)
-    index_store.invalidate(table_path, spark)
-
-
-def _recover(spark: SparkSession, table_path: str) -> None:
-    """Finish a swap a stopped compaction left behind."""
-    commit = _read_json(spark, f"{table_path}/{_COMMIT}")
-    if commit is not None:
-        _finish_swap(spark, table_path, commit)
+    return (spark.read.schema(schema).option("basePath", table_path)
+            .parquet(*paths).drop("__g"))
 
 
 def upsert(
@@ -533,20 +472,22 @@ def upsert(
     if not fsops.exists(table_path, spark):
         write_table(spark, source, table_path, keys, order_col, num_buckets,
                     drop_null_key_rows, tiebreak)
-        if not bucket_dirs(spark, table_path):
+        if not _table_meta(spark, table_path)[1]["base"]:
             fsops.delete(table_path, spark)
         return
-    _recover(spark, table_path)
-    # the table's recorded bucket count wins over the argument (_table_meta)
-    schema, num_buckets, merge = _table_meta(spark, table_path)
-    seqs = _live_seqs(spark, table_path)
+    schema, meta = _table_meta(spark, table_path)
+    seqs = _live_seqs(spark, table_path, meta["upto"])
     spec = _merge_spec(keys, order_col, guard_cols, tiebreak)
-    if merge != spec:
+    if meta.get("merge") != spec:
         if seqs:  # the live deltas fold under the spec they were written with
             compact_buckets(spark, table_path)
+            schema, meta = _table_meta(spark, table_path)
             seqs = []
-        _write_meta(spark, table_path, schema, num_buckets, spec)
-    seq = (seqs[-1] if seqs else 0) + 1
+        _write_meta(spark, table_path, {**meta, "merge": spec})
+    # above upto: a folded delta a stopped compaction left is never reused
+    seq = (seqs[-1] if seqs else meta["upto"]) + 1
+    # the table's recorded bucket count wins over the argument (_table_meta)
+    num_buckets = meta["num_buckets"]
 
     rows = drop_null_keys(source, keys) if drop_null_key_rows else source
     types = dict(rows.dtypes)
@@ -578,26 +519,32 @@ def upsert(
 
 
 def read_upsert_table(spark: SparkSession, table_path: str) -> DataFrame:
-    """The table's rows: the base folded with its live deltas, read with
-    the recorded schema. With no live delta this is a scan of the base."""
-    schema, _, merge = _table_meta(spark, table_path)
-    commit = _read_json(spark, f"{table_path}/{_COMMIT}")
-    df = _read_base(spark, table_path, schema, commit)
-    seqs = _live_seqs(spark, table_path, commit["upto"] if commit else 0)
+    """The table's rows: the base generations ``_table`` names folded with
+    the live deltas above its ``upto``, read with the recorded schema.
+    With no live delta this is a scan of the base."""
+    schema, meta = _table_meta(spark, table_path)
+    df = _read_base(spark, table_path, schema, meta)
+    seqs = _live_seqs(spark, table_path, meta["upto"])
     if seqs:
-        df = fold_versions(df, _read_deltas(spark, table_path, schema, seqs), **merge)
+        df = fold_versions(df, _read_deltas(spark, table_path, schema, seqs), **meta["merge"])
     return df.drop("__bucket")
 
 
-def compact_buckets(
-    spark: SparkSession,
-    table_path: str,
-    max_files_per_bucket: int = 4,
-) -> list[int]:
+def compact_buckets(spark: SparkSession, table_path: str) -> list[int]:
     """Fold the live deltas into the buckets they touch, and rewrite
-    buckets holding more than ``max_files_per_bucket`` files as one file
-    each, through ``_overwrite_buckets``' swap. Untouched slim buckets
-    keep their files byte-identical.
+    buckets whose live generation holds more than
+    ``MAX_FILES_PER_BUCKET`` files as one file each. Untouched slim
+    buckets keep their files byte-identical.
+
+    One job reads the buckets and writes their replacements as the next
+    generation, ``max(live) + 1``, by a dynamic partition overwrite: it
+    replaces only directories of that generation, which no committed
+    ``_table`` names, so a job that fails or stops leaves the table as it
+    was. One ``_table`` write then commits the new generations and the
+    last folded seq as ``upto``, and the generations and deltas it no
+    longer names are deleted, with any a stopped compaction left. A
+    process stopped at any point leaves the old ``_table`` or the new
+    one, so a re-run or a replayed batch converges (ST3).
 
     File accretion comes from append-mode ingestion (K1) and multi-task
     bulk loads, where every append/task drops one more file into each
@@ -607,28 +554,41 @@ def compact_buckets(
     of appends, exactly like lakehouse OPTIMIZE.
 
     Returns the bucket ids rewritten."""
-    _recover(spark, table_path)
-    seqs = _live_seqs(spark, table_path)
+    schema, meta = _table_meta(spark, table_path)
+    base = meta["base"]
+    seqs = _live_seqs(spark, table_path, meta["upto"])
     bloated = {
-        int(d.split("=", 1)[1]) for d in bucket_dirs(spark, table_path)
-        if fsops.count_files_with_suffix(f"{table_path}/{d}", ".parquet", spark)
-        > max_files_per_bucket
+        int(b) for b, g in base.items()
+        if fsops.count_files_with_suffix(_gen_dir(table_path, b, g), ".parquet", spark)
+        > MAX_FILES_PER_BUCKET
     }
     if not (seqs or bloated):
         return []
-    schema, _, merge = _table_meta(spark, table_path)
     touched: set[int] = set()
     if seqs:
         deltas = _read_deltas(spark, table_path, schema, seqs)
         touched = {r[0] for r in deltas.select("__bucket").distinct().collect()}
     rewrite = sorted(bloated | touched)
-    out = _read_base(spark, table_path, schema, buckets=rewrite)
+    out = _read_base(spark, table_path, schema, meta, rewrite)
     if seqs:
-        out = fold_versions(out, deltas, **merge)
-    # One job reads the buckets and writes their replacements;
-    # _overwrite_buckets' staged swap makes that safe.
-    _overwrite_buckets(spark, out.repartition("__bucket"), table_path,
-                       seqs[-1] if seqs else 0)
+        out = fold_versions(out, deltas, **meta["merge"])
+    gen = max(base.values(), default=0) + 1
+    (out.repartition("__bucket").withColumn("__g", F.lit(gen))
+     .write.partitionBy("__bucket", "__g").mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic").parquet(table_path))
+    meta = {**meta, "base": {**base, **{str(b): gen for b in rewrite}},
+            "upto": seqs[-1] if seqs else meta["upto"]}
+    _write_meta(spark, table_path, meta)
+    live = {f"__bucket={b}/__g={g}" for b, g in meta["base"].items()}
+    for path in fsops.glob_paths(f"{table_path}/__bucket=*/__g=*", spark):
+        if "/".join(path.rsplit("/", 2)[1:]) not in live:
+            fsops.delete(path, spark)
+    for name in fsops.list_child_names(table_path, spark):
+        if name.startswith(_SEQ) and int(name[len(_SEQ):]) <= meta["upto"]:
+            fsops.delete(f"{table_path}/{name}", spark)
+    # drop cached plans over the deleted files
+    spark.catalog.refreshByPath(table_path)
+    index_store.invalidate(table_path, spark)
     return rewrite
 
 

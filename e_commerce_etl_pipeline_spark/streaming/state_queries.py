@@ -27,12 +27,13 @@ global keep-first):
 
 Batch ORDER is forced where it matters: the file source processes by
 modification time (latestFirst=false), so each batch file gets an
-explicit ascending mtime. Work dirs are per-invocation tempdirs — the
-entries are pure functions of the sf tables.
+explicit ascending mtime. Work dirs are per-invocation tempdirs, removed
+at interpreter exit — the entries are pure functions of the sf tables.
 """
 
 from __future__ import annotations
 
+import atexit
 import glob
 import os
 import shutil
@@ -41,6 +42,14 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..plans.queries import MERGE_UPSERT_SQL, load_table, _dec
+
+
+def _work_dir(prefix: str) -> str:
+    """A fresh temp directory, removed at interpreter exit: the returned
+    frame reads it lazily, so it cannot go when the entry returns."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def _one_file_batches(dfs: list[DataFrame], src_dir: str) -> None:
@@ -86,7 +95,7 @@ def stream_span_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .span_dedup import read_deduped_docs, span_dedup_stream
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="stream_span_state_")
+    root = _work_dir("stream_span_state_")
     _one_file_batches(_id_ranges(docs, "doc_id", 3), f"{root}/src")
     _drain(
         spark, docs.schema, f"{root}/src",
@@ -110,7 +119,7 @@ def stream_quality_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang"
     )
-    root = tempfile.mkdtemp(prefix="stream_quality_state_")
+    root = _work_dir("stream_quality_state_")
     _one_file_batches(
         [docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i) for i in range(3)],
         f"{root}/src",
@@ -136,7 +145,7 @@ def stream_token_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .token_accounting import bpe_token_stream, read_stream_token_counts
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="stream_token_state_")
+    root = _work_dir("stream_token_state_")
     _one_file_batches(
         [docs.filter(F.pmod(F.col("doc_id"), F.lit(3)) == i) for i in range(3)],
         f"{root}/src",
@@ -180,7 +189,7 @@ def stream_upsert_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = source.unionByName(
         source.withColumn("o_orderkey", -F.col("o_orderkey"))
     )
-    root = tempfile.mkdtemp(prefix="stream_upsert_state_")
+    root = _work_dir("stream_upsert_state_")
     table = f"{root}/orders_table"
     write_table(
         spark, orders, table, ["o_orderkey"], "o_orderdate",

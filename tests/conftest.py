@@ -1,3 +1,5 @@
+import contextlib
+import functools
 import os
 import sys
 import uuid
@@ -75,4 +77,54 @@ def jobs_of(spark):
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         return list(sc.statusTracker().getJobIdsForGroup(group))
+    return run
+
+
+@pytest.fixture
+def mutations():
+    """``with mutations(stop_at=None) as steps:`` records the name of each
+    table mutation run in the block in ``steps``, in order: a dry run
+    gives a writer's mutations, so a sweep over them covers one added
+    later with no test edit. With ``stop_at=k`` the k-th mutation (from
+    0) and every later one raise ``RuntimeError("stopped at mutation
+    k")`` instead of running, which leaves the files as a process
+    stopped there would.
+
+    The mutations are ``fsops.delete``, ``rename``, ``write_text`` and
+    ``write_text_atomic`` and ``DataFrameWriter.parquet``. The deletes
+    ``index_store.invalidate`` makes reclaim derived artifacts, best
+    effort, and are not counted."""
+    from pyspark.sql import DataFrameWriter
+
+    from e_commerce_etl_pipeline_spark.operators import fsops, index_store
+
+    @contextlib.contextmanager
+    def run(stop_at=None):
+        steps, uncounted = [], []
+
+        def counted(name, fn):
+            @functools.wraps(fn)
+            def mutate(*args, **kwargs):
+                if not uncounted:
+                    if len(steps) == stop_at:
+                        raise RuntimeError(f"stopped at mutation {stop_at} ({name})")
+                    steps.append(name)
+                return fn(*args, **kwargs)
+            return mutate
+
+        invalidate = index_store.invalidate
+
+        def uncounted_invalidate(*args, **kwargs):
+            uncounted.append(True)
+            try:
+                return invalidate(*args, **kwargs)
+            finally:
+                uncounted.pop()
+
+        with pytest.MonkeyPatch.context() as mp:
+            for name in ("delete", "rename", "write_text", "write_text_atomic"):
+                mp.setattr(fsops, name, counted(name, getattr(fsops, name)))
+            mp.setattr(DataFrameWriter, "parquet", counted("parquet", DataFrameWriter.parquet))
+            mp.setattr(index_store, "invalidate", uncounted_invalidate)
+            yield steps
     return run

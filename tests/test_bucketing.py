@@ -83,19 +83,32 @@ def test_bucketed_groupby_no_exchange(spark, tmp_path):
 
 
 def _bucket_files(path):
-    """{bucket_dir_name: {file_name: (size, mtime)}} for a bucketed table."""
+    """{bucket_dir_name: {"__g=<gen>/<file_name>": (size, mtime)}} for a
+    bucketed table."""
     out = {}
     for d in os.listdir(path):
         if not d.startswith("__bucket="):
             continue
-        full = os.path.join(path, d)
-        out[d] = {
-            f: (os.path.getsize(os.path.join(full, f)),
-                os.path.getmtime(os.path.join(full, f)))
-            for f in os.listdir(full)
-            if f.endswith(".parquet")
-        }
+        out[d] = {}
+        for g in os.listdir(os.path.join(path, d)):
+            full = os.path.join(path, d, g)
+            out[d].update({
+                f"{g}/{f}": (os.path.getsize(os.path.join(full, f)),
+                             os.path.getmtime(os.path.join(full, f)))
+                for f in os.listdir(full)
+                if f.endswith(".parquet")
+            })
     return out
+
+
+def _generations(path):
+    """The ``__bucket=<n>/__g=<gen>`` directories on disk, and those
+    ``_table`` names."""
+    on_disk = {f"{d}/{g}" for d in os.listdir(path) if d.startswith("__bucket=")
+               for g in os.listdir(os.path.join(path, d))}
+    with open(os.path.join(path, "_table")) as f:
+        named = {f"__bucket={b}/__g={g}" for b, g in json.load(f)["base"].items()}
+    return on_disk, named
 
 
 _SCHEMA = "order_id string, item_id string, status string, update_time timestamp"
@@ -226,35 +239,46 @@ def test_compaction_folds_deltas_into_touched_buckets(spark, tmp_path, monkeypat
             assert len(files) == 1 and files != before.get(d), d
         else:
             assert files == before[d], f"untouched bucket {d} was rewritten"
-    assert not [c for c in os.listdir(path) if c.startswith((".compact", "_compaction"))]
+    on_disk, named = _generations(path)
+    assert on_disk == named
 
 
-def test_compact_buckets(spark, tmp_path):
-    """Small-file accretion comes from append-mode ingestion (K1) and
-    multi-task bulk loads — each append drops one more file into every
-    bucket it touches. (Upsert batches do NOT accrete in the buckets:
-    they append deltas, which compaction folds — proven above.)
-    Compaction rewrites only buckets over the file threshold, preserves
-    rows, leaves slim buckets' files untouched."""
+def _multi_task_load(spark, path, rows, num_buckets):
+    """A full load of ``rows`` whose keep-newest shuffle runs 3 write
+    tasks. The shuffle and the bucket both hash the key (Murmur3), so a
+    bucket spans several tasks, one file each, only when 3 does not
+    divide ``num_buckets``."""
+    conf = {"spark.sql.shuffle.partitions": "3",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        write_table(spark, spark.createDataFrame(rows, _SCHEMA), path, _KEYS, "update_time",
+                    num_buckets=num_buckets)
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_compact_buckets(spark, tmp_path, monkeypatch):
+    """Small-file accretion comes from multi-task bulk loads, where every
+    write task drops one more file into each bucket it has rows for.
+    (Upsert batches do NOT accrete in the buckets: they append deltas,
+    which compaction folds — proven above.) Compaction rewrites only
+    buckets over the file threshold, preserves rows, leaves slim
+    buckets' files untouched."""
     from e_commerce_etl_pipeline_spark.operators.upsert import compact_buckets
 
+    threshold = 1
+    monkeypatch.setattr(upsert_mod, "MAX_FILES_PER_BUCKET", threshold)
     path = str(tmp_path / "tbl")
-    base_ts = datetime.datetime(2024, 1, 1)
-    # a full load of zero rows records the table, then 6 append slices of
-    # 2 keys each — per-bucket file counts end up uneven (hash-dependent
-    # but deterministic for fixed keys)
-    write_table(spark, spark.createDataFrame([], _SCHEMA), path, _KEYS, "update_time",
-                num_buckets=8)
-    for j in range(6):
-        part = spark.createDataFrame(
-            [(f"o{2 * j}", "i1", "created", base_ts),
-             (f"o{2 * j + 1}", "i1", "created", base_ts)],
-            _SCHEMA,
-        ).withColumn("__bucket", _bucket_expr(_KEYS, 8))
-        part.coalesce(1).write.mode("append").partitionBy("__bucket").parquet(path)
+    rows = [(f"o{i}", "i1", "created", datetime.datetime(2024, 1, 1)) for i in range(12)]
+    # 8 buckets over 3 tasks: per-bucket file counts end up uneven
+    # (hash-dependent but deterministic for fixed keys)
+    _multi_task_load(spark, path, rows, 8)
 
     before = _bucket_files(path)
-    threshold = 1
     bloated = sorted(
         int(d.split("=", 1)[1]) for d in before if len(before[d]) > threshold
     )
@@ -265,7 +289,7 @@ def test_compact_buckets(spark, tmp_path):
     rows_before = sorted(
         (r.order_id, r.status) for r in read_upsert_table(spark, path).collect()
     )
-    assert compact_buckets(spark, path, max_files_per_bucket=threshold) == bloated
+    assert compact_buckets(spark, path) == bloated
 
     after = _bucket_files(path)
     for d in before:
@@ -278,7 +302,7 @@ def test_compact_buckets(spark, tmp_path):
     )
     assert rows_after == rows_before
     # idempotent: nothing left to compact
-    assert compact_buckets(spark, path, max_files_per_bucket=threshold) == []
+    assert compact_buckets(spark, path) == []
 
 
 def _content_hash(spark, path):
@@ -375,63 +399,59 @@ def test_read_declares_recorded_schema(spark, tmp_path):
     assert _jobs(spark, _in_group(spark, lambda: spark.read.parquet(path)))
 
 
-def test_compaction_crash_inside_swap_stays_readable_and_converges(
-        spark, tmp_path, monkeypatch):
-    """The compaction commit swaps each staged bucket in by a delete and a
-    rename. A process that stops between one bucket's delete and its
-    rename leaves the table readable, with the contents of the finished
-    compaction, and both a re-run of the compaction and a replay of the
-    batch that ran it converge to the uncrashed table."""
+def test_compacting_batch_stopped_at_every_mutation(spark, tmp_path, monkeypatch, mutations):
+    """The compacting batch, stopped at each of its table mutations (the
+    delta write, the generation write, the ``_table`` commit and each
+    delete), leaves a table that reads as exactly its pre-batch or
+    post-batch state, and replaying the batch converges to the uncrashed
+    table. A compaction, uncrashed or run after the replay, leaves no
+    delta and only the generations ``_table`` names."""
     import shutil
-
-    from e_commerce_etl_pipeline_spark.operators import fsops
 
     monkeypatch.setattr(upsert_mod, "COMPACT_AT", 3)
     schema = _SCHEMA + ", payload string"
     ts = datetime.datetime(2024, 1, 1)
-    rows = [(f"o{i}", "i1", "created", ts, "v0") for i in range(40)]
+    rows = [(f"o{i}", "i1", "created", ts, "v0") for i in range(16)]
     batches = [[(f"o{i}", "i1", "shipped", datetime.datetime(2024, 1, 2 + j), f"v{j}")
-                for i in range(j, 40, 5)] + [(f"n{j}", "i1", "new", ts, "v0")]
+                for i in range(j, 16, 5)] + [(f"n{j}", "i1", "new", ts, "v0")]
                for j in range(3)]
 
     def apply(path, batch):
         upsert(spark, spark.createDataFrame(batch, schema), path, _KEYS,
-               "update_time", ["status"], num_buckets=8)
+               "update_time", ["status"], num_buckets=2)
+
+    def compacted(path):
+        assert not _delta_files(path)
+        on_disk, named = _generations(path)
+        return on_disk == named
+
+    pre = str(tmp_path / "pre")
+    for b in [rows, *batches[:-1]]:
+        apply(pre, b)
+    pre_hash = _content_hash(spark, pre)
 
     clean = str(tmp_path / "clean")
-    for b in [rows, *batches]:
-        apply(clean, b)
-    clean_hash = _content_hash(spark, clean)
+    shutil.copytree(pre, clean)
+    with mutations() as steps:
+        apply(clean, batches[-1])
+    post_hash = _content_hash(spark, clean)
+    assert post_hash != pre_hash
+    assert compacted(clean)
+    assert steps.count("parquet") == 2 and steps.count("write_text_atomic") == 1, steps
+    assert steps.count("delete") >= 3, steps  # a generation and the folded deltas
 
-    path = str(tmp_path / "tbl")
-    for b in [rows, *batches[:-1]]:
-        apply(path, b)
-    rename, calls = fsops.rename, []
-
-    def rename_once(src, dst, spark_=None):
-        calls.append(dst)
-        if len(calls) == 2:
-            raise RuntimeError("stopped inside the swap")
-        rename(src, dst, spark_)
-
-    monkeypatch.setattr(fsops, "rename", rename_once)
-    with pytest.raises(RuntimeError, match="stopped inside the swap"):
-        apply(path, batches[-1])
-    monkeypatch.setattr(fsops, "rename", rename)
-    lost = os.path.basename(calls[1])
-    assert lost not in os.listdir(path), "the crash must fall between delete and rename"
-    assert "_compaction" in os.listdir(path)
-    assert _content_hash(spark, path) == clean_hash
-
-    rerun = str(tmp_path / "rerun")
-    shutil.copytree(path, rerun)
-    spark.catalog.refreshByPath(rerun)
-    upsert_mod.compact_buckets(spark, rerun)
-    apply(path, batches[-1])  # the replayed batch
-    for p in (rerun, path):
-        assert _content_hash(spark, p) == clean_hash
-        assert lost in os.listdir(p)
-        assert not {"_compaction", ".compact"} & set(os.listdir(p))
+    for k, step in enumerate(steps):
+        path = str(tmp_path / f"stopped-{k}")
+        shutil.copytree(pre, path)
+        with pytest.raises(RuntimeError, match="stopped at mutation"):
+            with mutations(stop_at=k):
+                apply(path, batches[-1])
+        assert _content_hash(spark, path) in (pre_hash, post_hash), (k, step)
+        apply(path, batches[-1])  # the replayed batch
+        assert _content_hash(spark, path) == post_hash, (k, step)
+        upsert_mod.compact_buckets(spark, path)
+        assert _content_hash(spark, path) == post_hash, (k, step)
+        assert compacted(path), (k, step)
 
 
 def _recorded_buckets(path):
@@ -551,17 +571,27 @@ def test_sized_table_lists_no_bucket_in_a_job(spark, tmp_path):
 
 
 def test_directory_without_table_record_raises(spark, tmp_path):
-    """A directory without ``_table`` was not written by ``write_table``:
-    reading or upserting it raises an error that names it, instead of
-    guessing its schema and bucket count."""
-    path = str(tmp_path / "tbl")
-    write_table(spark, spark.createDataFrame(_ROWS[:20], _SCHEMA), path, _KEYS,
-                "update_time", num_buckets=4)
-    os.remove(os.path.join(path, "_table"))
-    with pytest.raises(FileNotFoundError, match=re.escape(path)):
-        read_upsert_table(spark, path)
-    with pytest.raises(FileNotFoundError, match=re.escape(path)):
-        upsert(spark, spark.createDataFrame(_ROWS[:1], _SCHEMA), path, _KEYS, "update_time")
+    """A directory without ``_table`` was not written by ``write_table``,
+    and a ``_table`` that names no base generation was written in an
+    older layout: reading or upserting either raises an error that names
+    the table, instead of guessing its schema, bucket count or base."""
+    for name in ("no-record", "older-layout"):
+        path = str(tmp_path / name)
+        meta_path = os.path.join(path, "_table")
+        write_table(spark, spark.createDataFrame(_ROWS[:20], _SCHEMA), path, _KEYS,
+                    "update_time", num_buckets=4)
+        if name == "no-record":
+            os.remove(meta_path)
+        else:
+            with open(meta_path) as f:
+                meta = json.load(f)
+            del meta["base"], meta["upto"]
+            fsops.write_text_atomic(meta_path, json.dumps(meta), spark)  # keeps the .crc right
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            read_upsert_table(spark, path)
+        with pytest.raises(FileNotFoundError, match=re.escape(path)):
+            upsert(spark, spark.createDataFrame(_ROWS[:1], _SCHEMA), path, _KEYS,
+                   "update_time")
 
 
 def _sql_plans(spark, group):
@@ -662,32 +692,6 @@ def test_batches_with_many_rows_per_key_match_keep_newest_model(spark, tmp_path)
     upsert_mod.compact_buckets(spark, path)
     assert not _delta_files(path)
     assert table() == expected
-
-
-def test_merge_spec_without_tiebreak_appends_without_compaction(spark, tmp_path):
-    """A table whose ``_table`` merge spec was recorded before the spec
-    carried ``tiebreak`` reads it as no tiebreak: an upsert without one
-    appends a delta (no forced compaction, no spec rewrite) and the read
-    folds every delta."""
-    path = str(tmp_path / "tbl")
-    write_table(spark, spark.createDataFrame(_ROWS[:20], _SCHEMA), path, _KEYS,
-                "update_time", num_buckets=4)
-    upsert(spark, spark.createDataFrame([("o1", "i1", "shipped",
-                                          datetime.datetime(2024, 1, 2))], _SCHEMA),
-           path, _KEYS, "update_time", ["status"])
-    meta_path = os.path.join(path, "_table")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    del meta["merge"]["tiebreak"]
-    fsops.write_text_atomic(meta_path, json.dumps(meta), spark)  # keeps the .crc right
-    upsert(spark, spark.createDataFrame([("o2", "i1", "shipped",
-                                          datetime.datetime(2024, 1, 2))], _SCHEMA),
-           path, _KEYS, "update_time", ["status"])
-    assert sorted(_delta_files(path)) == [".s=1", ".s=2"]
-    with open(meta_path) as f:
-        assert json.load(f) == meta
-    got = {r.order_id: r.status for r in read_upsert_table(spark, path).collect()}
-    assert len(got) == 20 and got["o1"] == got["o2"] == "shipped"
 
 
 def test_delta_layout_coalesces_sized_and_rebalances_unsized_batches(

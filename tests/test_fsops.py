@@ -11,9 +11,11 @@ schemes without a session.
 from __future__ import annotations
 
 import datetime
+import importlib
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from e_commerce_etl_pipeline_spark.operators import fsops
 from e_commerce_etl_pipeline_spark.operators.retention import (
@@ -27,6 +29,8 @@ from e_commerce_etl_pipeline_spark.operators.upsert import (
     upsert,
     write_table,
 )
+
+upsert_mod = importlib.import_module("e_commerce_etl_pipeline_spark.operators.upsert")
 
 
 def _day(s):
@@ -77,24 +81,27 @@ def test_bucket_marker_and_upsert_through_file_uri(spark, tmp_path):
     assert got == {(1, "SHIPPED"), (2, "OPEN"), (3, "NEW")}
 
 
-def test_compaction_through_file_uri(spark, tmp_path):
+def test_compaction_through_file_uri(spark, tmp_path, monkeypatch):
     uri = f"file://{tmp_path}/t"
     base = spark.createDataFrame(
         [(i, i * 10) for i in range(50)], "k int, v int"
     )
     write_table(spark, base, uri, keys=["k"], order_col="v", num_buckets=2)
-    # append-mode accretion: extra files per bucket
-    for _ in range(5):
-        base.withColumn(
-            "__bucket",
-            (base.k % 2).cast("int"),
-        ).write.partitionBy("__bucket").mode("append").parquet(uri)
-    compacted = compact_buckets(spark, uri, max_files_per_bucket=3)
+    # append-mode accretion: extra files in each bucket's live generation
+    bucketed = base.withColumn("__bucket", F.expr("pmod(hash(k), 2)"))
+    for b in (0, 1):
+        for _ in range(5):
+            (bucketed.filter(F.col("__bucket") == b).drop("__bucket").coalesce(1)
+             .write.mode("append").parquet(f"{uri}/__bucket={b}/__g=0"))
+    monkeypatch.setattr(upsert_mod, "MAX_FILES_PER_BUCKET", 3)
+    compacted = compact_buckets(spark, uri)
     assert sorted(compacted) == [0, 1]
     for b in (0, 1):
+        assert not fsops.exists(f"{uri}/__bucket={b}/__g=0", spark)
         assert fsops.count_files_with_suffix(
-            f"{uri}/__bucket={b}", ".parquet", spark
-        ) <= 2
+            f"{uri}/__bucket={b}/__g=1", ".parquet", spark
+        ) == 1
+    assert read_upsert_table(spark, uri).count() == 6 * 50
 
 
 def test_remote_scheme_without_session_fails_loudly():

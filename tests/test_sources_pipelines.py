@@ -234,7 +234,7 @@ def test_full_load_readback_error_fails_the_run(spark, tmp_path, monkeypatch):
 
     def write_then_corrupt(spark_, df, table_path, *args, **kwargs):
         write_table(spark_, df, table_path, *args, **kwargs)
-        victim = sorted(glob.glob(f"{table_path}/__bucket=*/*.parquet"))[0]
+        victim = sorted(glob.glob(f"{table_path}/__bucket=*/__g=*/*.parquet"))[0]
         with open(victim, "wb") as f:
             f.write(b"not parquet")
 

@@ -160,3 +160,40 @@ def test_stream_batch_scans_source_once(spark, tmp_path):
            "update_time", ["status"])
     assert sorted(read_upsert_table(spark, table).collect()) == sorted(
         read_upsert_table(spark, oneshot).collect())
+
+
+def test_drained_stream_entry_removes_its_work_dir_at_exit(spark, sf_dir, tmp_path, monkeypatch):
+    """A drained-stream registry entry returns a frame that reads its work
+    directory lazily: the directory stays while the process runs, and
+    its removal is registered for interpreter exit, so repeated runs
+    leave no directory behind."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
+    from e_commerce_etl_pipeline_spark.streaming.state_queries import stream_upsert_state
+
+    made, at_exit = [], []
+    mkdtemp, register = tempfile.mkdtemp, atexit.register
+
+    def mkdtemp_in_tmp_path(suffix=None, prefix=None, dir=None):
+        if not (prefix or "").startswith("stream_upsert_state_"):
+            return mkdtemp(suffix, prefix, dir)
+        made.append(mkdtemp(suffix, prefix, tmp_path))
+        return made[-1]
+
+    def register_rmtree(fn, *args, **kwargs):
+        # other exit hooks registered meanwhile go to the real atexit
+        if fn is not shutil.rmtree:
+            return register(fn, *args, **kwargs)
+        at_exit.append((args, kwargs))
+        return fn
+
+    monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp_in_tmp_path)
+    monkeypatch.setattr(atexit, "register", register_rmtree)
+    assert stream_upsert_state(spark, sf_dir).count() > 0
+    assert made and all(os.path.isdir(d) for d in made)
+    for args, kwargs in at_exit:
+        shutil.rmtree(*args, **kwargs)
+    assert not [d for d in made if os.path.exists(d)]
